@@ -34,8 +34,10 @@ from ..frontend.tokenizer import (
     WS,
     match_forward,
     render,
+    split_args,
     tokenize,
 )
+from ..session import parse_set_list
 
 _MARKER = "__merge_marker__"
 
@@ -73,7 +75,7 @@ class _Clause:
         self.insert_vals: Optional[list[str]] = None  # None => INSERT *
 
 
-def _parse_clause(text: str) -> _Clause:
+def _parse_clause(text: str, tcols: list[str]) -> _Clause:
     cl = _Clause()
     m = re.match(
         r"\s*(NOT\s+)?MATCHED(\s+BY\s+(SOURCE|TARGET))?\s*(?:AND\s+(.*?))?"
@@ -103,7 +105,7 @@ def _parse_clause(text: str) -> _Clause:
         if body == "*":
             cl.set_map = None
         else:
-            cl.set_map = _parse_set_list(body)
+            cl.set_map = parse_set_list(body, tcols)
     elif au.startswith("DELETE"):
         cl.action = "delete"
     elif au.startswith("DO") and "NOTHING" in au:
@@ -130,8 +132,10 @@ def _parse_clause(text: str) -> _Clause:
             if k < len(sig) and toks[sig[k]].is_kw("VALUES"):
                 vstart = sig[k + 1]
                 c = match_forward(toks, vstart, "(", ")")
-                body = render(toks[vstart + 1 : c])
-                cl.insert_vals = _split_top_level(body)
+                cl.insert_vals = [
+                    render(toks[lo:hi]).strip()
+                    for lo, hi in split_args(toks, vstart + 1, c)
+                ]
             elif cl.insert_cols is None:
                 raise ValueError(
                     f"unsupported MERGE INSERT action: {action[:80]}"
@@ -142,34 +146,6 @@ def _parse_clause(text: str) -> _Clause:
     else:
         raise ValueError(f"unsupported MERGE action: {action[:80]}")
     return cl
-
-
-def _split_top_level(body: str) -> list[str]:
-    toks = tokenize(body)
-    out, cur, depth = [], [], 0
-    for t in toks:
-        if t.text in "([{":
-            depth += 1
-        elif t.text in ")]}":
-            depth -= 1
-        if t.text == "," and depth == 0 and t.kind != "string":
-            out.append(render(cur).strip())
-            cur = []
-        else:
-            cur.append(t)
-    if cur:
-        out.append(render(cur).strip())
-    return out
-
-
-def _parse_set_list(body: str) -> dict[str, str]:
-    out: dict[str, str] = {}
-    for part in _split_top_level(body):
-        m = re.match(r'\s*("?[\w ]+"?|`[^`]+`)\s*=\s*(.*)$', part, re.DOTALL)
-        if not m:
-            raise ValueError(f"unsupported SET item: {part[:60]}")
-        out[m.group(1).strip().strip('"`')] = m.group(2).strip()
-    return out
 
 
 def run_merge(session, sql: str) -> DataFrame:
@@ -237,10 +213,11 @@ def run_merge(session, sql: str) -> DataFrame:
     src_df = src_df.withColumn(_MARKER, F.lit(1))
     src_view = session._fresh_view(src_df)
 
+    tcols = [f.name for f in target.schema.fields]
     clauses = []
     for idx, wp in enumerate(when_p):
         end = when_p[idx + 1] if idx + 1 < len(when_p) else len(sig)
-        clauses.append(_parse_clause(span(wp + 1, end)))
+        clauses.append(_parse_clause(span(wp + 1, end), tcols))
 
     matched_expr = f"{s_a}.{_MARKER} IS NOT NULL"
 
@@ -255,7 +232,6 @@ def run_merge(session, sql: str) -> DataFrame:
         (i, cl) for i, cl in enumerate(clauses)
         if cl.matched or cl.by_source
     ]
-    tcols = [f.name for f in target.schema.fields]
     scols = [f.name for f in src_df.schema.fields if f.name != _MARKER]
 
     def first_match(i: int) -> str:
@@ -267,7 +243,8 @@ def run_merge(session, sql: str) -> DataFrame:
         return me
 
     proj = []
-    for c in tcols:
+    for f in target.schema.fields:
+        c = f.name
         cases = []
         for i, (_orig, cl) in enumerate(tgt_clauses):
             if cl.action != "update":
@@ -280,8 +257,10 @@ def run_merge(session, sql: str) -> DataFrame:
                     continue
             cases.append(f"WHEN {first_match(i)} THEN ({expr})")
         if cases:
+            # cast like UPDATE: the column keeps its declared type
             proj.append(
-                "CASE " + " ".join(cases) + f" ELSE {t_a}.{c} END AS {c}"
+                "CAST(CASE " + " ".join(cases) + f" ELSE {t_a}.{c} END "
+                f"AS {f.dataType.simpleString()}) AS {c}"
             )
         else:
             proj.append(f"{t_a}.{c} AS {c}")

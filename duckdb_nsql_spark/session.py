@@ -89,6 +89,9 @@ RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # 64MB advisory post-shuffle partitions at scale; minPartitionSize
+    # stays at Spark's 1MB default so parallelismFirst keeps small
+    # shuffles wide locally (16MB collapsed sub-16MB reduces to 1 task)
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB",
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1MB",
     # 8MB keeps every dimension table on the build side while the fact
@@ -133,6 +136,12 @@ RUNTIME_CONFS = {
     # (default 0 = never). 128MB/partition is executor-memory-safe and
     # decided from actual shuffle bytes, not estimates.
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "128MB",
+    # A Union whose children are hash-partitioned alike claims that
+    # partitioning, but on DML-built tables (kept rows UNION new rows,
+    # each side a shuffled join) the claim is wrong and a later join over
+    # the union fails with "Can't zip RDDs with unequal numbers of
+    # partitions: List(8, 16)" (harness/fuzz_dml.py seed 4, sequence 8).
+    "spark.sql.unionOutputPartitioning": "false",
 }
 
 
@@ -543,6 +552,16 @@ def _local_scratch_dir() -> str:
     return tempfile.gettempdir()
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, in whole GiB (at least 1): a local-mode JVM
+    sized past the box gets OOM-killed instead of collecting garbage."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):  # no sysconf names here
+        return "4g"
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def build_spark(
     app_name: str = "duckdb-nsql-spark",
     cpus: Optional[int] = None,
@@ -562,28 +581,13 @@ def build_spark(
         .config("spark.local.dir", _local_scratch_dir())
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # 64MB advisory post-shuffle partitions at scale; minPartitionSize
-        # stays at Spark's 1MB default so parallelismFirst keeps small
-        # shuffles wide locally (16MB collapsed sub-16MB reduces to 1 task)
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
-        # see RUNTIME_CONFS: dims broadcast, facts never do
-        .config("spark.sql.autoBroadcastJoinThreshold", "8MB")
-        # see RUNTIME_CONFS: undo parquet-compression underestimates
-        .config("spark.sql.sources.fileCompressionFactor", "4.0")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.ansi.enabled", "false")
-        # parquet TIMESTAMP(NANOS) (e.g. the events fixture) is read as long
-        # and cast back to timestamp in io_utils.read_parquet_table
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -5129,17 +5133,10 @@ class DuckSparkSession:
     def _split_returning(self, sql: str) -> tuple[str, Optional[str]]:
         """Strip a trailing depth-0 ``RETURNING <exprs>`` clause (DuckDB
         DML statements report the affected rows through it)."""
-        tokens = tokenize(sql)
-        depth = 0
-        for i, t in enumerate(tokens):
-            if t.kind == PUNCT and t.text in "([{":
-                depth += 1
-            elif t.kind == PUNCT and t.text in ")]}":
-                depth -= 1
-            elif depth == 0 and t.kind == IDENT and t.upper == "RETURNING":
-                clause = render(tokens[i + 1 :]).strip().rstrip(";").strip()
-                return render(tokens[:i]), clause or "*"
-        return sql, None
+        cl = _dml_clauses(sql, ("RETURNING",))
+        if "RETURNING" not in cl:
+            return sql, None
+        return cl[""], cl["RETURNING"] or "*"
 
     def _returning_result(
         self, rows: DataFrame, clause: str, alias: Optional[str] = None
@@ -5174,20 +5171,8 @@ class DuckSparkSession:
         )
         if m.group(3).upper() == "NOTHING":
             return "ignore", cols, None, None
-        body = m.group(4).strip()
-        where = None
-        toks = tokenize(body)
-        depth = 0
-        for i, t in enumerate(toks):
-            if t.kind == PUNCT and t.text in "([{":
-                depth += 1
-            elif t.kind == PUNCT and t.text in ")]}":
-                depth -= 1
-            elif depth == 0 and t.kind == IDENT and t.upper == "WHERE":
-                where = render(toks[i + 1 :]).strip()
-                body = render(toks[:i]).strip()
-                break
-        return "update", cols, body, where
+        cl = _dml_clauses(m.group(4), ("WHERE",))
+        return "update", cols, cl[""], cl.get("WHERE")
 
     def _apply_conflict_insert(
         self,
@@ -5236,26 +5221,24 @@ class DuckSparkSession:
         exc_view = self._fresh_view(exc)
         tgt_view = self._view_name(key)
         tcols = [f.name for f in target.schema.fields]
-        set_map = self._parse_conflict_set(set_sql, tcols)
+        table = key.rpartition(".")[2]
+        set_map = {
+            c: _qualify_conflict_refs(e, tcols, table)
+            for c, e in parse_set_list(set_sql, tcols).items()
+        }
         on = " AND ".join(f"__tgt.{k} <=> excluded.{k}" for k in keys)
         upd_cond = f"excluded.{marker} IS NOT NULL"
         if where_sql:
-            # conditional upsert: qualify target refs the same way the
-            # SET expressions are (unqualified / tablename. -> __tgt.)
-            cond = self._parse_conflict_set(
-                f"__c = ({where_sql})", tcols + ["__c"]
-            )["__c"]
-            cond = re.sub(
-                rf"(?i)\b{re.escape(key.rpartition('.')[2])}\s*\.",
-                "__tgt.", cond,
-            )
-            upd_cond += f" AND {cond}"
+            # conditional upsert: target refs qualify like SET's
+            upd_cond += f" AND ({_qualify_conflict_refs(where_sql, tcols, table)})"
         proj = []
-        for c in tcols:
+        for f in target.schema.fields:
+            c = f.name
             if c in set_map:
+                # cast like UPDATE: the column keeps its declared type
                 proj.append(
-                    f"CASE WHEN {upd_cond} "
-                    f"THEN ({set_map[c]}) ELSE __tgt.{c} END AS {c}"
+                    f"CAST(CASE WHEN {upd_cond} THEN ({set_map[c]}) ELSE "
+                    f"__tgt.{c} END AS {f.dataType.simpleString()}) AS {c}"
                 )
             else:
                 proj.append(f"__tgt.{c} AS {c}")
@@ -5271,36 +5254,6 @@ class DuckSparkSession:
             key, kept.unionByName(fresh, allowMissingColumns=False)
         )
         return self._count_df(-1)
-
-    def _parse_conflict_set(
-        self, set_sql: str, target_cols: list[str]
-    ) -> dict[str, str]:
-        """Parse ``a = expr, b = expr`` qualifying unqualified target-column
-        references with the ``__tgt`` alias (excluded.* stays as written)."""
-        from .operators.merge import _parse_set_list
-
-        raw = _parse_set_list(set_sql)
-        lowered = {c.lower(): c for c in target_cols}
-        out: dict[str, str] = {}
-        for col, expr in raw.items():
-            toks = tokenize(expr)
-            pieces: list[str] = []
-            for i, t in enumerate(toks):
-                if (
-                    t.kind == IDENT
-                    and t.text.lower() in lowered
-                    and t.text.lower() != "excluded"
-                ):
-                    p = prev_sig(toks, i)
-                    n = next_sig(toks, i)
-                    prev_dot = p >= 0 and toks[p].text == "."
-                    next_call = n < len(toks) and toks[n].text == "("
-                    if not prev_dot and not next_call:
-                        pieces.append(f"__tgt.{t.text}")
-                        continue
-                pieces.append(t.text)
-            out[lowered.get(col.lower(), col)] = "".join(pieces)
-        return out
 
     def _replace_default_keywords(
         self,
@@ -5446,7 +5399,6 @@ class DuckSparkSession:
         enforce_width: bool = True,
     ) -> DataFrame:
         tfields = target.schema.fields
-        src_types = {c: f.dataType for c, f in zip(src.columns, src.schema.fields)}
         if cols is not None:
             # DuckDB binder checks, in its order: unknown column, dup
             # column, then column-list/value width (fuzz_dml seed 31
@@ -5470,6 +5422,11 @@ class DuckSparkSession:
                     f"on {table_name}: expected {len(cols)} columns but "
                     f"{len(src.columns)} values were supplied"
                 )
+        # source columns align by POSITION: a generated name such as
+        # ``round(sum(x), 2)`` (or a repeated one) does not resolve back
+        # through F.col
+        src = src.toDF(*[f"__src{i}" for i in range(len(src.columns))])
+        src_types = {f.name: f.dataType for f in src.schema.fields}
 
         def coerce(src_col: str, tgt: T.StructField):
             col = F.col(src_col)
@@ -5511,7 +5468,7 @@ class DuckSparkSession:
             return src.select(
                 *[coerce(s, f) for s, f in zip(src.columns, tfields)]
             )
-        by_name = {c.lower(): s for c, s in zip([c.lower() for c in cols], src.columns)}
+        by_name = dict(zip([c.lower() for c in cols], src.columns))
         exprs = []
         for f in tfields:
             if f.name.lower() in by_name:
@@ -5697,6 +5654,17 @@ class DuckSparkSession:
                         f"foreign key in a different table"
                     )
 
+    def _fk_referenced_cols(self, key: str) -> set:
+        """Lower-cased columns of ``key`` that some table's FOREIGN KEY
+        references (empty: deleting or rewriting rows needs no check)."""
+        return {
+            c.lower()
+            for fks in self._foreign_keys.values()
+            for _lc, pt, pcols in fks
+            if self._resolve_table_key(pt) == key
+            for c in pcols
+        }
+
     def _enforce_fk_update(
         self, key: str, old: DataFrame, new: DataFrame
     ) -> None:
@@ -5704,13 +5672,7 @@ class DuckSparkSession:
         disappears from the parent while still referenced by a child is
         a violation (same rule as delete). Zero work unless some table
         declares an FK onto this one."""
-        referenced: set = set()
-        for _child, fks in self._foreign_keys.items():
-            for _lc, pt, pcols in fks:
-                if self._resolve_table_key(pt) == key:
-                    referenced.update(c.lower() for c in pcols)
-        if not referenced:
-            return
+        referenced = self._fk_referenced_cols(key)
         cols = [c for c in old.columns if c.lower() in referenced]
         if not cols:
             return
@@ -5756,180 +5718,63 @@ class DuckSparkSession:
                 f"Conversion Error: value not a member of ENUM ({allowed})"
             )
 
-    def _update(self, sql: str) -> DataFrame:
-        sql, returning = self._split_returning(sql)
-        parts = _split_update_from(sql)
-        if parts is not None:
-            return self._update_from(*parts, returning)
-        m = re.match(
-            r"\s*UPDATE\s+([\w.\"`]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?\s*;?\s*$",
-            sql,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"unsupported UPDATE: {sql[:80]}")
-        name = m.group(1).strip('"`')
+    def _dml_target(self, name: str) -> tuple[str, DataFrame]:
         key = self._resolve_table_key(name)
-        df = self.table(name)
-        if re.search(
-            r"\(\s*SELECT\b", m.group(2) + " " + (m.group(3) or ""),
-            re.IGNORECASE,
-        ):
-            # subquery in SET or WHERE: resolve table names through the
-            # full engine query path (F.expr can't see the session catalog)
-            return self._update_via_sql(
-                name, key, df, m.group(2), m.group(3), returning
-            )
-        assignments: dict[str, str] = {}
-        for frag in _split_top_commas(m.group(2)):
-            col, _, expr = frag.partition("=")
-            col = col.strip()
-            expr = expr.strip()
-            tm = re.fullmatch(r"\((.*)\)", col, re.DOTALL)
-            if tm is not None:
-                # tuple assignment SET (a, b) = (e1, e2) — expand to
-                # per-column assignments (round-12 probe find: the
-                # unexpanded '(a, b)' key matched no column and the
-                # UPDATE silently no-opped)
-                cols_t = [
-                    c.strip().strip('"`').lower()
-                    for c in _split_top_commas(tm.group(1))
-                ]
-                em = re.fullmatch(r"\((.*)\)", expr, re.DOTALL)
-                exprs_t = (
-                    _split_top_commas(em.group(1)) if em is not None
-                    else None
-                )
-                if exprs_t is None or len(exprs_t) != len(cols_t):
-                    raise NotImplementedError(
-                        "UPDATE SET tuple assignment needs a matching"
-                        f" parenthesized value list: {frag[:60]}"
-                    )
-                for ct, et in zip(cols_t, exprs_t):
-                    assignments[ct] = rewrites.rewrite_sql(
-                        et.strip(), self._resolver
-                    )
-                continue
-            assignments[col.strip('"`').lower()] = rewrites.rewrite_sql(
-                expr, self._resolver
-            )
-        pred = (
-            rewrites.rewrite_sql(m.group(3).strip(), self._resolver)
-            if m.group(3)
-            else None
-        )
-        unknown = set(assignments) - {
-            f.name.lower() for f in df.schema.fields
-        }
-        if unknown:
-            # DuckDB's binder error; a silently-dropped assignment is a
-            # silent no-op UPDATE (round-12 tuple-assignment find)
-            raise KeyError(
-                "Binder Error: Referenced update column "
-                f"{sorted(unknown)[0].split('.')[0]} not found in table!"
-            )
-        exprs = []
-        for f in df.schema.fields:
-            if f.name.lower() in assignments:
-                e = assignments[f.name.lower()]
-                if pred:
-                    e = f"CASE WHEN ({pred}) THEN ({e}) ELSE `{f.name}` END"
-                exprs.append(
-                    F.expr(e).cast(f.dataType).alias(f.name)
-                )
-            else:
-                exprs.append(F.col(f.name))
-        new = df.select(*exprs)
-        assigned = set(assignments)
-        if self._keys_assigned(key, assigned):
-            if pred:
-                flag = "__upd_flag__"
-                touched = (
-                    df.withColumn(flag, F.expr(f"coalesce(({pred}), false)"))
-                    .select(*exprs, F.col(flag))
-                    .filter(F.col(flag))
-                    .drop(flag)
-                )
-            else:
-                touched = new
-            self._enforce_unique_update(key, df, touched, assigned)
-        self._enforce_constraints(key, new, whole=new, skip_unique=True)
-        self._enforce_fk_update(key, df, new)
-        self._register_managed(key, new)
-        if returning is not None:
-            # DuckDB UPDATE..RETURNING reports the POST-update values of
-            # the rows the (pre-update) predicate selected — so the flag
-            # must be computed on the OLD row alongside the new values
-            if pred:
-                flag = "__upd_flag__"
-                touched = (
-                    df.withColumn(flag, F.expr(f"coalesce(({pred}), false)"))
-                    .select(*exprs, F.col(flag))
-                    .filter(F.col(flag))
-                    .drop(flag)
-                )
-            else:
-                touched = new
-            return self._returning_result(
-                touched, returning, name.split(".")[-1]
-            )
-        return self._count_df(-1)
+        if key is None:
+            raise KeyError(f"Catalog Error: Table with name {name} does not exist!")
+        return key, self._tables[key]
 
-    def _update_via_sql(
-        self,
-        name: str,
-        key: str,
-        df: DataFrame,
-        set_text: str,
-        where_text: Optional[str],
-        returning: Optional[str],
-    ) -> DataFrame:
-        """Plain UPDATE whose assignments contain scalar subqueries:
-        build one SELECT over a view of the table so subquery table
-        names resolve through the session catalog."""
-        view = self._fresh_view(df)
-        alias = name.split(".")[-1]
-        assigns = {
-            c.strip().strip('"`').lower(): e.strip()
-            for c, _, e in (
-                frag.partition("=") for frag in _split_top_commas(set_text)
-            )
-        }
-        parts = []
+    def _update(self, sql: str) -> DataFrame:
+        """``UPDATE t SET ... [FROM ...] [WHERE ...]``. The new table
+        image is ONE SELECT over the target's view — each assigned column
+        becomes ``CASE WHEN <where> THEN (<expr>) ELSE col END`` cast to
+        the column type — so subqueries in SET or WHERE resolve through
+        the session catalog like any query. UPDATE..FROM takes the rowid
+        join in _update_from."""
+        sql, returning = self._split_returning(sql)
+        cl = _dml_clauses(sql, ("SET", "FROM", "WHERE"))
+        if "SET" not in cl:
+            raise ValueError(f"unsupported UPDATE: {sql[:80]}")
+        name = re.sub(r"(?is)^\s*UPDATE\s+", "", cl[""]).strip().strip('"`')
+        where = cl.get("WHERE")
+        if "FROM" in cl:
+            return self._update_from(name, cl["SET"], cl["FROM"], where, returning)
+        key, df = self._dml_target(name)
+        assigns = parse_set_list(cl["SET"], df.columns)
+        items = []
         for f in df.schema.fields:
-            if f.name.lower() in assigns:
-                e = assigns[f.name.lower()]
-                if where_text:
-                    e = (
-                        f"CASE WHEN ({where_text}) THEN ({e}) "
-                        f"ELSE \"{f.name}\" END"
-                    )
-                parts.append(
-                    f"CAST(({e}) AS {f.dataType.simpleString()}) "
-                    f"AS \"{f.name}\""
-                )
-            else:
-                parts.append(f'"{f.name}"')
-        new = self._query(
-            f"SELECT {', '.join(parts)} FROM {view} AS \"{alias}\""
+            e = assigns.get(f.name)
+            if e is None:
+                items.append(f'"{f.name}"')
+                continue
+            if where:
+                e = f'CASE WHEN ({where}) THEN ({e}) ELSE "{f.name}" END'
+            items.append(
+                f'CAST(({e}) AS {f.dataType.simpleString()}) AS "{f.name}"'
+            )
+        alias = name.split(".")[-1]
+        select = (
+            f"SELECT {', '.join(items)} FROM {self._view_name(key)} "
+            f'AS "{alias}"'
         )
-        assigned = set(assigns)
-        if self._keys_assigned(key, assigned):
-            flt = (
-                f" WHERE coalesce(({where_text}), false)" if where_text else ""
+        new = self._query(select)
+        assigned = {c.lower() for c in assigns}
+        keys_assigned = self._keys_assigned(key, assigned)
+        touched = None
+        if keys_assigned or returning is not None:
+            # the POST-update values of the rows the PRE-update predicate
+            # selected (DuckDB's UPDATE..RETURNING rows)
+            touched = (
+                self._query(f"{select} WHERE coalesce(({where}), false)")
+                if where
+                else new
             )
-            touched = self._query(
-                f"SELECT {', '.join(parts)} FROM {view} AS \"{alias}\"{flt}"
-            )
+        if keys_assigned:
             self._enforce_unique_update(key, df, touched, assigned)
         self._enforce_constraints(key, new, whole=new, skip_unique=True)
         self._enforce_fk_update(key, df, new)
         self._register_managed(key, new)
         if returning is not None:
-            flt = f" WHERE coalesce(({where_text}), false)" if where_text else ""
-            touched = self._query(
-                f"SELECT {', '.join(parts)} FROM {view} AS \"{alias}\"{flt}"
-            )
             return self._returning_result(touched, returning, alias)
         return self._count_df(-1)
 
@@ -5950,10 +5795,8 @@ class DuckSparkSession:
         Plan shape: rowid-tagged target JOIN from-list -> first match per
         rowid -> LEFT join back -> per-column CASE. Two shuffles on the
         synthetic rowid; the from-list side broadcasts when small."""
-        key = self._resolve_table_key(name)
-        if key is None:
-            raise KeyError(f"Catalog Error: Table with name {name} does not exist!")
-        df = self.table(name)
+        key, df = self._dml_target(name)
+        assigns = parse_set_list(set_text, df.columns)
         # the rowid tag MUST be pinned: the lazy plan is scanned twice
         # (directly and through the match view) and again by later
         # statements — re-evaluated monotonically_increasing_id can
@@ -5965,14 +5808,10 @@ class DuckSparkSession:
         ).localCheckpoint(eager=True)
         view = self._fresh_view(tagged)
         alias = name.split(".")[-1]
-        assigns = [
-            (c.strip().strip('"`').lower(), e.strip())
-            for c, _, e in (
-                frag.partition("=") for frag in _split_top_commas(set_text)
-            )
-        ]
+        types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         sel = [f'"{alias}".__rid AS __rid'] + [
-            f"({e}) AS \"__new_{c}\"" for c, e in assigns
+            f'CAST(({e}) AS {types[c]}) AS "__new_{c}"'
+            for c, e in assigns.items()
         ]
         match_sql = (
             f"SELECT {', '.join(sel)} FROM {view} AS \"{alias}\", {from_text}"
@@ -5982,98 +5821,73 @@ class DuckSparkSession:
         joined = tagged.join(
             matches.withColumn("__matched", F.lit(True)), "__rid", "left"
         )
-        exprs = []
-        assigned = {c for c, _ in assigns}
-        for f in df.schema.fields:
-            if f.name.lower() in assigned:
-                exprs.append(
-                    F.when(
-                        F.col("__matched").isNotNull(),
-                        F.col(f"__new_{f.name.lower()}"),
-                    )
-                    .otherwise(F.col(f.name))
-                    .cast(f.dataType)
-                    .alias(f.name)
-                )
-            else:
-                exprs.append(F.col(f.name))
+        exprs = [
+            F.when(F.col("__matched").isNotNull(), F.col(f"__new_{f.name}"))
+            .otherwise(F.col(f.name))
+            .alias(f.name)
+            if f.name in assigns
+            else F.col(f.name)
+            for f in df.schema.fields
+        ]
         new = joined.select(*exprs)
-        if self._keys_assigned(key, assigned):
-            touched = joined.filter(
-                F.col("__matched").isNotNull()
-            ).select(*exprs)
+        assigned = {c.lower() for c in assigns}
+        keys_assigned = self._keys_assigned(key, assigned)
+        touched = None
+        if keys_assigned or returning is not None:
+            touched = joined.filter(F.col("__matched").isNotNull()).select(*exprs)
+        if keys_assigned:
             self._enforce_unique_update(key, df, touched, assigned)
         self._enforce_constraints(key, new, whole=new, skip_unique=True)
         self._enforce_fk_update(key, df, new)
         self._register_managed(key, new)
         if returning is not None:
-            touched = joined.filter(F.col("__matched").isNotNull()).select(*exprs)
-            return self._returning_result(
-                touched, returning, name.split(".")[-1]
-            )
+            return self._returning_result(touched, returning, alias)
         return self._count_df(-1)
 
     def _delete(self, sql: str) -> DataFrame:
+        """``DELETE FROM t [USING ...] [WHERE ...]``. The kept rows are ONE
+        SELECT over the target's view, so subqueries in WHERE resolve
+        through the session catalog; DELETE..USING anti-joins on a pinned
+        rowid instead. The deleted rows are built only when RETURNING or
+        a referencing FOREIGN KEY needs them."""
         sql, returning = self._split_returning(sql)
-        mu = re.match(
-            r"\s*DELETE\s+FROM\s+([\w.\"`]+)\s+USING\s+(.*?)"
-            r"(?:\s+WHERE\s+(.*))?\s*;?\s*$",
-            sql,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if mu:
-            # DELETE .. USING: drop target rows with ANY match in the
-            # using-list under the predicate (anti-join on a synthetic
-            # rowid — never multiplies the kept rows)
-            name = mu.group(1).strip('"`')
-            key = self._resolve_table_key(name)
-            if key is None:
-                raise KeyError(
-                    f"Catalog Error: Table with name {name} does not exist!"
-                )
-            df = self.table(name)
-            # pinned rowids: see _update_from — double-scanned lazy
-            # mono-ids can renumber and break the anti-join
+        cl = _dml_clauses(sql, ("FROM", "USING", "WHERE"))
+        if "FROM" not in cl:
+            raise ValueError(f"unsupported DELETE: {sql[:80]}")
+        name = cl["FROM"].strip('"`')
+        key, df = self._dml_target(name)
+        alias = name.split(".")[-1]
+        where = cl.get("WHERE")
+        want_gone = returning is not None or bool(self._fk_referenced_cols(key))
+        gone = None
+        if "USING" in cl:
+            # drop target rows with ANY match in the using-list under the
+            # predicate (anti-join on a synthetic rowid — never multiplies
+            # the kept rows); pinned rowids: see _update_from
             tagged = df.withColumn(
                 "__rid", F.monotonically_increasing_id()
             ).localCheckpoint(eager=True)
             view = self._fresh_view(tagged)
-            alias = name.split(".")[-1]
-            match_sql = (
+            rids = self._query(
                 f"SELECT DISTINCT \"{alias}\".__rid AS __rid "
-                f"FROM {view} AS \"{alias}\", {mu.group(2)}"
-                + (f" WHERE {mu.group(3)}" if mu.group(3) else "")
+                f"FROM {view} AS \"{alias}\", {cl['USING']}"
+                + (f" WHERE {where}" if where else "")
             )
-            rids = self._query(match_sql)
             new = tagged.join(rids, "__rid", "left_anti").drop("__rid")
-            deleted = tagged.join(rids, "__rid", "left_semi").drop("__rid")
-            self._enforce_fk_delete(key, deleted)
-            self._register_managed(key, new)
-            if returning is not None:
-                return self._returning_result(deleted, returning, alias)
-            return self._count_df(-1)
-        m = re.match(
-            r"\s*DELETE\s+FROM\s+([\w.\"`]+)(?:\s+WHERE\s+(.*))?\s*;?\s*$",
-            sql,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"unsupported DELETE: {sql[:80]}")
-        key = self._resolve_table_key(m.group(1).strip('"`'))
-        df = self.table(m.group(1).strip('"`'))
-        if m.group(2):
-            pred = rewrites.rewrite_sql(m.group(2).strip(), self._resolver)
-            new = df.filter(f"NOT coalesce(({pred}), false)")
-            deleted = df.filter(f"coalesce(({pred}), false)")
+            if want_gone:
+                gone = tagged.join(rids, "__rid", "left_semi").drop("__rid")
+        elif where:
+            select = f'SELECT * FROM {self._view_name(key)} AS "{alias}" WHERE '
+            new = self._query(f"{select}NOT coalesce(({where}), false)")
+            if want_gone:
+                gone = self._query(f"{select}coalesce(({where}), false)")
         else:
-            new = df.limit(0)
-            deleted = df
-        self._enforce_fk_delete(key, deleted)
+            new, gone = df.limit(0), df
+        if gone is not None:
+            self._enforce_fk_delete(key, gone)
         self._register_managed(key, new)
         if returning is not None:
-            return self._returning_result(
-                deleted, returning, m.group(1).strip('"`').split(".")[-1]
-            )
+            return self._returning_result(gone, returning, alias)
         return self._count_df(-1)
 
     def _prepare(self, sql: str) -> None:
@@ -7347,40 +7161,117 @@ def _format_memory(v: str) -> str:
     return f"{nbytes:.0f} bytes"
 
 
-def _split_update_from(sql: str):
-    """Split ``UPDATE t SET ... FROM ... [WHERE ...]`` on DEPTH-0
-    keywords (a FROM inside a scalar-subquery assignment is not a join
-    clause). Returns (name, set_text, from_text, where_text) or None
-    when there is no top-level FROM."""
-    tokens = tokenize(sql)
-    depth = 0
-    set_i = from_i = where_i = None
+def _dml_clauses(sql: str, words: tuple[str, ...]) -> dict[str, str]:
+    """Split a DML statement on DEPTH-0 clause keywords taken in the
+    order of ``words`` (a FROM or WHERE inside a subquery is not a
+    clause boundary). Returns keyword -> clause text for the keywords
+    present, plus ``""`` -> the text before the first one."""
+    tokens = tokenize(sql.strip().rstrip(";"))
+    cuts: list[tuple[str, int]] = [("", -1)]
+    depth = nxt = 0
     for i, t in enumerate(tokens):
         if t.kind == PUNCT and t.text in "([{":
             depth += 1
         elif t.kind == PUNCT and t.text in ")]}":
             depth -= 1
-        elif depth == 0 and t.kind == IDENT:
-            if t.upper == "SET" and set_i is None:
-                set_i = i
-            elif t.upper == "FROM" and set_i is not None and from_i is None:
-                from_i = i
-            elif t.upper == "WHERE" and from_i is not None:
-                where_i = i
+        elif depth == 0 and t.kind == IDENT and t.upper in words[nxt:]:
+            nxt = words.index(t.upper) + 1
+            cuts.append((t.upper, i))
+    ends = [i for _, i in cuts[1:]] + [len(tokens)]
+    return {
+        w: render(tokens[i + 1 : end]).strip()
+        for (w, i), end in zip(cuts, ends)
+    }
+
+
+def parse_set_list(text: str, columns: list[str]) -> dict[str, str]:
+    """The one SET-list parser (UPDATE, UPDATE..FROM, ON CONFLICT DO
+    UPDATE, MERGE): ``a = e1, (b, c) = (e2, e3)`` -> {column: expression
+    text}, keyed by the table's own column spelling. A tuple target takes
+    its values pairwise, or one value for every column (DuckDB's
+    ``(a, b) = (1)``). An unknown target raises DuckDB's binder error —
+    a dropped assignment would be a silent no-op UPDATE."""
+    by_lower = {c.lower(): c for c in columns}
+    toks = tokenize(text)
+    out: dict[str, str] = {}
+    for lo, hi in split_args(toks, 0, len(toks)):
+        depth = 0
+        eq = None
+        for j in range(lo, hi):
+            t = toks[j]
+            if t.kind == PUNCT and t.text in "([{":
+                depth += 1
+            elif t.kind == PUNCT and t.text in ")]}":
+                depth -= 1
+            elif depth == 0 and t.kind == OP and t.text == "=":
+                eq = j
                 break
-    if set_i is None or from_i is None:
+        if eq is None:
+            raise ValueError(
+                "Parser Error: syntax error in SET item "
+                f"{render(toks[lo:hi]).strip()[:60]!r}"
+            )
+        targets = _paren_items(toks, lo, eq)
+        values = [render(toks[eq + 1 : hi])]
+        if targets is None:
+            targets = [render(toks[lo:eq])]
+        else:
+            values = _paren_items(toks, eq + 1, hi) or values
+        if len(values) == 1:
+            values = values * len(targets)
+        elif len(values) != len(targets):
+            raise ValueError(
+                "Parser Error: Could not perform multiple assignment, target "
+                f"only expects {len(targets)} values, {len(values)} were "
+                "provided"
+            )
+        for target, value in zip(targets, values):
+            name = target.strip().strip('"`')
+            col = by_lower.get(name.lower())
+            if col is None:
+                raise KeyError(
+                    "Binder Error: Referenced update column "
+                    f"{name.split('.')[0]} not found in table!"
+                )
+            out[col] = value.strip()
+    return out
+
+
+def _paren_items(toks: list[Token], lo: int, hi: int) -> Optional[list[str]]:
+    """The comma-separated items of ``toks[lo:hi]`` when that span is one
+    parenthesized list ``( ... )``; None otherwise."""
+    a = next_sig(toks, lo - 1)
+    b = prev_sig(toks, hi)
+    if a >= hi or toks[a].kind != PUNCT or toks[a].text != "(":
         return None
-    upd = next_sig(tokens, -1)
-    name = render(tokens[upd + 1 : set_i]).strip().strip('"`')
-    set_text = render(tokens[set_i + 1 : from_i]).strip()
-    end = where_i if where_i is not None else len(tokens)
-    from_text = render(tokens[from_i + 1 : end]).strip().rstrip(";").strip()
-    where_text = (
-        render(tokens[where_i + 1 :]).strip().rstrip(";").strip()
-        if where_i is not None
-        else None
-    )
-    return name, set_text, from_text, where_text
+    if match_forward(toks, a, "(", ")") != b:
+        return None
+    if toks[next_sig(toks, a)].is_kw("SELECT", "WITH", "FROM", "VALUES"):
+        return None  # a subquery is one value, not a list
+    return [render(toks[x:y]) for x, y in split_args(toks, a + 1, b)]
+
+
+def _qualify_conflict_refs(expr: str, columns: list[str], table: str) -> str:
+    """ON CONFLICT DO UPDATE scoping (Postgres/DuckDB): an unqualified
+    target-column name or a ``<table>.`` prefix means the EXISTING row
+    (alias ``__tgt``); ``excluded.c`` stays the incoming row."""
+    lowered = {c.lower() for c in columns}
+    toks = tokenize(expr)
+    pieces: list[str] = []
+    for i, t in enumerate(toks):
+        p, n = prev_sig(toks, i), next_sig(toks, i)
+        after_dot = p >= 0 and toks[p].text == "."
+        nxt = toks[n].text if n < len(toks) else ""
+        name = t.text.lower()
+        if t.kind != IDENT or after_dot or name == "excluded":
+            pieces.append(t.text)
+        elif nxt == "." and name == table.lower():
+            pieces.append("__tgt")
+        elif nxt not in (".", "(") and name in lowered:
+            pieces.append(f"__tgt.{t.text}")
+        else:
+            pieces.append(t.text)
+    return "".join(pieces)
 
 
 def _collect_cte_names(tokens: list[Token]) -> set[str]:

@@ -7333,8 +7333,7 @@ OPERATORS: dict[str, tuple[Callable, Optional[str]]] = {
         op_layout_recommendation, ORACLE_LAYOUT_RECOMMENDATION,
     ),
     "op_compaction_audit": (op_compaction_audit, ORACLE_COMPACTION_AUDIT),
-    # rows-only (no DuckDB xxhash64): the JVM-hash scale seam, registered
-    # after _WINDOW_R11 froze — leads _WINDOW_R12 per the ledger test
+    # rows-only (no DuckDB xxhash64): the JVM-hash scale seam
     "op_dedup_minhash_xxhash": (op_dedup_minhash_xxhash, None),
 }
 
@@ -7345,75 +7344,6 @@ OPERATORS: dict[str, tuple[Callable, Optional[str]]] = {
 # ---------------------------------------------------------------------------
 
 
-# Round-12 driver window: a full 50-entry STATIC literal, updated once
-# per round by hand — no rotation state, no reading evaluator artifacts
-# at import time. Round 12 leads with the 8 entries registered after
-# _WINDOW_R11 froze (never driver-witnessed: the round-11 late additions
-# q140-q146 + op_dedup_minhash_xxhash — the round's flagship JVM-hash
-# scale seam), then re-witnesses the stalest block — the
-# round-7-witnessed SQL run q43..q84 (42 entries). 8 + 42 = exactly the
-# driver's 50-entry window; after round 12 the union is 264/264 (zero
-# self-certified entries, modulo entries registered this round and
-# declared in _POST_FREEZE_R12). Everything outside the window is
-# re-proven every round by tests/test_oracle_parity.py at the driver's
-# sf0.01; tests/test_window_ledger.py enforces the staleness bound.
-_WINDOW_R12: tuple[str, ...] = (
-    # registered after _WINDOW_R11 froze — never driver-witnessed
-    "op_dedup_minhash_xxhash",
-    "q140_trailing_commas",
-    "q141_mixed_interval",
-    "q142_macro_defaults",
-    "q143_describe_relation",
-    "q144_columns_star_agg",
-    "q145_lexical_forms",
-    "q146_percent_limit_subquery",
-    # stalest re-witnesses: the round-7-witnessed SQL block q43..q84
-    # (exactly _POST_FREEZE_R11 + the round-11 tree's
-    # _registry_order()[50:][:42], as the round-11 draft prescribed)
-    "q43_exact_stats",
-    "q44_recursive_cte",
-    "q45_arg_max_min",
-    "q46_unnest_words",
-    "q47_series_gaps",
-    "q48_date_part_dayname",
-    "q49_string_agg_ordered",
-    "q50_distinct_on",
-    "q51_regexp_replace_first",
-    "q52_quantiles_exact",
-    "q53_math_string_batch",
-    "q54_bit_bool_aggs",
-    "q55_array_agg",
-    "q56_range_series",
-    "q57_time_bucket",
-    "q58_union_by_name",
-    "q59_outer_joins",
-    "q60_semi_anti_joins",
-    "q61_full_outer",
-    "q62_try_cast_nullif",
-    "q63_interval_arith",
-    "q64_struct_functions",
-    "q65_window_frames",
-    "q66_lateral_where_alias",
-    "q67_is_distinct_from",
-    "q68_rank_distribution",
-    "q69_string_pad_repeat",
-    "q70_bitwise",
-    "q71_hash_digests",
-    "q72_map_ops",
-    "q73_regex_operators",
-    "q74_power_operator",
-    "q75_trim_char_sets",
-    "q76_math_edge_functions",
-    "q77_first_last_ordered",
-    "q78_moment_aggs",
-    "q79_list_function_batch",
-    "q80_string_distances",
-    "q81_date_conventions",
-    "q82_format_typeof_bar",
-    "q83_python_aggs",
-    "q84_create_macro",
-)
-
 # Round-13 driver window (the frozen literal the round-13 driver runs;
 # tests/test_window_ledger.py CURRENT_ROUND = 13). Composition, in
 # priority order mandated by the round-12 verdict and the staleness
@@ -7423,7 +7353,7 @@ _WINDOW_R12: tuple[str, ...] = (
 #      op_dedup_minhash_lsh (store slimmed r12, PRE-GROUPED r13) and
 #      op_stream_neardup (boundary re-hex r12).
 #   2. The 15 never-driver-witnessed round-12 registrations (q147-q161,
-#      declared in _POST_FREEZE_R12) — first-witness priority.
+#      registered after the round-12 window froze) — first-witness priority.
 #   3. The 18 round-6-witnessed entries (they would breach the 6-round
 #      staleness bound after round 13).
 #   4. The 12 round-7-witnessed entries (at the bound after round 13).
@@ -7487,145 +7417,6 @@ _WINDOW_R13: tuple[str, ...] = (
     "op_dedup_threshold_sweep",
 )
 
-# Entries registered AFTER _WINDOW_R12 froze (all 15 now lead
-# _WINDOW_R13 per the ledger; kept for the staleness history).
-_POST_FREEZE_R12: tuple[str, ...] = (
-    "q147_lateral_limit",
-    "q148_scaled_mixed_interval",
-    "q149_unnest_recursive",
-    "q150_at_time_zone",
-    "q151_columns_qualified_star",
-    "q152_asof_derived",
-    "q153_type_alias",
-    "q154_grouping_alias",
-    "q155_conflict_where",
-    "q156_window_exclude_rows",
-    "q157_array_agg_distinct",
-    "q158_recursive_union",
-    "q159_unnest_zip",
-    "q160_timestamptz_time_arith",
-    "q161_scalar_surface_r12",
-)
-
-# Round-11 window kept for the staleness ledger (tests/test_window_ledger):
-# these earned driver rows in CORRECTNESS_r11.json.
-_WINDOW_R11: tuple[str, ...] = (
-    # registered after _WINDOW_R10 froze — never driver-witnessed
-    # (three of them are round-10 flagship closures: embed retrieval =
-    # reference doc_retriever.py:60-94 parity, layout recommendation =
-    # the executable 100 TB layout decision, compaction audit)
-    "q135_exclude_replace",
-    "q136_tpch_q12",
-    "q137_tpch_q9",
-    "q138_tpch_q21",
-    "q139_ignore_nulls_locf",
-    "op_doc_retrieval_embed",
-    "op_layout_recommendation",
-    "op_compaction_audit",
-    # stalest re-witnesses: the round-6-witnessed SQL block q02..q42
-    # (the first 42 entries of the round-10 tree's _registry_order()[50:],
-    # exactly as the round-10 draft prescribed)
-    "q02_filter_predicates",
-    "q03_like_filter",
-    "q04_arithmetic_alias",
-    "q05_join_group_topk",
-    "q06_multiway_join",
-    "q07_self_join_alias",
-    "q08_having_on_alias",
-    "q09_group_by_all_exclude",
-    "q10_scalar_aggs",
-    "q11_distinct_order",
-    "q12_columns_regex",
-    "q13_columns_fn_wrap",
-    "q14_star_replace",
-    "q15_string_index_slice",
-    "q16_list_ops",
-    "q17_cast_ops",
-    "q18_struct_list_literals",
-    "q19_json_extract",
-    "q20_datediff_minute",
-    "q21_regexp_extract",
-    "q22_cte_scalar_subquery",
-    "q23_exists_subquery",
-    "q24_in_subquery",
-    "q25_union",
-    "q26_intersect_except",
-    "q27_window_topk_per_group",
-    "q28_window_running_sum",
-    "q29_window_lag_lead",
-    "q30_rollup",
-    "q31_conditional_pivot",
-    "q32_case_buckets",
-    "q33_date_trunc_extract",
-    "q34_sample_percent",
-    "q34b_sample_reservoir_count",
-    "q35_qualify",
-    "q36_list_cosine_sql",
-    "q37_ilike_concat",
-    "q38_window_rank_family",
-    "q39_grouping_sets",
-    "q40_string_function_batch",
-    "q41_date_function_batch",
-    "q42_approx_and_stats",
-)
-
-# Round-10 window kept for the staleness ledger (tests/test_window_ledger):
-# these earned driver rows in CORRECTNESS_r10.json.
-_WINDOW_R10: tuple[str, ...] = (
-    # registered after _WINDOW_R9 froze — never driver-witnessed
-    "op_gopher_rules",
-    "op_tokenizer_fertility",
-    "op_shard_manifest",
-    "op_crossmodal_dedup",
-    "op_tfidf_keywords",
-    "op_ngram_novelty",
-    "op_kanon_release",
-    "op_stream_sample",
-    "op_sessionize",
-    "op_dp_histogram",
-    "q128_positional_join",
-    "q129_cube_grouping",
-    "q130_values_relation",
-    "q131_tablesample_reservoir",
-    "q132_table_macro",
-    "q133_pivot_in_values",
-    "q134_time_rollup_lattice",
-    "op_hll_distinct",
-    "op_cms_heavy_hitters",
-    "op_quantile_sketch",
-    "op_winnow_fingerprint",
-    "op_record_linkage",
-    "op_doc_retrieval",
-    "op_orc_roundtrip",
-    "op_stream_hll",
-    "op_linkage_entities",
-    "op_column_ndv_profile",
-    "op_funnel_analysis",
-    "op_retention_cohorts",
-    "op_oov_rate",
-    "op_attribution",
-    "op_pagerank",
-    "op_stream_cms",
-    "op_sample_fixed_stratified",
-    "op_dataset_card",
-    "op_embedding_pca",
-    "op_image_neardup",
-    "op_audio_neardup",
-    "op_contamination_report",
-    "op_langid_confusion",
-    "op_dedup_threshold_sweep",
-    "op_shingle_containment",
-    "op_winnow_matches",
-    "op_zipf_fit",
-    "op_heaps_curve",
-    "op_lateness_audit",
-    "op_linear_attribution",
-    "op_join_skew_report",
-    "op_anomaly_days",
-    # stalest re-witness (round-6 driver row)
-    "q01_pricing_summary",
-)
-
 # First numeric query id of the re-witness rotation (see _registry_order):
 # the stalest SQL outside the round-13 window is the round-8-witnessed
 # q126/q127 pair — the tail runs in numeric order from there and wraps.
@@ -7636,18 +7427,6 @@ _REWITNESS_START = 126
 # block q126/q127 + op rows). Lead with whatever rows round 14's
 # changes touch, then re-witness q126 onward by staleness.
 
-# Round-11 post-freeze declarations (history; these lead _WINDOW_R12).
-_POST_FREEZE_R11: tuple[str, ...] = (
-    "op_dedup_minhash_xxhash",
-    "q140_trailing_commas",
-    "q141_mixed_interval",
-    "q142_macro_defaults",
-    "q143_describe_relation",
-    "q144_columns_star_agg",
-    "q145_lexical_forms",
-    "q146_percent_limit_subquery",
-)
-
 
 def _registry_order() -> list[str]:
     """Registry emission order: FIXED and fully deterministic.
@@ -7657,12 +7436,12 @@ def _registry_order() -> list[str]:
     nondeterministic (it sniffed evaluator artifacts) and self-defeating
     (verified entries rotated out of the window, so a regression could
     hide for a round). The order is now a hand-maintained static literal:
-    the driver's 50-entry window (`_WINDOW_R12`) leads with the entries
+    the driver's 50-entry window (`_WINDOW_R13`) leads with the entries
     that have never earned a driver correctness row, then re-witnesses
     by staleness (oldest driver row first); the remainder is every
     other entry in numeric registration order ROTATED to start at
-    _REWITNESS_START (q85: the oldest SQL block left after the r12
-    window is the round-7-witnessed tail, which starts there). Entries
+    _REWITNESS_START (q126: the oldest SQL block left after the r13
+    window is the round-8-witnessed pair, which starts there). Entries
     outside the window are re-proven every round by
     tests/test_oracle_parity.py, which runs the SAME engine-vs-DuckDB
     compare at the driver's sf0.01.

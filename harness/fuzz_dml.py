@@ -6,8 +6,10 @@ multiset. Usage: python harness/fuzz_dml.py [seed] [n_sequences].
 Complements fuzz_diff.py (read-only analytics): this drives the
 catalog/DML router — typed literals incl. NULLs, WHERE predicates over
 mixed types, SET with arithmetic, ALTER ADD COLUMN mid-sequence,
-INSERT..SELECT self-reads, ON CONFLICT upserts, DELETE with USING-less
-predicates — the surface the dev.json cases only sample pointwise.
+INSERT..SELECT self-reads (also with unaliased computed columns), ON
+CONFLICT upserts, tuple ``SET (a, b) = (..)`` assignments, UPDATE..FROM,
+DELETE..USING and ``WHERE c0 IN (SELECT ..)`` subqueries — the surface
+the dev.json cases only sample pointwise.
 """
 import random
 import sys
@@ -86,6 +88,18 @@ def set_expr(name: str, ty: str, cols: list) -> str:
     return f"{name} = {name} + INTERVAL {rng.randint(1, 30)} DAY"
 
 
+def computed(name: str, ty: str) -> str:
+    """An unaliased same-typed expression over column ``name`` (its
+    generated column name is not a plain identifier)."""
+    if ty == "INTEGER":
+        return rng.choice([f"{name} + 1", f"abs({name})"])
+    if ty == "DOUBLE":
+        return rng.choice([f"round({name} * 1.5, 2)", f"{name} / 2.0"])
+    if ty == "VARCHAR":
+        return rng.choice([f"upper({name})", f"{name} || 'z'"])
+    return name
+
+
 def run_sequence(seq_id: int, eng, ddb) -> list:
     """Returns list of (stmt, error) mismatches for one random sequence."""
     for con in (eng, ddb):  # clear any txn a previous sequence left open
@@ -154,16 +168,26 @@ def run_sequence(seq_id: int, eng, ddb) -> list:
             stmts.append("COMMIT")
             in_txn = False
             deleted_in_txn = False
-        if join_dml and r >= 0.94:
-            if rng.random() < 0.5:
+        if join_dml and r >= 0.9:
+            shape = rng.randrange(4)
+            sub = f"(SELECT c0 FROM {uname} WHERE c0 > {rng.randint(0, 20)})"
+            if shape == 0:
                 stmts.append(
                     f"UPDATE {tname} SET c1 = {uname}.c1 FROM {uname}"
                     f" WHERE {tname}.c0 = {uname}.c0"
+                )
+            elif shape == 1:
+                n, t = rng.choice(live[1:])
+                stmts.append(
+                    f"UPDATE {tname} SET {set_expr(n, t, live)}"
+                    f" WHERE c0 IN {sub}"
                 )
             else:
                 stmts.append(
                     f"DELETE FROM {tname} USING {uname}"
                     f" WHERE {tname}.c0 = {uname}.c0"
+                    if shape == 2
+                    else f"DELETE FROM {tname} WHERE c0 IN {sub}"
                 )
                 deleted_in_txn = deleted_in_txn or in_txn
             continue
@@ -212,26 +236,43 @@ def run_sequence(seq_id: int, eng, ddb) -> list:
             # upsert: collide on the PK, rewrite a non-key column from
             # the excluded row
             tgt = [n for n, _ in live[1:]]
-            setc = rng.choice(tgt) if tgt else "c0"
             row = ", ".join(
                 [str(rng.randint(0, 9))] + [lit(t) for _n, t in live[1:]]
             )
+            if len(tgt) >= 2 and rng.random() < 0.5:
+                # tuple assignment
+                a, b = rng.sample(tgt, 2)
+                upd = f"({a}, {b}) = (excluded.{a}, excluded.{b})"
+            else:
+                setc = rng.choice(tgt) if tgt else "c0"
+                upd = f"{setc} = excluded.{setc}"
             stmts.append(
                 f"INSERT INTO {tname} VALUES ({row}) "
-                f"ON CONFLICT (c0) DO UPDATE SET {setc} = excluded.{setc}"
+                f"ON CONFLICT (c0) DO UPDATE SET {upd}"
             )
         elif r < 0.68:
-            n, t = rng.choice(live)
-            stmts.append(
-                f"UPDATE {tname} SET {set_expr(n, t, live)}"
-                f" WHERE {pred(live)}"
-            )
+            if len(live) >= 2 and rng.random() < 0.3:
+                # tuple assignment SET (a, b) = (e1, e2)
+                pair = rng.sample(live, 2)
+                sets = [set_expr(n, t, live).split(" = ", 1) for n, t in pair]
+                setl = (
+                    f"({sets[0][0]}, {sets[1][0]}) = "
+                    f"({sets[0][1]}, {sets[1][1]})"
+                )
+            else:
+                n, t = rng.choice(live)
+                setl = set_expr(n, t, live)
+            stmts.append(f"UPDATE {tname} SET {setl} WHERE {pred(live)}")
         elif r < 0.8:
             stmts.append(f"DELETE FROM {tname} WHERE {pred(live)}")
             deleted_in_txn = deleted_in_txn or in_txn
         elif r < 0.88:
+            sel = "*"
+            if rng.random() < 0.5:
+                # unaliased computed columns: INSERT aligns by position
+                sel = ", ".join(computed(n, t) for n, t in live)
             stmts.append(
-                f"INSERT INTO {tname} SELECT * FROM {tname}"
+                f"INSERT INTO {tname} SELECT {sel} FROM {tname}"
                 f" WHERE {pred(live)}"
             )
         else:
