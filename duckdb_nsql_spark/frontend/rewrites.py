@@ -2245,27 +2245,6 @@ _BOOL_KWS = frozenset(
 )
 
 
-def _expr_is_decimal_literal(sig: list[Token]) -> bool:
-    """A (possibly signed) NUMBER literal with a decimal point: DuckDB
-    types it DECIMAL, and DECIMAL->INTEGER casts round half AWAY from
-    zero (2.5 -> 3) where DOUBLE->INTEGER casts round HALF-EVEN."""
-    while (
-        len(sig) >= 2
-        and sig[0].kind == PUNCT
-        and sig[0].text == "("
-        and _match_sig_forward(sig, 0) == len(sig) - 1
-    ):
-        sig = sig[1:-1]
-    if sig and sig[0].kind == OP and sig[0].text in ("-", "+"):
-        sig = sig[1:]
-    return (
-        len(sig) == 1
-        and sig[0].kind == NUMBER
-        and "." in sig[0].text
-        and "e" not in sig[0].text.lower()
-    )
-
-
 def _expr_is_boolean(sig: list[Token]) -> bool:
     """Statically boolean cast operand (comparison/logical operators at
     the top level, single-paren groups unwrapped): DuckDB CAST(bool AS
@@ -2312,15 +2291,28 @@ def _expr_is_boolean(sig: list[Token]) -> bool:
     return False
 
 
+def _int_cast_round(x: str) -> str:
+    """DuckDB's rounding for an integer cast of ``x``: a DECIMAL rounds
+    half AWAY from zero (``CAST(3 * 1.5 AS INTEGER)`` = 5), a DOUBLE
+    half-EVEN (``CAST(4.5::DOUBLE AS INTEGER)`` = 4, 904.5 -> 904 — probed),
+    which is Spark's bround. Catalyst folds ``typeof`` at optimize time, so
+    the plan keeps only the branch for ``x``'s type. The backticks keep the
+    TYPEOF function-rename macro off the dispatch call."""
+    return (
+        f"CASE WHEN `typeof`({x}) LIKE 'decimal%' THEN round({x})"
+        f" ELSE bround({x}) END"
+    )
+
+
 def pass_int_cast_rounds(tokens: list[Token]) -> list[Token]:
     """``x::INTEGER`` / ``CAST(x AS INTEGER)`` — DuckDB ROUNDS when
-    casting float/double to integer (dev.json:428 ``speed::INTEGER``)
-    with banker's HALF-EVEN ties (904.5 -> 904, 905.5 -> 906 — probed);
-    Spark CAST truncates. Rewrite to ``CAST(bround(x) AS type)``
-    (Spark's bround is HALF-EVEN), preserving DuckDB's answer for
-    fractional input and a no-op for integral input. Covers both cast
-    spellings. (DuckDB's round() FUNCTION is half-away-from-zero — only
-    the cast uses banker's rounding.)"""
+    casting a fractional value to integer (dev.json:428 ``speed::INTEGER``);
+    Spark CAST truncates. Rewrite to ``CAST(<_int_cast_round(x)> AS type)``,
+    a no-op for integral input. Covers both cast spellings. (DuckDB's
+    round() FUNCTION is half-away-from-zero for every type — only the
+    cast of a DOUBLE uses banker's rounding.) Earlier passes that cast a
+    value integral by construction spell it Spark's ``int(..)``, which
+    this pass leaves alone."""
     i = 0
     while i < len(tokens):
         t = tokens[i]
@@ -2358,20 +2350,8 @@ def pass_int_cast_rounds(tokens: list[Token]) -> list[Token]:
                             # booleans
                             i = c + 1
                             continue
-                        if _expr_is_decimal_literal(expr_sig):
-                            # DECIMAL literal: half-AWAY rounding
-                            new = (
-                                [_ident("CAST"), _punct("("),
-                                 _ident("round"), _punct("(")]
-                                + expr
-                                + [_punct(")"), _ws(), _ident("AS"),
-                                   _ws(), _ident(tokens[ty].text),
-                                   _punct(")")]
-                            )
-                            tokens = tokens[:i] + new + tokens[c + 1 :]
-                            i += len(new)
-                            continue
                         if not _is_single_round_call(expr):
+                            x = render(expr)
                             if is_try:
                                 # DuckDB TRY_CAST('3.7' AS INTEGER) = 4;
                                 # Spark's try_cast of a fractional string
@@ -2379,23 +2359,17 @@ def pass_int_cast_rounds(tokens: list[Token]) -> list[Token]:
                                 # DOUBLE try-cast, then round. (Emitted
                                 # TRY_CAST targets DOUBLE, so the rescan
                                 # can't re-match it.)
-                                new = tokenize(
-                                    f"CAST(bround(TRY_CAST({render(expr)}"
-                                    f" AS DOUBLE)) AS {tokens[ty].text})"
-                                )
+                                rounded = f"bround(TRY_CAST({x} AS DOUBLE))"
                             else:
-                                new = (
-                                    [_ident("CAST"), _punct("("),
-                                     _ident("bround"), _punct("(")]
-                                    + expr
-                                    + [_punct(")"), _ws(), _ident("AS"),
-                                       _ws(), _ident(tokens[ty].text),
-                                       _punct(")")]
-                                )
+                                rounded = _int_cast_round(x)
+                            new = tokenize(
+                                f"CAST({rounded} AS {tokens[ty].text})"
+                            )
                             tokens = tokens[:i] + new + tokens[c + 1 :]
-                            # re-examine from i: the guard above stops a
-                            # re-wrap; nested casts inside expr still get
-                            # visited as the scan advances
+                            # step past the emitted CAST only: nested
+                            # casts inside expr get visited as the scan
+                            # advances
+                            i += 1
                             continue
         if t.kind == OP and t.text == "::":
             ty = next_sig(tokens, i)
@@ -2408,21 +2382,9 @@ def pass_int_cast_rounds(tokens: list[Token]) -> list[Token]:
                 if _expr_is_boolean(base_sig):
                     i = ty + 1
                     continue
-                if _expr_is_decimal_literal(base_sig):
-                    new = (
-                        [_ident("CAST"), _punct("("), _ident("round"),
-                         _punct("(")]
-                        + base
-                        + [_punct(")"), _ws(), _ident("AS"), _ws(),
-                           _ident(tokens[ty].text), _punct(")")]
-                    )
-                    tokens = tokens[:start] + new + tokens[ty + 1 :]
-                    i = start + len(new)
-                    continue
-                new = (
-                    [_ident("CAST"), _punct("("), _ident("bround"), _punct("(")]
-                    + base
-                    + [_punct(")"), _ws(), _ident("AS"), _ws(), _ident(tokens[ty].text), _punct(")")]
+                new = tokenize(
+                    f"CAST({_int_cast_round(render(base))}"
+                    f" AS {tokens[ty].text})"
                 )
                 tokens = tokens[:start] + new + tokens[ty + 1 :]
                 i = start + len(new)
@@ -7360,8 +7322,8 @@ def pass_enum_functions(
             # (NULL input, value outside the member list) — DuckDB
             # renders NULL there, never -1
             new = tokenize(
-                f"CAST(nullif(array_position(array({arr}), {a_txt}), 0)"
-                f" - 1 AS INT)"
+                f"int(nullif(array_position(array({arr}), {a_txt}), 0)"
+                f" - 1)"
             )
         out = out[:i] + new + out[c + 1 :]
         i += len(new)
@@ -7393,8 +7355,8 @@ def pass_enum_functions(
         arr = ", ".join("'" + v.replace("'", "''") + "'" for v in vals)
         fn = t.upper.lower()
         new = tokenize(
-            f"element_at(array({arr}), CAST({fn}(array_position("
-            f"array({arr}), {col})) AS INT))"
+            f"element_at(array({arr}), int({fn}(array_position("
+            f"array({arr}), {col}))))"
         )
         out = out[:i] + new + out[c + 1 :]
         i += len(new)
@@ -7543,14 +7505,14 @@ def pass_windowed_median(
         if discrete:
             expanded = (
                 f"(CASE WHEN size({s}) = 0 THEN NULL ELSE "
-                f"element_at({s}, CAST((size({s}) + 1) div 2 AS INT)) END)"
+                f"element_at({s}, int((size({s}) + 1) div 2)) END)"
             )
         else:
             expanded = (
                 f"CAST((CASE WHEN size({s}) = 0 THEN NULL ELSE "
-                f"(CAST(element_at({s}, CAST((size({s}) + 1) div 2 AS INT)) "
+                f"(CAST(element_at({s}, int((size({s}) + 1) div 2)) "
                 f"AS DOUBLE) + "
-                f"element_at({s}, CAST((size({s}) + 2) div 2 AS INT))) / 2 "
+                f"element_at({s}, int((size({s}) + 2) div 2))) / 2 "
                 f"END) AS DOUBLE)"
             )
         new_toks = tokenize(expanded)
@@ -7590,7 +7552,7 @@ def _ym_render_sql(months_expr: str) -> str:
     so (M - M%12)/12 is exact). Pure built-ins — no UDF, no interval
     type crosses to Python."""
     m = f"({months_expr})"
-    y = f"CAST(({m} - ({m} % 12)) / 12 AS INT)"
+    y = f"int(({m} - ({m} % 12)) / 12)"
     r = f"({m} % 12)"
     return (
         f"CASE WHEN {m} = 0 THEN '00:00:00' ELSE concat_ws(' ', "

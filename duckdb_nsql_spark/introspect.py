@@ -32,27 +32,31 @@ def _sql_literal(v, dt: T.DataType) -> str:
         return f"CAST({v!r} AS {ddl})"
     if isinstance(v, (list, tuple)) and isinstance(dt, T.ArrayType):
         items = ", ".join(_sql_literal(x, dt.elementType) for x in v)
-        return f"array({items})"
+        return f"CAST(array({items}) AS {ddl})"
     s = str(v).replace("\\", "\\\\").replace("'", "''")
     return f"CAST('{s}' AS {ddl})"
 
 
 def local_df(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
-    """Build a tiny driver-side relation as a VALUES clause.
+    """Build a tiny driver-side relation (a LocalRelation) from Python rows.
 
     ``spark.createDataFrame`` parallelizes Python rows into an
-    ExistingRDD scan — every downstream action then launches one task
-    *per default partition*, each spinning a Python worker to unpickle a
-    handful of rows (~0.25 s per statement for a 9-row SUMMARIZE, 32
-    partitions). A VALUES literal becomes a LocalTableScan: pure JVM,
-    zero tasks (~0.05 s)."""
+    ExistingRDD scan (a LogicalRDD leaf) — every downstream action then
+    launches one task *per default partition*, each spinning a Python
+    worker to unpickle a handful of rows (~0.25 s per statement for a
+    9-row SUMMARIZE, 32 partitions). Rows render as a VALUES literal
+    instead, which Spark turns into a LocalRelation: pure JVM, zero tasks
+    (~0.05 s). No rows build the LocalRelation directly in the JVM with
+    ``schema`` exactly as given (types, nullability).
+
+    Use it for rows that start in Python. A session table image that is
+    already driver-local is collapsed by the session's ``_local_relation``
+    instead, which never leaves the JVM."""
     if not rows:
-        nulls = ", ".join(f"CAST(NULL AS {f.dataType.simpleString()})"
-                          for f in schema.fields)
-        cols = ", ".join(f"`{f.name}`" for f in schema.fields)
-        return spark.sql(
-            f"SELECT * FROM (VALUES ({nulls})) AS t({cols}) WHERE 1 = 0"
-        )
+        jspark = spark._jsparkSession
+        return DataFrame(jspark.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json())
+        ), spark)
     vals = ", ".join(
         "(" + ", ".join(
             _sql_literal(v, f.dataType) for v, f in zip(r, schema.fields)
@@ -912,9 +916,7 @@ def duckdb_constraints_df(spark: SparkSession, session) -> DataFrame:
             "constraint_column_names", T.ArrayType(T.StringType())
         ),
     ])
-    # createDataFrame (LocalRelation) — local_df's VALUES renderer cannot
-    # express the array-typed column
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def pragma_database_size_df(spark: SparkSession, session) -> DataFrame:

@@ -294,6 +294,27 @@ def _all_leaves_local(df: DataFrame) -> bool:
         return False
 
 
+def _local_relation(spark: SparkSession, df: DataFrame) -> Optional[DataFrame]:
+    """``df``'s rows as ONE LocalRelation, or None when it holds more than
+    TINY_BASE_LOCALIZE_MAX_ROWS rows.
+
+    The rows never leave the JVM: a capped collect of Spark's own rows,
+    rebuilt against the plan's own schema, so every type (DECIMAL,
+    nested, INTERVAL, TIMESTAMP) comes back exactly, with no Python
+    conversion and no SQL literal rendering. Over an all-local plan the
+    collect is a driver-side copy (zero jobs for one LocalRelation, one
+    for a Union of them). Reads of the result are folded on the driver by
+    Catalyst's ConvertToLocalRelation — zero tasks — and a write over it
+    yields a plan that collapses again instead of a growing Union."""
+    jdf = df._jdf
+    jrows = jdf.limit(TINY_BASE_LOCALIZE_MAX_ROWS + 1).collectAsList()
+    if jrows.size() > TINY_BASE_LOCALIZE_MAX_ROWS:
+        return None
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(jrows, jdf.schema()), spark
+    )
+
+
 # Scalar aggregates _fold_local_subqueries evaluates driver-side. Kept to
 # functions whose Python evaluation is bit-identical to Spark's over the
 # already-collected values: order statistics and integer counting. sum/avg
@@ -1104,10 +1125,11 @@ class DuckSparkSession:
 
         Gate on the parquet footer's row count (a driver-side metadata
         read, no job) so large tables never pay a probe; values are
-        collected through Spark's OWN parquet read, so the rebuilt
-        LocalRelation is bit-identical to what the scan would produce —
-        no Python-side re-interpretation of parquet types. Non-scalar
-        columns (arrays, structs, binary) keep the distributed scan.
+        collected through Spark's OWN parquet read and rebuilt in the JVM
+        (_local_relation), so the LocalRelation is bit-identical to what
+        the scan would produce — no Python-side re-interpretation of
+        parquet types. Non-scalar columns (arrays, structs, binary) keep
+        the distributed scan.
 
         SNAPSHOT SEMANTICS (round-12 advice note): unlike the lazy scan
         it replaces, the LocalRelation is collected ONCE at
@@ -1130,8 +1152,8 @@ class DuckSparkSession:
             return df
         if nrows > TINY_BASE_LOCALIZE_MAX_ROWS:
             return df
-        rows = [tuple(r) for r in df.collect()]
-        return introspect.local_df(self.spark, rows, df.schema).coalesce(1)
+        local = _local_relation(self.spark, df)
+        return df if local is None else local.coalesce(1)
 
     def close(self) -> None:
         # session lifetime is owned by the caller; release what WE own:
@@ -3953,7 +3975,6 @@ class DuckSparkSession:
         without an explicit alias gains ``AS <original-name>`` so
         ``table.column`` qualifiers keep resolving.
         """
-        self._ensure_information_schema()
         out = list(tokens)
         self._cte_scopes = _collect_cte_scopes(out)
         self._cte_names = {n for n, _s, _e in self._cte_scopes}
@@ -4017,6 +4038,7 @@ class DuckSparkSession:
         if mangled is None:
             key = self._resolve_table_key(name)
             if key is None and parts[0].lower() == "information_schema":
+                self._ensure_information_schema()
                 key = name
             if key is None:
                 nxt0 = next_sig(out, end)
@@ -4063,9 +4085,9 @@ class DuckSparkSession:
         """U9: information_schema.tables / .columns views
         (/root/reference/examples/utils.py:16-27).
 
-        Rebuilt lazily: only when the table map changed since the last
-        build (a per-SELECT rebuild cost ~70 ms/query in py4j round
-        trips — measured at sf0.1, bench q1)."""
+        Rebuilt lazily: only by a statement that names one of them, and
+        only when the table map changed since the last build. A rebuild
+        costs ~100 ms, and every DML statement changes the table map."""
         if not self._infoschema_dirty:
             return
         rows_t, rows_c = [], []
@@ -4096,10 +4118,10 @@ class DuckSparkSession:
             T.StructField("data_type", T.StringType()),
             T.StructField("is_nullable", T.StringType()),
         ])
-        self.spark.createDataFrame(rows_t, st).createOrReplaceTempView(
+        introspect.local_df(self.spark, rows_t, st).createOrReplaceTempView(
             self._view_name("information_schema.tables")
         )
-        self.spark.createDataFrame(rows_c, sc).createOrReplaceTempView(
+        introspect.local_df(self.spark, rows_c, sc).createOrReplaceTempView(
             self._view_name("information_schema.columns")
         )
         self._infoschema_dirty = False
@@ -4224,12 +4246,20 @@ class DuckSparkSession:
                 self.spark, name, df, meta
             ))
             return
-        # Each DML re-registration stacks a union/projection on the table's
-        # plan; unbounded, the analyzer cost grows linearly per statement
-        # (quadratic over a bulk-load loop). Every 16th write truncates the
-        # lineage with an eager localCheckpoint — the executor-block
-        # equivalent of a table rewrite. (A real table format — Delta/
-        # Iceberg — is the cluster answer; in-session DML tables are small.)
+        # A tiny image whose every leaf is driver-local (CREATE TABLE,
+        # INSERT VALUES and any DML over those) is stored as ONE
+        # LocalRelation: reads run on the driver with zero tasks and the
+        # next write starts from a single leaf, not a growing Union.
+        if _all_leaves_local(df):
+            local = _local_relation(self.spark, df)
+            if local is not None:
+                self.register(name, local)
+                return
+        # Otherwise each DML re-registration stacks a union/projection on
+        # the table's plan; unbounded, the analyzer cost grows linearly per
+        # statement (quadratic over a bulk-load loop). Every 16th write
+        # truncates the lineage with an eager localCheckpoint — the
+        # executor-block equivalent of a table rewrite.
         depth = self._dml_depth.get(name, 0) + 1
         self._dml_depth[name] = depth
         if depth % 16 == 0:
@@ -4382,15 +4412,15 @@ class DuckSparkSession:
                     self._warehouse.save_view(name.lower(), inner)
                 return None
             df = self._query(inner)
-            # CTAS materializes in DuckDB; registering the plan keeps it
-            # lazy/distributed — results are recomputed from source (columnar
-            # parquet) which Catalyst handles; small DDL tables may cache.
+            # CTAS materializes in DuckDB; _register_managed stores a tiny
+            # all-local result as one LocalRelation and keeps anything over
+            # files lazy — recomputed from columnar parquet by Catalyst.
             self._register_managed(name, df, durable=not temp)
             return None
         if nxt == "(":
             c = match_forward(tokens, sig[j], "(", ")")
             coldefs = self._parse_coldefs(tokens[sig[j] + 1 : c], name)
-            empty = self.spark.createDataFrame([], coldefs)
+            empty = introspect.local_df(self.spark, [], coldefs)
             self._register_managed(name, empty, durable=not temp)
             return None
         raise ValueError(f"unsupported CREATE statement: {sql[:80]}")

@@ -1018,3 +1018,193 @@ def test_join_over_dml_built_union(engine, duck):
     assert [tuple(r) for r in engine.execute(q).collect()] == (
         duck.execute(q).fetchall()
     )
+
+
+# ------------------------------------------------- tiny in-session tables
+
+
+def _jobs_started(spark, fn):
+    """Run ``fn`` under a job group of its own; return it and the ids of
+    the Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"tiny-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _optimized_plan(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def test_tiny_table_image_is_one_local_relation(engine):
+    """CREATE TABLE, INSERT VALUES, UPDATE and DELETE on an in-memory
+    table leave ONE LocalRelation (not a Union per INSERT over an
+    ExistingRDD scan), and a filtered read of it runs on the driver."""
+    for s in (
+        "CREATE TABLE tl (id INTEGER, v VARCHAR)",
+        "INSERT INTO tl VALUES (1, 'a'), (2, 'b')",
+        "INSERT INTO tl VALUES (3, 'c')",
+        "INSERT INTO tl VALUES (4, 'd'), (5, 'e')",
+        "UPDATE tl SET v = upper(v) WHERE id > 3",
+        "DELETE FROM tl WHERE id = 2",
+    ):
+        engine.execute(s)
+    plan = _optimized_plan(engine.table("tl"))
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    rows, jobs = _jobs_started(
+        engine.spark,
+        lambda: engine.execute("SELECT id, v FROM tl WHERE id >= 3").collect(),
+    )
+    assert sorted(tuple(r) for r in rows) == [(3, "c"), (4, "D"), (5, "E")]
+    assert jobs == [], f"read of a tiny table started jobs {jobs}"
+
+
+def test_catalog_views_are_local_relations(engine):
+    """information_schema.tables / .columns and duckdb_constraints() are
+    built on the driver as LocalRelations, not ExistingRDD scans."""
+    engine.execute(
+        "CREATE TABLE cv (id INTEGER PRIMARY KEY, s VARCHAR NOT NULL)"
+    )
+    for q, want in (
+        ("SELECT table_name, table_type FROM information_schema.tables"
+         " WHERE table_name = 'cv'", [("cv", "BASE TABLE")]),
+        ("SELECT column_name, data_type FROM information_schema.columns"
+         " WHERE table_name = 'cv' ORDER BY ordinal_position",
+         [("id", "INTEGER"), ("s", "VARCHAR")]),
+        ("SELECT constraint_type, constraint_text, expression,"
+         " constraint_column_names FROM duckdb_constraints()"
+         " WHERE table_name = 'cv' ORDER BY constraint_index",
+         [("PRIMARY KEY", "PRIMARY KEY(id)", None, ["id"]),
+          ("NOT NULL", "NOT NULL(id)", None, ["id"]),
+          ("NOT NULL", "NOT NULL(s)", None, ["s"])]),
+    ):
+        df = engine.execute(q)
+        leaves = _optimized_plan(df).collectLeaves()
+        kinds = {
+            leaves.apply(i).getClass().getSimpleName()
+            for i in range(leaves.size())
+        }
+        assert kinds == {"LocalRelation"}, (q, kinds)
+        assert [tuple(r) for r in df.collect()] == want, q
+
+
+_TINY_TYPED = [
+    "CREATE TYPE tmood AS ENUM ('sad', 'ok', 'happy')",
+    "CREATE TABLE tt (id INTEGER NOT NULL, d DECIMAL(18,3), s VARCHAR,"
+    " e tmood, l INTEGER[], st STRUCT(a INTEGER, b VARCHAR),"
+    " m MAP(VARCHAR, INTEGER), ts TIMESTAMP, dt DATE, z INTEGER)",
+    "INSERT INTO tt VALUES (1, 1.125, 'a', 'ok', [1, 2], {'a': 1, 'b': 'x'},"
+    " MAP {'k': 1}, TIMESTAMP '2024-01-01 10:00:00', DATE '2024-01-01',"
+    " NULL)",
+    "INSERT INTO tt VALUES (2, -2.5, 'b''q', 'happy', [],"
+    " {'a': 2, 'b': NULL}, MAP {'k': 2, 'j': 3},"
+    " TIMESTAMP '2024-02-29 23:59:59.123456', DATE '2024-02-29', NULL)",
+    "INSERT INTO tt VALUES (3, 1234567.891, NULL, 'sad', NULL, NULL, NULL,"
+    " NULL, NULL, NULL), (4, 0.001, 'd', NULL, [NULL, 7],"
+    " {'a': NULL, 'b': 'y'}, MAP {'j': 5}, TIMESTAMP '1999-12-31 00:00:00',"
+    " DATE '1999-12-31', NULL)",
+    "UPDATE tt SET d = d * 2, s = s || '!' WHERE id <> 3",
+    "DELETE FROM tt WHERE id = 3",
+]
+
+
+def test_tiny_table_types_survive_collapse(engine, duck):
+    """Every column type comes back from the collapsed image exactly:
+    values match DuckDB through the same DML sequence, and DESCRIBE and
+    information_schema.columns read as before the collapse existed."""
+    for s in _TINY_TYPED:
+        engine.execute(s)
+        duck.execute(s)
+    assert _optimized_plan(engine.table("tt")).getClass().getSimpleName() == (
+        "LocalRelation"
+    )
+    q = (
+        "SELECT id, d, s, e, l, st.a, st.b, m['k'], m['j'], ts, dt, z"
+        " FROM tt ORDER BY id"
+    )
+    assert [tuple(r) for r in engine.execute(q).collect()] == (
+        duck.execute(q).fetchall()
+    )
+    assert [tuple(r) for r in engine.execute("DESCRIBE tt").collect()] == (
+        duck.execute("DESCRIBE tt").fetchall()
+    )
+    # information_schema keeps its own (pre-existing) spelling: ENUM reads
+    # VARCHAR and nullability comes from the Spark schema
+    cols = engine.execute(
+        "SELECT column_name, ordinal_position, data_type, is_nullable"
+        " FROM information_schema.columns WHERE table_name = 'tt'"
+        " ORDER BY ordinal_position"
+    ).collect()
+    assert [tuple(r) for r in cols] == [
+        ("id", 1, "INTEGER", "YES"), ("d", 2, "DECIMAL(18,3)", "YES"),
+        ("s", 3, "VARCHAR", "YES"), ("e", 4, "VARCHAR", "YES"),
+        ("l", 5, "INTEGER[]", "YES"),
+        ("st", 6, "STRUCT(a INTEGER, b VARCHAR)", "YES"),
+        ("m", 7, "MAP(VARCHAR, INTEGER)", "YES"), ("ts", 8, "TIMESTAMP", "YES"),
+        ("dt", 9, "DATE", "YES"), ("z", 10, "INTEGER", "YES"),
+    ]
+
+
+def test_tiny_table_cap_keeps_lazy_path(engine, duck):
+    """An image above TINY_BASE_LOCALIZE_MAX_ROWS rows keeps the lazy plan
+    and its every-16th-write checkpoint, also when all of its leaves are
+    driver-local, and stays correct across 16+ writes."""
+    from duckdb_nsql_spark.session import TINY_BASE_LOCALIZE_MAX_ROWS
+
+    n = TINY_BASE_LOCALIZE_MAX_ROWS + 1
+    stmts = [
+        "CREATE TABLE tbig (i BIGINT)",
+        f"INSERT INTO tbig SELECT * FROM range({n})",
+        # one-row-relation leaf only: all-local, but over the cap
+        f"CREATE TABLE tgen AS SELECT unnest(generate_series(1, {n})) AS i",
+    ]
+    for k in range(17):
+        stmts.append(f"INSERT INTO tbig VALUES ({k * 7})")
+        stmts.append(f"INSERT INTO tgen VALUES ({k * 11})")
+    stmts.append("UPDATE tgen SET i = i + 1 WHERE i % 3 = 0")
+    stmts.append("DELETE FROM tbig WHERE i % 5 = 0")
+    for s in stmts:
+        engine.execute(s)
+        duck.execute(s)
+    for t in ("tbig", "tgen"):
+        plan = _optimized_plan(engine.table(t))
+        assert plan.getClass().getSimpleName() != "LocalRelation", t
+        q = f"SELECT count(*), sum(i), min(i), max(i) FROM {t}"
+        assert [tuple(r) for r in engine.execute(q).collect()] == (
+            duck.execute(q).fetchall()
+        ), t
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "database"])
+def test_int_cast_rounding_matches_duckdb(spark, tmp_path, durable):
+    """An integer cast rounds a DECIMAL half away from zero and a DOUBLE
+    half-even, as DuckDB does — also where the cast is the column-type
+    cast of an upsert or UPDATE assignment."""
+    eng = _dml_session(spark, durable, tmp_path)
+    dk = duckdb.connect()
+    for s in (
+        "CREATE TABLE ic (id INTEGER PRIMARY KEY, v INTEGER)",
+        "INSERT INTO ic VALUES (1, 3), (2, 5), (3, -3)",
+        "INSERT INTO ic VALUES (1, 3), (2, 7) ON CONFLICT (id) DO UPDATE"
+        " SET v = excluded.v * 1.5",
+        "UPDATE ic SET v = v * 2.5 WHERE id = 3",
+    ):
+        eng.execute(s)
+        dk.execute(s)
+    for q in (
+        "SELECT * FROM ic ORDER BY id",
+        "SELECT CAST(3 * 1.5 AS INTEGER), CAST(4.5::DOUBLE AS INTEGER),"
+        " (-2.5)::INT, 2.5::BIGINT, CAST(-4.5 AS SMALLINT)",
+        "SELECT id, CAST(v * 1.5 AS INTEGER), (v * 0.5)::INT,"
+        " CAST(v * 1.5::DOUBLE AS BIGINT), CAST(avg(v * 1.5) AS INTEGER)"
+        " FROM ic GROUP BY id, v ORDER BY id",
+    ):
+        assert [tuple(r) for r in eng.execute(q).collect()] == (
+            dk.execute(q).fetchall()
+        ), q
