@@ -302,14 +302,24 @@ def _local_relation(spark: SparkSession, df: DataFrame) -> Optional[DataFrame]:
     rebuilt against the plan's own schema, so every type (DECIMAL,
     nested, INTERVAL, TIMESTAMP) comes back exactly, with no Python
     conversion and no SQL literal rendering. Over an all-local plan the
-    collect is a driver-side copy (zero jobs for one LocalRelation, one
-    for a Union of them). Reads of the result are folded on the driver by
-    Catalyst's ConvertToLocalRelation — zero tasks — and a write over it
-    yields a plan that collapses again instead of a growing Union."""
+    collect is a driver-side copy with zero jobs (a Union is copied branch
+    by branch: collecting it whole schedules a job). Reads of the result
+    are folded on the driver by Catalyst's ConvertToLocalRelation — zero
+    tasks — and a write over it yields a plan that collapses again."""
     jdf = df._jdf
-    jrows = jdf.limit(TINY_BASE_LOCALIZE_MAX_ROWS + 1).collectAsList()
-    if jrows.size() > TINY_BASE_LOCALIZE_MAX_ROWS:
-        return None
+    plan = jdf.queryExecution().optimizedPlan()
+    parts = [jdf]
+    if plan.getClass().getSimpleName() == "Union":
+        kids = plan.children()
+        of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+        parts = [of_rows(spark._jsparkSession, kids.apply(i))
+                 for i in range(kids.size())]
+    jrows = spark._jvm.java.util.ArrayList()
+    for part in parts:
+        jrows.addAll(part.limit(
+            TINY_BASE_LOCALIZE_MAX_ROWS + 1 - jrows.size()).collectAsList())
+        if jrows.size() > TINY_BASE_LOCALIZE_MAX_ROWS:
+            return None
     return DataFrame(
         spark._jsparkSession.createDataFrame(jrows, jdf.schema()), spark
     )
@@ -7302,12 +7312,6 @@ def _qualify_conflict_refs(expr: str, columns: list[str], table: str) -> str:
         else:
             pieces.append(t.text)
     return "".join(pieces)
-
-
-def _collect_cte_names(tokens: list[Token]) -> set[str]:
-    """Names bound by ``WITH name [(cols)] AS (...)`` anywhere in the
-    statement (nested included) — these shadow catalog tables."""
-    return {name for name, _s, _e in _collect_cte_scopes(tokens)}
 
 
 def _collect_cte_scopes(tokens: list[Token]) -> list[tuple[str, int, int]]:

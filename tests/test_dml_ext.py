@@ -1045,7 +1045,8 @@ def _optimized_plan(df):
 def test_tiny_table_image_is_one_local_relation(engine):
     """CREATE TABLE, INSERT VALUES, UPDATE and DELETE on an in-memory
     table leave ONE LocalRelation (not a Union per INSERT over an
-    ExistingRDD scan), and a filtered read of it runs on the driver."""
+    ExistingRDD scan) and start no Spark job, and a filtered read of it
+    runs on the driver."""
     for s in (
         "CREATE TABLE tl (id INTEGER, v VARCHAR)",
         "INSERT INTO tl VALUES (1, 'a'), (2, 'b')",
@@ -1054,7 +1055,8 @@ def test_tiny_table_image_is_one_local_relation(engine):
         "UPDATE tl SET v = upper(v) WHERE id > 3",
         "DELETE FROM tl WHERE id = 2",
     ):
-        engine.execute(s)
+        _, jobs = _jobs_started(engine.spark, lambda: engine.execute(s))
+        assert jobs == [], f"{s} started jobs {jobs}"
     plan = _optimized_plan(engine.table("tl"))
     assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
     rows, jobs = _jobs_started(
