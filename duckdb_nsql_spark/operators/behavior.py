@@ -23,6 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..introspect import local_df
 
 
 def funnel_steps(
@@ -250,9 +253,8 @@ def lateness_audit(
     lateness = run.select(
         (F.col("_run") - F.col("_us")).alias("_late_us")
     )
-    wm = events.sparkSession.createDataFrame(
-        [(w,) for w in watermarks_s], "watermark_s int"
-    )
+    wm = local_df(events.sparkSession, [(w,) for w in watermarks_s],
+                  T.StructType().add("watermark_s", T.IntegerType()))
     j = lateness.crossJoin(F.broadcast(wm))
     return j.groupBy("watermark_s").agg(
         F.count("*").cast("long").alias("n_events"),

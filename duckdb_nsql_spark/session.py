@@ -187,13 +187,6 @@ def _substitute_macro_params(body: str, params: list[str], args: list[str]) -> s
 # persist's extra stage, serialization, and lost pushdown.)
 CTE_MATERIALIZE_MIN_INPUT_BYTES = 256 << 20
 
-# A materialized CTE whose RESULT is at most this many rows collapses to a
-# driver-built VALUES relation (LocalTableScan): downstream joins broadcast
-# it without AQE guesswork and scalar subqueries over it evaluate without
-# exchanges — DuckDB's in-memory materialized CTE, bounded to a few MB of
-# driver memory. Larger results stay as the distributed persisted view.
-CTE_LOCALIZE_MAX_ROWS = 2000
-
 # Localization probes (single-task final merge) only run when the CTE
 # body scans at most this much estimated input; larger bodies keep the
 # fully-distributed lazy persist + AQE path.
@@ -213,20 +206,16 @@ CTE_LOCALIZE_COLLECT_MAX_INPUT_BYTES = 64 << 20
 # input; bigger inputs keep Spark's distributed range sort.
 SMALL_SORT_MAX_INPUT_BYTES = 64 << 20
 
-# A registered base table whose parquet FOOTER reports at most this many
-# rows is collected once at registration (Spark's own read — exact value
-# fidelity) and re-registered as a single-partition driver-local VALUES
-# relation. Two structural wins, both scale-safe (the gate is the file's
-# actual row count — TPC-H's region/nation stay 5/25 rows at ANY scale
-# factor, which is why DuckDB evaluates them in-process for free):
-#  - exact stats: joins against the tiny dim broadcast without AQE
-#    guesswork, and no scan job is scheduled for it;
-#  - the trailing .coalesce(1) reports SinglePartition, which satisfies
-#    the ClusteredDistribution every hash aggregate / sort requires —
-#    Catalyst plans NO exchange, so a whole-statement GROUP BY over a
-#    tiny table fuses into ONE codegen span and ONE job (q09's shape:
-#    the 2-job AQE exchange round-trip was 100% scheduler floor).
-TINY_BASE_LOCALIZE_MAX_ROWS = 2000
+# The one tiny-relation cap: a relation Spark computed that holds at most
+# this many rows becomes ONE driver-local LocalRelation (_local_relation).
+# Catalyst then has exact stats (joins broadcast it without AQE guesswork)
+# and folds reads of it on the driver with zero tasks, as DuckDB evaluates
+# tiny relations in-process; the bound keeps each copy to a few MB of
+# driver memory. A base table whose parquet FOOTER reports at most this
+# many rows (TPC-H's region/nation at ANY scale factor) also keeps a
+# trailing .coalesce(1): SinglePartition satisfies the distribution every
+# hash aggregate / sort requires, so a GROUP BY over it plans NO exchange.
+LOCAL_RELATION_MAX_ROWS = 2000
 
 # Statement-size-adaptive parallelism (DuckDB sizes its pipeline's task
 # count to the data; Spark's static confs are sized for the big case).
@@ -263,6 +252,35 @@ def _backtick(tok: Token) -> str:
     return "`" + text.replace("`", "``") + "`"
 
 
+# Clause keywords that end a FROM list (a comma after one of them
+# separates select items, keys or values).
+_NOT_FROM_LIST = {
+    "SELECT", "WHERE", "GROUP", "BY", "HAVING", "ORDER", "QUALIFY",
+    "WINDOW", "LIMIT", "OFFSET", "SET", "VALUES", "RETURNING",
+}
+
+
+def _in_from_list(tokens: list[Token], i: int) -> bool:
+    """True when ``tokens[i]`` starts a FROM item: right after FROM or
+    JOIN, or after a depth-0 comma of a FROM list (``FROM a, range(3)``)."""
+    p = prev_sig(tokens, i)
+    if p < 0 or not (tokens[p].is_kw("FROM", "JOIN") or tokens[p].text == ","):
+        return False
+    depth = 0
+    for t in reversed(tokens[: p + 1]):
+        if t.kind == PUNCT and t.text in ")]}":
+            depth += 1
+        elif t.kind == PUNCT and t.text in "([{":
+            depth -= 1
+            if depth < 0:
+                return False
+        elif depth == 0 and t.is_kw("FROM", "JOIN"):
+            return True
+        elif depth == 0 and t.kind == IDENT and t.upper in _NOT_FROM_LIST:
+            return False
+    return False
+
+
 def _plan_input_bytes(df: DataFrame) -> int:
     """Catalyst's estimate of the bytes the plan's leaf relations scan
     (plan-time statistics — no job). Unknown ⇒ assume huge so DuckDB's
@@ -294,32 +312,36 @@ def _all_leaves_local(df: DataFrame) -> bool:
         return False
 
 
-def _local_relation(spark: SparkSession, df: DataFrame) -> Optional[DataFrame]:
+def _local_relation(
+    spark: SparkSession, df: DataFrame, jrows=None
+) -> Optional[DataFrame]:
     """``df``'s rows as ONE LocalRelation, or None when it holds more than
-    TINY_BASE_LOCALIZE_MAX_ROWS rows.
+    LOCAL_RELATION_MAX_ROWS rows — the only way a relation Spark computed
+    becomes driver-local.
 
-    The rows never leave the JVM: a capped collect of Spark's own rows,
-    rebuilt against the plan's own schema, so every type (DECIMAL,
-    nested, INTERVAL, TIMESTAMP) comes back exactly, with no Python
-    conversion and no SQL literal rendering. Over an all-local plan the
-    collect is a driver-side copy with zero jobs (a Union is copied branch
-    by branch: collecting it whole schedules a job). Reads of the result
-    are folded on the driver by Catalyst's ConvertToLocalRelation — zero
-    tasks — and a write over it yields a plan that collapses again."""
+    Spark's own rows are rebuilt in the JVM against the plan's schema, so
+    every type (DECIMAL, nested, INTERVAL, TIMESTAMP) comes back exactly.
+    ``jrows`` are rows the caller already collected from ``df`` in the
+    JVM; without them this does a capped collect, which over an all-local
+    plan is a driver-side copy with zero jobs (a Union is copied branch
+    by branch: collecting it whole schedules a job)."""
     jdf = df._jdf
-    plan = jdf.queryExecution().optimizedPlan()
-    parts = [jdf]
-    if plan.getClass().getSimpleName() == "Union":
-        kids = plan.children()
-        of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-        parts = [of_rows(spark._jsparkSession, kids.apply(i))
-                 for i in range(kids.size())]
-    jrows = spark._jvm.java.util.ArrayList()
-    for part in parts:
-        jrows.addAll(part.limit(
-            TINY_BASE_LOCALIZE_MAX_ROWS + 1 - jrows.size()).collectAsList())
-        if jrows.size() > TINY_BASE_LOCALIZE_MAX_ROWS:
-            return None
+    if jrows is None:
+        plan = jdf.queryExecution().optimizedPlan()
+        parts = [jdf]
+        if plan.getClass().getSimpleName() == "Union":
+            kids = plan.children()
+            of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+            parts = [of_rows(spark._jsparkSession, kids.apply(i))
+                     for i in range(kids.size())]
+        jrows = spark._jvm.java.util.ArrayList()
+        for part in parts:
+            jrows.addAll(part.limit(
+                LOCAL_RELATION_MAX_ROWS + 1 - jrows.size()).collectAsList())
+            if jrows.size() > LOCAL_RELATION_MAX_ROWS:
+                break
+    if jrows.size() > LOCAL_RELATION_MAX_ROWS:
+        return None
     return DataFrame(
         spark._jsparkSession.createDataFrame(jrows, jdf.schema()), spark
     )
@@ -332,6 +354,15 @@ def _local_relation(spark: SparkSession, df: DataFrame) -> Optional[DataFrame]:
 # — decimal(p+10,s) — which a literal can't reproduce faithfully).
 _FOLD_AGGS = {"min", "max", "sum", "avg", "count"}
 
+# Column types whose values _fold_local_subqueries renders as SQL literals
+# (introspect._sql_literal round-trips them exactly). A nested value would
+# render as its Python repr (a STRUCT as 'Row(a=1)'), so a subquery over a
+# nested column is kept.
+_LITERAL_TYPES = introspect._NUMERIC + (
+    T.StringType, T.BooleanType, T.DateType, T.TimestampType,
+    T.TimestampNTZType,
+)
+
 
 def _fold_local_subqueries(
     sql: str, local_rows: dict[str, tuple[list, T.StructType]]
@@ -339,7 +370,7 @@ def _fold_local_subqueries(
     """Fold subqueries over LOCALIZED CTEs into literals at build time.
 
     A localized CTE's result already sits in driver memory (≤
-    CTE_LOCALIZE_MAX_ROWS rows), yet Spark still schedules one job per
+    LOCAL_RELATION_MAX_ROWS rows), yet Spark still schedules one job per
     scalar subquery and a broadcast-build + probe pair per IN-subquery
     over it — ~50-80 ms of scheduler floor each on a 25-row relation
     (q22's shape: 4 of its 6 jobs). DuckDB evaluates these in-process
@@ -349,28 +380,19 @@ def _fold_local_subqueries(
     patterns, both strictly token-matched so anything more complex
     (WHERE, GROUP BY, joins, expressions) keeps the subquery:
 
-    - ``(SELECT agg(col) FROM name)`` → typed literal via the same
-      renderer the VALUES localization uses (exact round-trip).
+    - ``(SELECT agg(col) FROM name)`` → typed literal
+      (introspect._sql_literal, exact for _LITERAL_TYPES).
     - ``x IN (SELECT col FROM name)`` / ``x IN (FROM name)`` → literal
       IN-list (distinct values; a NULL keeps SQL's three-valued IN).
 
-    Only fires on names in ``local_rows``, so the fold is bounded by
-    the localization row cap at any data scale."""
+    Only fires on names in ``local_rows`` (each CTE's rows, collected
+    from its LocalRelation with zero jobs), so the fold is bounded by the
+    tiny-relation row cap at any data scale."""
     if not local_rows:
         return sql
     tokens = tokenize(sql)
     out: list[Token] = []
     i = 0
-
-    def _lit(v, dt) -> str:
-        return introspect._sql_literal(v, dt)
-
-    def _field(schema: T.StructType, col: str):
-        for f in schema.fields:
-            if f.name.lower() == col.lower():
-                return f
-        return None
-
     while i < len(tokens):
         t = tokens[i]
         # pattern: ( SELECT agg ( [DISTINCT] col|* ) FROM name )
@@ -378,7 +400,7 @@ def _fold_local_subqueries(
             close = match_forward(tokens, i, "(", ")")
             repl = None
             if close < len(tokens):
-                repl = _match_scalar_agg(tokens, i, close, local_rows, _lit, _field)
+                repl = _match_scalar_agg(tokens, i, close, local_rows)
             if repl is not None:
                 out.extend(tokenize(repl))
                 i = close + 1
@@ -394,9 +416,7 @@ def _fold_local_subqueries(
                 close = match_forward(tokens, j, "(", ")")
                 repl = None
                 if close < len(tokens):
-                    repl = _match_in_list(
-                        tokens, j, close, local_rows, _lit, _field
-                    )
+                    repl = _match_in_list(tokens, j, close, local_rows)
                 if repl is not None:
                     out.append(t)
                     out.extend(tokenize(" " + repl))
@@ -407,7 +427,17 @@ def _fold_local_subqueries(
     return render(out)
 
 
-def _match_scalar_agg(tokens, i, close, local_rows, _lit, _field):
+_lit = introspect._sql_literal
+
+
+def _field(schema: T.StructType, col: str) -> Optional[T.StructField]:
+    for f in schema.fields:
+        if f.name.lower() == col.lower():
+            return f
+    return None
+
+
+def _match_scalar_agg(tokens, i, close, local_rows):
     """Return the literal replacement for a ``(SELECT agg(col) FROM
     name)`` span, or None when the span is anything else."""
     j = next_sig(tokens, i)
@@ -452,7 +482,7 @@ def _match_scalar_agg(tokens, i, close, local_rows, _lit, _field):
     if star:
         return _lit(len(rows), T.LongType())
     fld = _field(schema, inner[0].text.strip('"'))
-    if fld is None:
+    if fld is None or not isinstance(fld.dataType, _LITERAL_TYPES):
         return None
     idx = [x.name for x in schema.fields].index(fld.name)
     vals = [r[idx] for r in rows]
@@ -507,7 +537,7 @@ def _match_scalar_agg(tokens, i, close, local_rows, _lit, _field):
     return _lit(s / len(nn), T.DoubleType())
 
 
-def _match_in_list(tokens, j, close, local_rows, _lit, _field):
+def _match_in_list(tokens, j, close, local_rows):
     """Return the literal IN-list replacement for an ``( FROM name )`` /
     ``( SELECT col FROM name )`` span, or None."""
     k = next_sig(tokens, j)
@@ -541,6 +571,8 @@ def _match_in_list(tokens, j, close, local_rows, _lit, _field):
         if fld is None:
             return None
         idx = [x.name for x in schema.fields].index(fld.name)
+    if not isinstance(fld.dataType, _LITERAL_TYPES):
+        return None
     vals = [r[idx] for r in rows]
     import math as _math
 
@@ -1131,15 +1163,14 @@ class DuckSparkSession:
     def _maybe_localize_base_table(
         self, path: str, df: DataFrame
     ) -> DataFrame:
-        """Tiny-dimension localization (see TINY_BASE_LOCALIZE_MAX_ROWS).
+        """Tiny-dimension localization (see LOCAL_RELATION_MAX_ROWS).
 
         Gate on the parquet footer's row count (a driver-side metadata
         read, no job) so large tables never pay a probe; values are
         collected through Spark's OWN parquet read and rebuilt in the JVM
         (_local_relation), so the LocalRelation is bit-identical to what
-        the scan would produce — no Python-side re-interpretation of
-        parquet types. Non-scalar columns (arrays, structs, binary) keep
-        the distributed scan.
+        the scan would produce for every column type — no Python-side
+        re-interpretation of parquet types.
 
         SNAPSHOT SEMANTICS (round-12 advice note): unlike the lazy scan
         it replaces, the LocalRelation is collected ONCE at
@@ -1149,18 +1180,13 @@ class DuckSparkSession:
         the immutable bench/test data this engine reads; in-session
         DML never goes through this path (INSERT/UPDATE/ALTER replace
         the registered DataFrame itself, so mutations stay visible)."""
-        if not all(
-            isinstance(f.dataType, self._LOCALIZABLE_TYPES)
-            for f in df.schema.fields
-        ):
-            return df
         try:
             import pyarrow.parquet as pq
 
             nrows = pq.ParquetFile(path).metadata.num_rows
         except Exception:  # noqa: BLE001 — unreadable footer: keep the scan
             return df
-        if nrows > TINY_BASE_LOCALIZE_MAX_ROWS:
+        if nrows > LOCAL_RELATION_MAX_ROWS:
             return df
         local = _local_relation(self.spark, df)
         return df if local is None else local.coalesce(1)
@@ -1419,7 +1445,6 @@ class DuckSparkSession:
                 # module-level planner tunables (tests/users may tweak)
                 SMALL_SORT_MAX_INPUT_BYTES,
                 CTE_MATERIALIZE_MIN_INPUT_BYTES,
-                CTE_LOCALIZE_MAX_ROWS,
                 # active materialized-CTE overrides: byte-identical text
                 # resolves DIFFERENTLY under different override bindings
                 # (e.g. two statements whose main query is the same
@@ -1591,16 +1616,11 @@ class DuckSparkSession:
                 )
             bind(acc)
             out = self._query(final_sql)
-            if acc.count() <= 100_000:
-                # the fixpoint is driver-iteration bounded and small —
-                # collapse to a LocalRelation so the checkpoint blocks
-                # can be GC-reclaimed (ContextCleaner) immediately
-                out = introspect.local_df(
-                    self.spark,
-                    [tuple(r) for r in out.collect()],
-                    out.schema,
-                )
-            return out
+            # a tiny result collapses to a LocalRelation, so the
+            # checkpoint blocks can be GC-reclaimed (ContextCleaner)
+            # immediately; a larger one keeps its lazy plan
+            local = _local_relation(self.spark, out)
+            return out if local is None else local
         finally:
             if had:
                 self.register(key, saved)
@@ -2345,19 +2365,15 @@ class DuckSparkSession:
                 if not is_mat:
                     if not _all_leaves_local(df):
                         continue
-                    local = self._try_localize_cte(
-                        df, 0, reducing=False, all_local=True
-                    )
+                    # the body folded to local relations: the capped copy
+                    # starts no job, and the cap applies BEFORE the copy,
+                    # so a join of two row-capped local CTEs (2000² rows
+                    # worst case) never lands in driver memory whole
+                    local = _local_relation(self.spark, df)
                     if local is None:
                         continue
-                    df, rows = local
-                    local_rows[name_l] = (rows, df.schema)
                     mat_names.add(name_l)
-                    view = self._fresh_view(df)
-                    self._cte_overrides[name_l] = view
-                    added.append(name_l)
-                    continue
-                if (
+                elif (
                     not cte["forced"]
                     and name_l not in reducing
                     and _plan_input_bytes(df) < CTE_MATERIALIZE_MIN_INPUT_BYTES
@@ -2367,22 +2383,20 @@ class DuckSparkSession:
                     # them; recomputing a few MB beats the lost pushdown
                     mat_names.discard(name_l)
                     continue
-                # input estimate must come from the raw plan: after
-                # persist() the leaf is the not-yet-materialized
-                # InMemoryRelation, whose stats read as unknown/huge
-                local = self._try_localize_cte(
-                    df,
-                    _plan_input_bytes(df),
-                    reducing=name_l in reducing,
-                )
+                else:
+                    # input estimate must come from the raw plan: after
+                    # persist() the leaf is the not-yet-materialized
+                    # InMemoryRelation, whose stats read as unknown/huge
+                    local = self._try_localize_cte(
+                        df, _plan_input_bytes(df), reducing=name_l in reducing
+                    )
                 if local is not None:
-                    df, rows = local
-                    local_rows[name_l] = (rows, df.schema)
+                    df = local
+                    local_rows[name_l] = (df.collect(), df.schema)
                 else:
                     df = df.persist(StorageLevel.MEMORY_AND_DISK)
                     self._cte_persisted.append(df)
-                view = self._fresh_view(df)
-                self._cte_overrides[name_l] = view
+                self._cte_overrides[name_l] = self._fresh_view(df)
                 added.append(name_l)
             if not added:
                 return None
@@ -2400,36 +2414,24 @@ class DuckSparkSession:
             for n in added:
                 self._cte_overrides.pop(n, None)
 
-    _LOCALIZABLE_TYPES = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
-        T.DoubleType, T.DecimalType, T.StringType, T.BooleanType,
-        T.DateType, T.TimestampType, T.TimestampNTZType,
-    )
-
     def _try_localize_cte(
         self,
         df: DataFrame,
         input_bytes: int,
         reducing: bool = False,
-        all_local: bool = False,
-    ) -> Optional[tuple[DataFrame, list]]:
-        """Collapse a small materialized-CTE result to a driver-built
-        VALUES relation (LocalTableScan).
+    ) -> Optional[DataFrame]:
+        """Collapse a small materialized-CTE result to ONE LocalRelation
+        (_local_relation), or None when it is over the row cap.
 
         A persisted view hides its cardinality from the planner until AQE
         observes the exchange at runtime, so a 25-row aggregate CTE flows
         into sort-merge joins and per-subquery shuffle jobs — 8 jobs for
         dev.json:284's shape on local[*]. Once the result is known small
-        (≤ CTE_LOCALIZE_MAX_ROWS after one evaluation that also primes
+        (≤ LOCAL_RELATION_MAX_ROWS after one evaluation that also primes
         the cache for the fallback path), a LocalTableScan gives Catalyst
         exact stats: semi/inner joins broadcast it, scalar subqueries
-        over it run exchange-free. Only scalar column types render as
-        VALUES literals; anything else keeps the distributed view."""
-        if not all(
-            isinstance(f.dataType, self._LOCALIZABLE_TYPES)
-            for f in df.schema.fields
-        ):
-            return None
+        over it run exchange-free. A body that already folded to local
+        relations takes _local_relation's own copy instead (no job)."""
         # Probe cost control: the coalesced take evaluates the whole body
         # in ONE job (map side stays parallel; only the final merge is a
         # single task) — take() alone runs a 4-job incremental limit
@@ -2439,26 +2441,15 @@ class DuckSparkSession:
         # lazy persisted view + AQE runtime stats pick join strategies.
         if input_bytes > CTE_LOCALIZE_PROBE_MAX_INPUT_BYTES:
             return None
-        if all_local:
-            # plan already folded to a LocalRelation: executeCollect is a
-            # driver array copy — zero scheduled jobs (measured). The
-            # limit caps the copy BEFORE it happens (Limit over a
-            # LocalRelation folds at optimize time): a body that JOINS
-            # two row-capped local CTEs can still multiply rows (2000²
-            # worst case), and the cap check must not first materialize
-            # that product in driver memory.
-            rows = df.limit(CTE_LOCALIZE_MAX_ROWS + 1).collect()
-        elif reducing and input_bytes <= CTE_LOCALIZE_COLLECT_MAX_INPUT_BYTES:
+        if reducing and input_bytes <= CTE_LOCALIZE_COLLECT_MAX_INPUT_BYTES:
             # reducing body over small input: one fully-parallel collect
             # beats take()'s incremental-limit scheduler round-trips by
             # ~5x; the uncapped fetch is bounded by one-row-per-group
-            rows = df.collect()
+            jrows = df._jdf.collectAsList()
         else:
-            rows = df.coalesce(1).take(CTE_LOCALIZE_MAX_ROWS + 1)
-        if len(rows) > CTE_LOCALIZE_MAX_ROWS:
-            return None
-        tuples = [tuple(r) for r in rows]
-        return introspect.local_df(self.spark, tuples, df.schema), tuples
+            jrows = df._jdf.coalesce(1).limit(
+                LOCAL_RELATION_MAX_ROWS + 1).collectAsList()
+        return _local_relation(self.spark, df, jrows)
 
     def _union_by_name(self, sql: str) -> Optional[DataFrame]:
         """DuckDB ``A UNION [ALL] BY NAME B``: match columns by name, NULL-
@@ -2728,12 +2719,9 @@ class DuckSparkSession:
                 # end-exclusive; both empty when bounds face away from the
                 # step — see rewrites._series_sequence_sql). Select-position
                 # occurrences are handled by the rename pass instead.
-                p = prev_sig(tokens, i)
                 o = next_sig(tokens, i)
                 if (
-                    p >= 0
-                    and tokens[p].kind == IDENT
-                    and tokens[p].upper in ("FROM", "JOIN")
+                    _in_from_list(tokens, i)
                     and o < len(tokens)
                     and tokens[o].text == "("
                 ):
@@ -2755,14 +2743,11 @@ class DuckSparkSession:
             if t.kind == IDENT and t.upper == "REPEAT":
                 # FROM repeat(v, n): n copies of the scalar; DuckDB names
                 # the column after the rendered value expression. Only in
-                # FROM/JOIN position — scalar repeat(s, n) stays a string
+                # FROM position — scalar repeat(s, n) stays a string
                 # function.
-                p = prev_sig(tokens, i)
                 o = next_sig(tokens, i)
                 if (
-                    p >= 0
-                    and tokens[p].kind == IDENT
-                    and tokens[p].upper in ("FROM", "JOIN")
+                    _in_from_list(tokens, i)
                     and o < len(tokens)
                     and tokens[o].text == "("
                 ):
@@ -2802,19 +2787,13 @@ class DuckSparkSession:
             ):
                 # introspection table functions: driver-built relations
                 # (footer/catalog reads — zero Spark jobs). GLOB only in
-                # FROM/JOIN position: as an operator it stays a pattern
-                # match (rewrites.pass_regex_operators).
-                p = prev_sig(tokens, i)
-                in_from = (
-                    p >= 0
-                    and tokens[p].kind == IDENT
-                    and tokens[p].upper in ("FROM", "JOIN")
-                )
+                # FROM position: as an operator it stays a pattern match
+                # (rewrites.pass_regex_operators).
                 o = next_sig(tokens, i)
                 if (
                     o < len(tokens)
                     and tokens[o].text == "("
-                    and (in_from or t.upper != "GLOB")
+                    and (t.upper != "GLOB" or _in_from_list(tokens, i))
                 ):
                     c = match_forward(tokens, o, "(", ")")
                     arg_sig = [
@@ -4102,16 +4081,19 @@ class DuckSparkSession:
             return
         rows_t, rows_c = [], []
         for name, df in self._tables.items():
-            db, _, tbl = name.rpartition(".")
-            db = db or "memory"
+            tbl = name.rpartition(".")[2]
             rows_t.append(("memory", "main", tbl, "BASE TABLE"))
+            # type text and nullability as DESCRIBE gives them: declared
+            # ENUM / fixed-size array spellings, 'NO' only for declared
+            # NOT NULL and PRIMARY KEY columns
+            fixed = self._fixed_arrays.get(name)
+            overrides = self._type_overrides.get(name)
+            notnull = self._notnull_cols.get(name, set()) | self._pk_cols(name)
             for pos, f in enumerate(df.schema.fields, start=1):
-                from .types import spark_type_to_duckdb
-
                 rows_c.append(
                     ("memory", "main", tbl, f.name, pos,
-                     spark_type_to_duckdb(f.dataType),
-                     "YES" if f.nullable else "NO")
+                     introspect._type_name(f, fixed, overrides),
+                     "NO" if f.name.lower() in notnull else "YES")
                 )
         st = T.StructType([
             T.StructField("table_catalog", T.StringType()),
@@ -5818,6 +5800,20 @@ class DuckSparkSession:
             return self._returning_result(touched, returning, alias)
         return self._count_df(-1)
 
+    def _pin_rowids(self, df: DataFrame) -> DataFrame:
+        """``df`` with a frozen ``__rid`` tag for the rowid join of
+        UPDATE..FROM / DELETE..USING: the plan is scanned more than once,
+        and a re-evaluated monotonically_increasing_id can re-number rows
+        and corrupt the join-back. A tiny all-local target is pinned as
+        one LocalRelation, so the table written from it collapses again;
+        any other takes an eager localCheckpoint."""
+        tagged = df.withColumn("__rid", F.monotonically_increasing_id())
+        if _all_leaves_local(df):
+            local = _local_relation(self.spark, tagged)
+            if local is not None:
+                return local
+        return tagged.localCheckpoint(eager=True)
+
     def _update_from(
         self,
         name: str,
@@ -5837,15 +5833,7 @@ class DuckSparkSession:
         synthetic rowid; the from-list side broadcasts when small."""
         key, df = self._dml_target(name)
         assigns = parse_set_list(set_text, df.columns)
-        # the rowid tag MUST be pinned: the lazy plan is scanned twice
-        # (directly and through the match view) and again by later
-        # statements — re-evaluated monotonically_increasing_id can
-        # re-number rows differently and corrupt the join-back. An eager
-        # localCheckpoint freezes the numbering (DuckDB materializes
-        # DML results too; a cluster deployment would use Delta MERGE).
-        tagged = df.withColumn(
-            "__rid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
+        tagged = self._pin_rowids(df)
         view = self._fresh_view(tagged)
         alias = name.split(".")[-1]
         types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -5903,10 +5891,8 @@ class DuckSparkSession:
         if "USING" in cl:
             # drop target rows with ANY match in the using-list under the
             # predicate (anti-join on a synthetic rowid — never multiplies
-            # the kept rows); pinned rowids: see _update_from
-            tagged = df.withColumn(
-                "__rid", F.monotonically_increasing_id()
-            ).localCheckpoint(eager=True)
+            # the kept rows)
+            tagged = self._pin_rowids(df)
             view = self._fresh_view(tagged)
             rids = self._query(
                 f"SELECT DISTINCT \"{alias}\".__rid AS __rid "

@@ -32,7 +32,9 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .introspect import local_df
 from .operators import asof as asof_ops
 from .operators import dedup, multimodal, packing, sampling, similarity
 from .operators import sketches
@@ -4131,7 +4133,8 @@ def op_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_accuracy table; the sweep is a 4-row broadcast cross join +
     one aggregate."""
     acc = dedup.minhash_accuracy(_docs(spark, sf_dir))
-    th = spark.createDataFrame([(0.5,), (0.7,), (0.8,), (0.9,)], "t double")
+    th = local_df(spark, [(0.5,), (0.7,), (0.8,), (0.9,)],
+                  T.StructType().add("t", T.DoubleType()))
     j = acc.crossJoin(F.broadcast(th))
     est = F.when(F.col("est_j") >= F.col("t"), 1).otherwise(0)
     exact = F.when(F.col("exact_j") >= F.col("t"), 1).otherwise(0)

@@ -1,18 +1,17 @@
 #!/usr/bin/env python
-"""Round-13 plan-smell sweep: build every registry entry's DataFrame at
-$SPARK_GRAFT_SF_DIR (default sf0.01) and scan the formatted physical
-plan for the guide's red flags:
+"""Plan-smell sweep: build every registry entry's DataFrame at
+$SPARK_GRAFT_SF_DIR (default sf0.01) and search its formatted physical
+plan for two strings:
 
-  - BatchEvalPython            (row-at-a-time Python UDF, guide §4)
-  - CartesianProduct / BroadcastNestedLoopJoin with a non-trivial build
-                               (accidental cross join, guide §3)
-  - parquet scans with empty PushedFilters next to a Filter node
-    directly above them (pushdown lost, guide §6) — reported, not
-    asserted: some shapes legitimately filter on derived columns.
+  - BatchEvalPython   (row-at-a-time Python UDF)
+  - CartesianProduct  (accidental cross join)
 
-Prints one JSON line {name: [smells...]} for entries with findings,
-plus a summary count. Ops whose build needs streaming context are
-skipped (reported as 'skip').
+Prints one JSON line: the SF dir, the count of clean entries, and
+{name: [smells...]} for entries with findings. An entry whose build
+raises (e.g. one that needs a streaming context) is reported as
+``build-error: <message>``.
+
+    python harness/r13_smell_sweep.py
 """
 
 from __future__ import annotations
@@ -33,7 +32,7 @@ def main() -> None:
     spark = build_spark(app_name="r13-smell-sweep", cpus=8)
     queries = workload.build_queries()
     findings: dict[str, list[str]] = {}
-    n_ok = n_skip = 0
+    n_ok = 0
     for name, fn in queries.items():
         try:
             df = fn(spark, SF_DIR)
@@ -58,7 +57,6 @@ def main() -> None:
             {
                 "sf_dir": SF_DIR,
                 "clean": n_ok,
-                "skipped": n_skip,
                 "findings": findings,
             }
         )

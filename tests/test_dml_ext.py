@@ -1119,7 +1119,8 @@ _TINY_TYPED = [
 def test_tiny_table_types_survive_collapse(engine, duck):
     """Every column type comes back from the collapsed image exactly:
     values match DuckDB through the same DML sequence, and DESCRIBE and
-    information_schema.columns read as before the collapse existed."""
+    information_schema.columns read as DuckDB's (declared ENUM spelling,
+    'NO' for the NOT NULL column)."""
     for s in _TINY_TYPED:
         engine.execute(s)
         duck.execute(s)
@@ -1136,30 +1137,23 @@ def test_tiny_table_types_survive_collapse(engine, duck):
     assert [tuple(r) for r in engine.execute("DESCRIBE tt").collect()] == (
         duck.execute("DESCRIBE tt").fetchall()
     )
-    # information_schema keeps its own (pre-existing) spelling: ENUM reads
-    # VARCHAR and nullability comes from the Spark schema
-    cols = engine.execute(
+    q = (
         "SELECT column_name, ordinal_position, data_type, is_nullable"
         " FROM information_schema.columns WHERE table_name = 'tt'"
         " ORDER BY ordinal_position"
-    ).collect()
-    assert [tuple(r) for r in cols] == [
-        ("id", 1, "INTEGER", "YES"), ("d", 2, "DECIMAL(18,3)", "YES"),
-        ("s", 3, "VARCHAR", "YES"), ("e", 4, "VARCHAR", "YES"),
-        ("l", 5, "INTEGER[]", "YES"),
-        ("st", 6, "STRUCT(a INTEGER, b VARCHAR)", "YES"),
-        ("m", 7, "MAP(VARCHAR, INTEGER)", "YES"), ("ts", 8, "TIMESTAMP", "YES"),
-        ("dt", 9, "DATE", "YES"), ("z", 10, "INTEGER", "YES"),
-    ]
+    )
+    assert [tuple(r) for r in engine.execute(q).collect()] == (
+        duck.execute(q).fetchall()
+    )
 
 
 def test_tiny_table_cap_keeps_lazy_path(engine, duck):
-    """An image above TINY_BASE_LOCALIZE_MAX_ROWS rows keeps the lazy plan
+    """An image above LOCAL_RELATION_MAX_ROWS rows keeps the lazy plan
     and its every-16th-write checkpoint, also when all of its leaves are
     driver-local, and stays correct across 16+ writes."""
-    from duckdb_nsql_spark.session import TINY_BASE_LOCALIZE_MAX_ROWS
+    from duckdb_nsql_spark.session import LOCAL_RELATION_MAX_ROWS
 
-    n = TINY_BASE_LOCALIZE_MAX_ROWS + 1
+    n = LOCAL_RELATION_MAX_ROWS + 1
     stmts = [
         "CREATE TABLE tbig (i BIGINT)",
         f"INSERT INTO tbig SELECT * FROM range({n})",
@@ -1181,6 +1175,154 @@ def test_tiny_table_cap_keeps_lazy_path(engine, duck):
         assert [tuple(r) for r in engine.execute(q).collect()] == (
             duck.execute(q).fetchall()
         ), t
+
+
+def _leaf_kinds(df):
+    leaves = _optimized_plan(df).collectLeaves()
+    return sorted(
+        leaves.apply(i).getClass().getSimpleName()
+        for i in range(leaves.size())
+    )
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "database"])
+def test_information_schema_columns_match_duckdb(spark, tmp_path, durable):
+    """information_schema.columns spells types and nullability as
+    DuckDB does: fixed-size arrays, declared ENUMs, and 'NO' for NOT NULL
+    and PRIMARY KEY columns."""
+    eng = _dml_session(spark, durable, tmp_path)
+    dk = duckdb.connect()
+    for s in (
+        "CREATE TYPE imood AS ENUM ('sad', 'ok', 'happy')",
+        "CREATE TABLE isc (id INTEGER PRIMARY KEY, f FLOAT[3],"
+        " s VARCHAR NOT NULL, e imood, l INTEGER[], d DECIMAL(9,2))",
+    ):
+        eng.execute(s)
+        dk.execute(s)
+    q = (
+        "SELECT column_name, ordinal_position, data_type, is_nullable"
+        " FROM information_schema.columns WHERE table_name = 'isc'"
+        " ORDER BY ordinal_position"
+    )
+    assert [tuple(r) for r in eng.execute(q).collect()] == (
+        dk.execute(q).fetchall()
+    )
+
+
+def test_nested_type_cte_localizes(engine, duck):
+    """A materialized CTE with ARRAY, STRUCT and MAP columns collapses to
+    one LocalRelation like a scalar one, and an IN-subquery over its
+    STRUCT column is kept as a subquery, not folded to literals."""
+    s = "CREATE TABLE cn AS SELECT range AS id FROM range(4)"
+    engine.execute(s)
+    duck.execute(s)
+    q = (
+        "WITH c AS MATERIALIZED (SELECT id, [id, id + 1] AS arr,"
+        " {'a': id, 'b': 'x'} AS st, MAP {'k': id * 10} AS m FROM cn)"
+        " SELECT x.id, x.arr, y.st.a, y.st.b, map_extract(y.m, 'k')"
+        " FROM c x JOIN c y USING (id)"
+        " WHERE x.st IN (SELECT st FROM c) AND x.id > 0 ORDER BY x.id"
+    )
+    df = engine.execute(q)
+    assert [tuple(r) for r in df.collect()] == duck.execute(q).fetchall()
+    assert engine._cte_persisted == []
+    assert set(_leaf_kinds(df)) == {"LocalRelation"}
+    # a folded struct literal would read CAST('Row(a=1, ..)' AS struct<..>)
+    assert "Row(" not in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_recursive_cte_result_uses_tiny_relation_cap(engine, duck):
+    """A recursive-CTE result over LOCAL_RELATION_MAX_ROWS rows keeps its
+    lazy plan (it is not pulled to the driver); one at or below the cap
+    is ONE LocalRelation. Both match DuckDB."""
+    s = "CREATE TABLE rbig AS SELECT range AS id FROM range(1000)"
+    engine.execute(s)
+    duck.execute(s)
+    rec = (
+        "WITH RECURSIVE r(x) AS (SELECT 0 UNION SELECT x + 1 FROM r"
+        " WHERE x < 3) "
+    )
+    big = engine.execute(rec + "SELECT x, id FROM r, rbig")
+    assert "LogicalRDD" in _leaf_kinds(big)
+    assert sorted(tuple(r) for r in big.collect()) == sorted(
+        duck.execute(rec + "SELECT x, id FROM r, rbig").fetchall()
+    )
+    q = rec + (
+        "SELECT x, id, [x, id] AS l FROM r, rbig WHERE id < 5 ORDER BY x, id"
+    )
+    small = engine.execute(q)
+    assert _optimized_plan(small).getClass().getSimpleName() == "LocalRelation"
+    assert [tuple(r) for r in small.collect()] == duck.execute(q).fetchall()
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "database"])
+def test_join_dml_keeps_tiny_tables_local(spark, tmp_path, durable):
+    """UPDATE..FROM and DELETE..USING pin their rowids without leaving the
+    tiny-table path: in memory the table they write is ONE LocalRelation
+    and the next INSERT VALUES starts no Spark job. Results match DuckDB
+    in memory and with ``database=``."""
+    eng = _dml_session(spark, durable, tmp_path)
+    dk = duckdb.connect()
+    for s in (
+        "CREATE TABLE ja (id INTEGER, v INTEGER)",
+        "INSERT INTO ja VALUES (1, 10), (2, 20), (3, 30)",
+        "CREATE TABLE jb (id INTEGER, v INTEGER)",
+        "INSERT INTO jb VALUES (1, 100), (3, 300), (4, 400)",
+    ):
+        eng.execute(s)
+        dk.execute(s)
+    for dml, table, insert in (
+        ("UPDATE ja SET v = jb.v + ja.v FROM jb WHERE ja.id = jb.id", "ja",
+         "INSERT INTO ja VALUES (5, 50)"),
+        ("DELETE FROM jb USING ja WHERE ja.id = jb.id AND ja.v > 200", "jb",
+         "INSERT INTO jb VALUES (6, 600)"),
+    ):
+        eng.execute(dml)
+        dk.execute(dml)
+        if not durable:
+            plan = _optimized_plan(eng.table(table))
+            assert plan.getClass().getSimpleName() == "LocalRelation", (
+                dml, plan.toString()
+            )
+        _, jobs = _jobs_started(eng.spark, lambda: eng.execute(insert))
+        dk.execute(insert)
+        if not durable:
+            assert jobs == [], f"{insert} after {dml} started jobs {jobs}"
+        for t in ("ja", "jb"):
+            q = f"SELECT * FROM {t}"
+            assert _rows(eng.execute(q)) == _duck_rows(dk, q), (dml, t)
+
+
+def test_cte_localization_job_counts(loaded_engine):
+    """Each way a CTE result is localized keeps its job count: 0 for a
+    body that folded to local relations (_local_relation's driver-side
+    copy), 1 for the capped probe and 1 for the uncapped collect of a
+    reducing body. Reading the rows back from the LocalRelation (for
+    subquery folding) starts none."""
+    from duckdb_nsql_spark.session import _local_relation, _plan_input_bytes
+
+    eng = loaded_engine
+    for sql, reducing, want in (
+        ("SELECT * FROM (VALUES (1, 'a'), (2, 'b')) t(x, y)", None, 0),
+        ("SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 100",
+         False, 1),
+        ("SELECT o_custkey, sum(o_totalprice) AS s FROM orders"
+         " GROUP BY o_custkey", True, 1),
+    ):
+        df = eng.execute(sql)
+        nbytes = _plan_input_bytes(df)
+        local, jobs = _jobs_started(
+            eng.spark,
+            lambda: _local_relation(eng.spark, df) if reducing is None
+            else eng._try_localize_cte(df, nbytes, reducing=reducing),
+        )
+        assert len(jobs) == want, sql
+        assert _optimized_plan(local).getClass().getSimpleName() == (
+            "LocalRelation"
+        )
+        rows, jobs = _jobs_started(eng.spark, local.collect)
+        assert jobs == [], sql
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, df.collect()))
 
 
 @pytest.mark.parametrize("durable", [False, True], ids=["memory", "database"])

@@ -677,9 +677,9 @@ def test_cte_materialization_repeated_ref(loaded_engine):
     rows = df.collect()
     assert len(rows) == 5
     assert rows[0]["tot"] >= rows[-1]["tot"]
-    # `agg`'s result is small (≤ CTE_LOCALIZE_MAX_ROWS custkeys at test
-    # SF), so the materialized CTE collapses to a driver-built VALUES
-    # relation: LocalTableScan in the plan, nothing left persisted
+    # `agg`'s result is small (≤ LOCAL_RELATION_MAX_ROWS custkeys at test
+    # SF), so the materialized CTE collapses to one LocalRelation:
+    # LocalTableScan in the plan, nothing left persisted
     assert len(loaded_engine._cte_persisted) == 0
     assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
     # `agg` must not leak into the catalog either way
@@ -705,7 +705,7 @@ def test_cte_materialization_fires_above_size_gate(loaded_engine, monkeypatch):
     monkeypatch.setattr(sess, "CTE_MATERIALIZE_MIN_INPUT_BYTES", 0)
     # results over the row cap keep the distributed persisted view — the
     # path a fact-table CTE takes at cluster scale
-    monkeypatch.setattr(sess, "CTE_LOCALIZE_MAX_ROWS", 0)
+    monkeypatch.setattr(sess, "LOCAL_RELATION_MAX_ROWS", 0)
     df = loaded_engine.execute(
         """
         WITH agg (k, tot) AS (
@@ -1051,6 +1051,31 @@ def test_asof_join_sql(loaded_engine):
     ]:
         with _pytest.raises(ValueError, match="ASOF"):
             loaded_engine.execute(bad)
+
+
+def test_table_functions_after_from_list_comma(engine):
+    """range / generate_series / repeat are table functions after FROM,
+    JOIN or a comma of a FROM list, and range(n) in the select list stays
+    the scalar list function — compared with DuckDB."""
+    import duckdb
+
+    con = duckdb.connect()
+    for q in (
+        "SELECT count(*) FROM (VALUES (1), (2)) v(x), range(3)",
+        "SELECT count(*) FROM range(3), (VALUES (1), (2)) v(x)",
+        "SELECT sum(x * i) FROM (VALUES (1), (2)) v(x), range(3) t(i)",
+        "SELECT sum(x * generate_series) FROM (VALUES (1), (2)) v(x),"
+        " generate_series(1, 3)",
+        "SELECT count(*) FROM (VALUES (1), (2)) v(x) JOIN range(2) r"
+        " ON true, generate_series(1, 3), repeat('a', 2)",
+        "SELECT x, range(x) AS l, i FROM (VALUES (1), (2)) v(x),"
+        " range(2) t(i) ORDER BY x, i",
+        "SELECT x, range(x) AS l FROM (VALUES (2), (3)) v(x)"
+        " WHERE x IN (1, 3)",
+    ):
+        mine = [tuple(r) for r in engine.execute(q).collect()]
+        assert mine == con.execute(q).fetchall(), q
+    con.close()
 
 
 def test_introspection_table_functions_match_duckdb(loaded_engine, sf_dir):

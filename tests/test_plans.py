@@ -239,7 +239,7 @@ def test_ivf_index_partition_prunes(loaded_engine, spark, tmp_path):
 
 def test_q22_cte_localizes_and_job_budget(spark):
     # q22's repeated reducing CTE (per_nation) must collapse to a
-    # LocalTableScan (driver-built VALUES relation), and a full execution
+    # LocalTableScan (one LocalRelation), and a full execution
     # must stay within a fixed job budget: 1 parallel collect() for the
     # CTE body + the final statement's scalar-subquery and fetch jobs.
     # Regression guard for the r4->r5 driver-bench regression (0.42s ->
