@@ -34,6 +34,7 @@ from .tokenizer import (
     STRING,
     WS,
     Token,
+    from_item_starts,
     match_backward,
     match_forward,
     next_sig,
@@ -7016,43 +7017,17 @@ def pass_lateral_generators(tokens: list[Token]) -> list[Token]:
     LATERAL keyword there; prepending it is also correct for the
     uncorrelated case."""
     out = list(tokens)
-    from_depth = None  # depth of the FROM list we are inside, else None
-    saved = []  # from_depth state per open paren: a nested group (e.g. a
-    # parenthesized derived table's inner FROM) must not clobber the
-    # enclosing FROM list's state — restore on close
-    depth = 0
-    i = 0
-    while i < len(out):
-        t = out[i]
-        if t.kind == PUNCT and t.text in "([{":
-            saved.append(from_depth)
-            depth += 1
-        elif t.kind == PUNCT and t.text in ")]}":
-            depth -= 1
-            from_depth = saved.pop() if saved else None
-        elif t.kind == IDENT and t.upper == "FROM":
-            from_depth = depth
-        elif t.kind == IDENT and t.upper in (
-            "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "SELECT",
-            "WINDOW", "QUALIFY", "UNION", "INTERSECT", "EXCEPT", "ON",
-        ) and from_depth == depth:
-            from_depth = None
-        elif (
-            from_depth == depth
-            and t.kind == PUNCT
-            and t.text == ","
+    # right to left: an insertion leaves the earlier starts in place
+    for n in reversed(from_item_starts(out)):
+        if (
+            n < len(out)
+            and out[n].kind == IDENT
+            and out[n].upper in _GENERATOR_FNS
+            and out[prev_sig(out, n)].text == ","
         ):
-            n = next_sig(out, i)
-            if (
-                n < len(out)
-                and out[n].kind == IDENT
-                and out[n].upper in _GENERATOR_FNS
-            ):
-                o = next_sig(out, n)
-                if o < len(out) and out[o].text == "(":
-                    out[i + 1 : i + 1] = [_ws(), _ident("LATERAL")]
-                    i += 2
-        i += 1
+            o = next_sig(out, n)
+            if o < len(out) and out[o].text == "(":
+                out[n:n] = [_ident("LATERAL"), _ws()]
     return out
 
 

@@ -168,6 +168,44 @@ def split_args(tokens: list[Token], lo: int, hi: int) -> list[tuple[int, int]]:
     return spans
 
 
+# Clause keywords that end a FROM list: a depth-0 comma after one of them
+# separates select items, keys, values or assignments, not FROM items.
+FROM_LIST_END = frozenset({
+    "SELECT", "WHERE", "GROUP", "HAVING", "ORDER", "QUALIFY", "WINDOW",
+    "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT", "SET", "VALUES",
+    "RETURNING",
+})
+
+
+def from_item_starts(tokens: list[Token]) -> list[int]:
+    """Indices of the significant tokens that begin a FROM item: the one
+    right after FROM or JOIN, and the one after a depth-0 comma of a FROM
+    list (``FROM a, range(3)``, also after ``JOIN b ON ..``). Each bracket
+    group keeps its own state, so a derived table's inner clauses do not
+    end the enclosing list, and ``IS [NOT] DISTINCT FROM`` is an operator,
+    not a FROM clause."""
+    starts: list[int] = []
+    in_list = False
+    saved: list[bool] = []
+    for i, t in enumerate(tokens):
+        if t.kind == PUNCT and t.text in "([{":
+            saved.append(in_list)
+            in_list = False
+        elif t.kind == PUNCT and t.text in ")]}":
+            in_list = saved.pop() if saved else False
+        elif t.kind == IDENT and t.upper in ("FROM", "JOIN"):
+            p = prev_sig(tokens, i)
+            if t.upper == "FROM" and p >= 0 and tokens[p].is_kw("DISTINCT"):
+                continue
+            in_list = True
+            starts.append(next_sig(tokens, i))
+        elif t.kind == IDENT and t.upper in FROM_LIST_END:
+            in_list = False
+        elif in_list and t.kind == PUNCT and t.text == ",":
+            starts.append(next_sig(tokens, i))
+    return starts
+
+
 def primary_start(tokens: list[Token], i: int) -> int:
     """Start index of the primary expression ending just before token i.
 

@@ -40,6 +40,7 @@ from .frontend.tokenizer import (
     STRING,
     WS,
     Token,
+    from_item_starts,
     match_forward,
     next_sig,
     prev_sig,
@@ -252,35 +253,6 @@ def _backtick(tok: Token) -> str:
     return "`" + text.replace("`", "``") + "`"
 
 
-# Clause keywords that end a FROM list (a comma after one of them
-# separates select items, keys or values).
-_NOT_FROM_LIST = {
-    "SELECT", "WHERE", "GROUP", "BY", "HAVING", "ORDER", "QUALIFY",
-    "WINDOW", "LIMIT", "OFFSET", "SET", "VALUES", "RETURNING",
-}
-
-
-def _in_from_list(tokens: list[Token], i: int) -> bool:
-    """True when ``tokens[i]`` starts a FROM item: right after FROM or
-    JOIN, or after a depth-0 comma of a FROM list (``FROM a, range(3)``)."""
-    p = prev_sig(tokens, i)
-    if p < 0 or not (tokens[p].is_kw("FROM", "JOIN") or tokens[p].text == ","):
-        return False
-    depth = 0
-    for t in reversed(tokens[: p + 1]):
-        if t.kind == PUNCT and t.text in ")]}":
-            depth += 1
-        elif t.kind == PUNCT and t.text in "([{":
-            depth -= 1
-            if depth < 0:
-                return False
-        elif depth == 0 and t.is_kw("FROM", "JOIN"):
-            return True
-        elif depth == 0 and t.kind == IDENT and t.upper in _NOT_FROM_LIST:
-            return False
-    return False
-
-
 def _plan_input_bytes(df: DataFrame) -> int:
     """Catalyst's estimate of the bytes the plan's leaf relations scan
     (plan-time statistics — no job). Unknown ⇒ assume huge so DuckDB's
@@ -312,38 +284,42 @@ def _all_leaves_local(df: DataFrame) -> bool:
         return False
 
 
-def _local_relation(
-    spark: SparkSession, df: DataFrame, jrows=None
-) -> Optional[DataFrame]:
-    """``df``'s rows as ONE LocalRelation, or None when it holds more than
-    LOCAL_RELATION_MAX_ROWS rows — the only way a relation Spark computed
-    becomes driver-local.
-
-    Spark's own rows are rebuilt in the JVM against the plan's schema, so
-    every type (DECIMAL, nested, INTERVAL, TIMESTAMP) comes back exactly.
-    ``jrows`` are rows the caller already collected from ``df`` in the
-    JVM; without them this does a capped collect, which over an all-local
-    plan is a driver-side copy with zero jobs (a Union is copied branch
-    by branch: collecting it whole schedules a job)."""
+def _capped_rows(spark: SparkSession, df: DataFrame):
+    """At most LOCAL_RELATION_MAX_ROWS + 1 of ``df``'s rows, collected in
+    the JVM (a java.util.List of Spark rows). Over an all-local plan this
+    is a driver-side copy with zero jobs; a Union is copied branch by
+    branch, because collecting it whole schedules a job."""
     jdf = df._jdf
-    if jrows is None:
-        plan = jdf.queryExecution().optimizedPlan()
-        parts = [jdf]
-        if plan.getClass().getSimpleName() == "Union":
-            kids = plan.children()
-            of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-            parts = [of_rows(spark._jsparkSession, kids.apply(i))
-                     for i in range(kids.size())]
-        jrows = spark._jvm.java.util.ArrayList()
-        for part in parts:
-            jrows.addAll(part.limit(
-                LOCAL_RELATION_MAX_ROWS + 1 - jrows.size()).collectAsList())
-            if jrows.size() > LOCAL_RELATION_MAX_ROWS:
-                break
+    plan = jdf.queryExecution().optimizedPlan()
+    parts = [jdf]
+    if plan.getClass().getSimpleName() == "Union":
+        kids = plan.children()
+        of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+        parts = [of_rows(spark._jsparkSession, kids.apply(i))
+                 for i in range(kids.size())]
+    jrows = spark._jvm.java.util.ArrayList()
+    for part in parts:
+        jrows.addAll(part.limit(
+            LOCAL_RELATION_MAX_ROWS + 1 - jrows.size()).collectAsList())
+        if jrows.size() > LOCAL_RELATION_MAX_ROWS:
+            break
+    return jrows
+
+
+def _local_relation(
+    spark: SparkSession, df: DataFrame, jrows
+) -> Optional[DataFrame]:
+    """``df``'s rows ``jrows`` (collected from it in the JVM) as ONE
+    LocalRelation, or None when they are more than LOCAL_RELATION_MAX_ROWS
+    — the only way a relation Spark computed becomes driver-local.
+
+    The rows are rebuilt in the JVM against the plan's schema, so every
+    type (DECIMAL, nested, INTERVAL, TIMESTAMP) comes back exactly, with
+    no Python conversion and no SQL literal rendering."""
     if jrows.size() > LOCAL_RELATION_MAX_ROWS:
         return None
     return DataFrame(
-        spark._jsparkSession.createDataFrame(jrows, jdf.schema()), spark
+        spark._jsparkSession.createDataFrame(jrows, df._jdf.schema()), spark
     )
 
 
@@ -364,9 +340,7 @@ _LITERAL_TYPES = introspect._NUMERIC + (
 )
 
 
-def _fold_local_subqueries(
-    sql: str, local_rows: dict[str, tuple[list, T.StructType]]
-) -> str:
+def _fold_local_subqueries(sql: str, local_ctes: dict[str, DataFrame]) -> str:
     """Fold subqueries over LOCALIZED CTEs into literals at build time.
 
     A localized CTE's result already sits in driver memory (≤
@@ -385,10 +359,10 @@ def _fold_local_subqueries(
     - ``x IN (SELECT col FROM name)`` / ``x IN (FROM name)`` → literal
       IN-list (distinct values; a NULL keeps SQL's three-valued IN).
 
-    Only fires on names in ``local_rows`` (each CTE's rows, collected
-    from its LocalRelation with zero jobs), so the fold is bounded by the
-    tiny-relation row cap at any data scale."""
-    if not local_rows:
+    Only fires on names in ``local_ctes`` (each CTE's LocalRelation, whose
+    rows a matched pattern reads with zero jobs), so the fold is bounded
+    by the tiny-relation row cap at any data scale."""
+    if not local_ctes:
         return sql
     tokens = tokenize(sql)
     out: list[Token] = []
@@ -400,7 +374,7 @@ def _fold_local_subqueries(
             close = match_forward(tokens, i, "(", ")")
             repl = None
             if close < len(tokens):
-                repl = _match_scalar_agg(tokens, i, close, local_rows)
+                repl = _match_scalar_agg(tokens, i, close, local_ctes)
             if repl is not None:
                 out.extend(tokenize(repl))
                 i = close + 1
@@ -416,7 +390,7 @@ def _fold_local_subqueries(
                 close = match_forward(tokens, j, "(", ")")
                 repl = None
                 if close < len(tokens):
-                    repl = _match_in_list(tokens, j, close, local_rows)
+                    repl = _match_in_list(tokens, j, close, local_ctes)
                 if repl is not None:
                     out.append(t)
                     out.extend(tokenize(" " + repl))
@@ -437,7 +411,17 @@ def _field(schema: T.StructType, col: str) -> Optional[T.StructField]:
     return None
 
 
-def _match_scalar_agg(tokens, i, close, local_rows):
+def _column_values(local: DataFrame, fld: Optional[T.StructField]):
+    """The Python values of ``local``'s column ``fld``, or None when there
+    is no such column or its type has no exact SQL literal. Only that
+    column is converted; projecting a LocalRelation starts no job."""
+    if fld is None or not isinstance(fld.dataType, _LITERAL_TYPES):
+        return None
+    col = F.col("`" + fld.name.replace("`", "``") + "`")
+    return [r[0] for r in local.select(col).collect()]
+
+
+def _match_scalar_agg(tokens, i, close, local_ctes):
     """Return the literal replacement for a ``(SELECT agg(col) FROM
     name)`` span, or None when the span is anything else."""
     j = next_sig(tokens, i)
@@ -476,16 +460,15 @@ def _match_scalar_agg(tokens, i, close, local_rows):
     if n >= close or tokens[n].kind not in (IDENT, QIDENT):
         return None
     name = tokens[n].text.strip('"').lower()
-    if name not in local_rows or next_sig(tokens, n) != close:
+    if name not in local_ctes or next_sig(tokens, n) != close:
         return None
-    rows, schema = local_rows[name]
+    local = local_ctes[name]
     if star:
-        return _lit(len(rows), T.LongType())
-    fld = _field(schema, inner[0].text.strip('"'))
-    if fld is None or not isinstance(fld.dataType, _LITERAL_TYPES):
+        return _lit(local._jdf.collectAsList().size(), T.LongType())
+    fld = _field(local.schema, inner[0].text.strip('"'))
+    vals = _column_values(local, fld)
+    if vals is None:
         return None
-    idx = [x.name for x in schema.fields].index(fld.name)
-    vals = [r[idx] for r in rows]
     nn = [v for v in vals if v is not None]
     import math as _math
 
@@ -537,7 +520,7 @@ def _match_scalar_agg(tokens, i, close, local_rows):
     return _lit(s / len(nn), T.DoubleType())
 
 
-def _match_in_list(tokens, j, close, local_rows):
+def _match_in_list(tokens, j, close, local_ctes):
     """Return the literal IN-list replacement for an ``( FROM name )`` /
     ``( SELECT col FROM name )`` span, or None."""
     k = next_sig(tokens, j)
@@ -559,21 +542,16 @@ def _match_in_list(tokens, j, close, local_rows):
     if n >= close or tokens[n].kind not in (IDENT, QIDENT):
         return None
     name = tokens[n].text.strip('"').lower()
-    if name not in local_rows or next_sig(tokens, n) != close:
+    if name not in local_ctes or next_sig(tokens, n) != close:
         return None
-    rows, schema = local_rows[name]
-    if col is None:
-        if len(schema.fields) != 1:
-            return None
-        idx, fld = 0, schema.fields[0]
-    else:
-        fld = _field(schema, col)
-        if fld is None:
-            return None
-        idx = [x.name for x in schema.fields].index(fld.name)
-    if not isinstance(fld.dataType, _LITERAL_TYPES):
+    local = local_ctes[name]
+    fields = local.schema.fields
+    if col is None and len(fields) != 1:
         return None
-    vals = [r[idx] for r in rows]
+    fld = fields[0] if col is None else _field(local.schema, col)
+    vals = _column_values(local, fld)
+    if vals is None:
+        return None
     import math as _math
 
     if any(
@@ -1188,7 +1166,7 @@ class DuckSparkSession:
             return df
         if nrows > LOCAL_RELATION_MAX_ROWS:
             return df
-        local = _local_relation(self.spark, df)
+        local = _local_relation(self.spark, df, _capped_rows(self.spark, df))
         return df if local is None else local.coalesce(1)
 
     def close(self) -> None:
@@ -1616,10 +1594,11 @@ class DuckSparkSession:
                 )
             bind(acc)
             out = self._query(final_sql)
-            # a tiny result collapses to a LocalRelation, so the
-            # checkpoint blocks can be GC-reclaimed (ContextCleaner)
-            # immediately; a larger one keeps its lazy plan
-            local = _local_relation(self.spark, out)
+            # a tiny result collapses to a LocalRelation the way a
+            # materialized CTE does, so the checkpoint blocks can be
+            # GC-reclaimed (ContextCleaner) immediately; a larger one
+            # keeps its lazy plan
+            local = self._try_localize_cte(out, _plan_input_bytes(out))
             return out if local is None else local
         finally:
             if had:
@@ -2327,7 +2306,7 @@ class DuckSparkSession:
         from pyspark import StorageLevel
 
         added: list[str] = []
-        local_rows: dict[str, tuple[list, T.StructType]] = {}
+        local_ctes: dict[str, DataFrame] = {}
         try:
             for idx, cte in enumerate(ctes):
                 name_l = cte["name"].lower()
@@ -2340,7 +2319,7 @@ class DuckSparkSession:
                     # over it fold to literals (q22's max_nation shape:
                     # without this, each such subquery costs a scheduled
                     # Spark job over 25 driver-local rows)
-                    if not local_rows:
+                    if not local_ctes:
                         continue
                     lo, hi = cte["body"]
                     body_names = {
@@ -2348,7 +2327,7 @@ class DuckSparkSession:
                         for t in tokens[lo:hi]
                         if t.kind in (IDENT, QIDENT)
                     }
-                    if not (body_names & set(local_rows)):
+                    if not (body_names & set(local_ctes)):
                         continue
                 body_sql = render(tokens[cte["body"][0] : cte["body"][1]])
                 earlier = [
@@ -2358,7 +2337,7 @@ class DuckSparkSession:
                 ]
                 if earlier:
                     body_sql = "WITH " + ", ".join(earlier) + " " + body_sql
-                body_sql = _fold_local_subqueries(body_sql, local_rows)
+                body_sql = _fold_local_subqueries(body_sql, local_ctes)
                 df = self._query(body_sql)
                 if cte["cols"]:
                     df = df.toDF(*cte["cols"])
@@ -2369,7 +2348,9 @@ class DuckSparkSession:
                     # starts no job, and the cap applies BEFORE the copy,
                     # so a join of two row-capped local CTEs (2000² rows
                     # worst case) never lands in driver memory whole
-                    local = _local_relation(self.spark, df)
+                    local = _local_relation(
+                        self.spark, df, _capped_rows(self.spark, df)
+                    )
                     if local is None:
                         continue
                     mat_names.add(name_l)
@@ -2391,8 +2372,7 @@ class DuckSparkSession:
                         df, _plan_input_bytes(df), reducing=name_l in reducing
                     )
                 if local is not None:
-                    df = local
-                    local_rows[name_l] = (df.collect(), df.schema)
+                    df = local_ctes[name_l] = local
                 else:
                     df = df.persist(StorageLevel.MEMORY_AND_DISK)
                     self._cte_persisted.append(df)
@@ -2409,7 +2389,7 @@ class DuckSparkSession:
             new_sql = (
                 "WITH " + ", ".join(keep) + " " + main_sql if keep else main_sql
             )
-            return self._query(_fold_local_subqueries(new_sql, local_rows))
+            return self._query(_fold_local_subqueries(new_sql, local_ctes))
         finally:
             for n in added:
                 self._cte_overrides.pop(n, None)
@@ -2420,8 +2400,9 @@ class DuckSparkSession:
         input_bytes: int,
         reducing: bool = False,
     ) -> Optional[DataFrame]:
-        """Collapse a small materialized-CTE result to ONE LocalRelation
-        (_local_relation), or None when it is over the row cap.
+        """Collapse a small materialized-CTE result (or a recursive CTE's
+        final result) to ONE LocalRelation (_local_relation), or None when
+        it is over the row cap or its input over the probe gate.
 
         A persisted view hides its cardinality from the planner until AQE
         observes the exchange at runtime, so a 25-row aggregate CTE flows
@@ -2431,14 +2412,14 @@ class DuckSparkSession:
         the cache for the fallback path), a LocalTableScan gives Catalyst
         exact stats: semi/inner joins broadcast it, scalar subqueries
         over it run exchange-free. A body that already folded to local
-        relations takes _local_relation's own copy instead (no job)."""
+        relations takes _capped_rows' driver-side copy instead (no job)."""
         # Probe cost control: the coalesced take evaluates the whole body
         # in ONE job (map side stays parallel; only the final merge is a
         # single task) — take() alone runs a 4-job incremental limit
         # scale-up, count()-then-take pays two jobs plus AQE stage jobs.
         # A single-task final merge is only safe when the body's input is
         # modest; above the gate skip localization entirely and let the
-        # lazy persisted view + AQE runtime stats pick join strategies.
+        # lazy plan + AQE runtime stats pick join strategies.
         if input_bytes > CTE_LOCALIZE_PROBE_MAX_INPUT_BYTES:
             return None
         if reducing and input_bytes <= CTE_LOCALIZE_COLLECT_MAX_INPUT_BYTES:
@@ -2711,8 +2692,12 @@ class DuckSparkSession:
         FROM target -> registered temp view (S3-S6, dev.json:196-372)."""
         allow_ext = self.settings.get("enable_external_access", "true") == "true"
         i = 0
+        scanned = None
         while i < len(tokens):
             t = tokens[i]
+            if scanned is not tokens:
+                # every expansion builds a new list: rescan FROM items then
+                from_items, scanned = set(from_item_starts(tokens)), tokens
             if t.kind == IDENT and t.upper in ("GENERATE_SERIES", "RANGE"):
                 # FROM generate_series(a, b[, step]) / FROM range(...) ->
                 # derived table of exploded guarded sequence (range is
@@ -2721,7 +2706,7 @@ class DuckSparkSession:
                 # occurrences are handled by the rename pass instead.
                 o = next_sig(tokens, i)
                 if (
-                    _in_from_list(tokens, i)
+                    i in from_items
                     and o < len(tokens)
                     and tokens[o].text == "("
                 ):
@@ -2747,7 +2732,7 @@ class DuckSparkSession:
                 # function.
                 o = next_sig(tokens, i)
                 if (
-                    _in_from_list(tokens, i)
+                    i in from_items
                     and o < len(tokens)
                     and tokens[o].text == "("
                 ):
@@ -2793,7 +2778,7 @@ class DuckSparkSession:
                 if (
                     o < len(tokens)
                     and tokens[o].text == "("
-                    and (t.upper != "GLOB" or _in_from_list(tokens, i))
+                    and (t.upper != "GLOB" or i in from_items)
                 ):
                     c = match_forward(tokens, o, "(", ")")
                     arg_sig = [
@@ -2855,22 +2840,16 @@ class DuckSparkSession:
                     )
                     i += 1
                     continue
-            if t.kind == STRING:
-                p = prev_sig(tokens, i)
-                if (
-                    p >= 0
-                    and tokens[p].kind == IDENT
-                    and tokens[p].upper in ("FROM", "JOIN")
-                ):
-                    path = t.text[1:-1].replace("''", "'")
-                    if _FILE_EXT_RE.search(path.rstrip("*/")) or "*" in path:
-                        df = io_utils.read_file_table(
-                            self.spark, path, allow_external=allow_ext
-                        )
-                        view = self._fresh_view(df)
-                        tokens = tokens[:i] + [Token(IDENT, view)] + tokens[i + 1 :]
-                        i += 1
-                        continue
+            if t.kind == STRING and i in from_items:
+                path = t.text[1:-1].replace("''", "'")
+                if _FILE_EXT_RE.search(path.rstrip("*/")) or "*" in path:
+                    df = io_utils.read_file_table(
+                        self.spark, path, allow_external=allow_ext
+                    )
+                    view = self._fresh_view(df)
+                    tokens = tokens[:i] + [Token(IDENT, view)] + tokens[i + 1 :]
+                    i += 1
+                    continue
             i += 1
         return tokens
 
@@ -3967,25 +3946,9 @@ class DuckSparkSession:
         out = list(tokens)
         self._cte_scopes = _collect_cte_scopes(out)
         self._cte_names = {n for n, _s, _e in self._cte_scopes}
-        i = 0
-        in_from_list = False
-        while i < len(out):
-            t = out[i]
-            if t.kind == IDENT and t.upper in ("FROM", "JOIN"):
-                in_from_list = t.upper == "FROM"
-                j = next_sig(out, i)
-                out, i = self._map_table_ref(out, j)
-                continue
-            if in_from_list and t.kind == PUNCT and t.text == ",":
-                j = next_sig(out, i)
-                out, i = self._map_table_ref(out, j)
-                continue
-            if t.kind == IDENT and t.upper in (
-                "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "SELECT",
-                "WINDOW", "QUALIFY", "UNION", "INTERSECT", "EXCEPT", "ON",
-            ):
-                in_from_list = False
-            i += 1
+        # right to left: a mapped ref leaves the earlier starts in place
+        for j in reversed(from_item_starts(out)):
+            out, _ = self._map_table_ref(out, j)
         return out
 
     def _map_table_ref(self, out: list[Token], j: int) -> tuple[list[Token], int]:
@@ -4243,7 +4206,7 @@ class DuckSparkSession:
         # LocalRelation: reads run on the driver with zero tasks and the
         # next write starts from a single leaf, not a growing Union.
         if _all_leaves_local(df):
-            local = _local_relation(self.spark, df)
+            local = _local_relation(self.spark, df, _capped_rows(self.spark, df))
             if local is not None:
                 self.register(name, local)
                 return
@@ -5809,7 +5772,9 @@ class DuckSparkSession:
         any other takes an eager localCheckpoint."""
         tagged = df.withColumn("__rid", F.monotonically_increasing_id())
         if _all_leaves_local(df):
-            local = _local_relation(self.spark, tagged)
+            local = _local_relation(
+                self.spark, tagged, _capped_rows(self.spark, tagged)
+            )
             if local is not None:
                 return local
         return tagged.localCheckpoint(eager=True)

@@ -1211,8 +1211,9 @@ def test_information_schema_columns_match_duckdb(spark, tmp_path, durable):
 
 def test_nested_type_cte_localizes(engine, duck):
     """A materialized CTE with ARRAY, STRUCT and MAP columns collapses to
-    one LocalRelation like a scalar one, and an IN-subquery over its
-    STRUCT column is kept as a subquery, not folded to literals."""
+    one LocalRelation like a scalar one. An IN-subquery over its STRUCT
+    column is kept as a subquery, not folded to literals, while a scalar
+    subquery over its INTEGER column still folds."""
     s = "CREATE TABLE cn AS SELECT range AS id FROM range(4)"
     engine.execute(s)
     duck.execute(s)
@@ -1221,14 +1222,17 @@ def test_nested_type_cte_localizes(engine, duck):
         " {'a': id, 'b': 'x'} AS st, MAP {'k': id * 10} AS m FROM cn)"
         " SELECT x.id, x.arr, y.st.a, y.st.b, map_extract(y.m, 'k')"
         " FROM c x JOIN c y USING (id)"
-        " WHERE x.st IN (SELECT st FROM c) AND x.id > 0 ORDER BY x.id"
+        " WHERE x.st IN (SELECT st FROM c) AND x.id > 0"
+        " AND x.id < (SELECT max(id) FROM c) ORDER BY x.id"
     )
     df = engine.execute(q)
     assert [tuple(r) for r in df.collect()] == duck.execute(q).fetchall()
     assert engine._cte_persisted == []
     assert set(_leaf_kinds(df)) == {"LocalRelation"}
+    analyzed = df._jdf.queryExecution().analyzed().toString()
     # a folded struct literal would read CAST('Row(a=1, ..)' AS struct<..>)
-    assert "Row(" not in df._jdf.queryExecution().analyzed().toString()
+    assert "Row(" not in analyzed
+    assert "scalar-subquery" not in analyzed
 
 
 def test_recursive_cte_result_uses_tiny_relation_cap(engine, duck):
@@ -1295,11 +1299,16 @@ def test_join_dml_keeps_tiny_tables_local(spark, tmp_path, durable):
 
 def test_cte_localization_job_counts(loaded_engine):
     """Each way a CTE result is localized keeps its job count: 0 for a
-    body that folded to local relations (_local_relation's driver-side
-    copy), 1 for the capped probe and 1 for the uncapped collect of a
-    reducing body. Reading the rows back from the LocalRelation (for
-    subquery folding) starts none."""
-    from duckdb_nsql_spark.session import _local_relation, _plan_input_bytes
+    body that folded to local relations (_capped_rows' driver-side copy),
+    1 for the capped probe and 1 for the uncapped collect of a reducing
+    body. Reading the rows back from the LocalRelation, whole or one
+    column as subquery folding does, starts none."""
+    from duckdb_nsql_spark.session import (
+        _capped_rows,
+        _column_values,
+        _local_relation,
+        _plan_input_bytes,
+    )
 
     eng = loaded_engine
     for sql, reducing, want in (
@@ -1313,7 +1322,8 @@ def test_cte_localization_job_counts(loaded_engine):
         nbytes = _plan_input_bytes(df)
         local, jobs = _jobs_started(
             eng.spark,
-            lambda: _local_relation(eng.spark, df) if reducing is None
+            lambda: _local_relation(eng.spark, df, _capped_rows(eng.spark, df))
+            if reducing is None
             else eng._try_localize_cte(df, nbytes, reducing=reducing),
         )
         assert len(jobs) == want, sql
@@ -1323,6 +1333,11 @@ def test_cte_localization_job_counts(loaded_engine):
         rows, jobs = _jobs_started(eng.spark, local.collect)
         assert jobs == [], sql
         assert sorted(map(tuple, rows)) == sorted(map(tuple, df.collect()))
+        vals, jobs = _jobs_started(
+            eng.spark, lambda: _column_values(local, local.schema.fields[0])
+        )
+        assert jobs == [], sql
+        assert vals == [r[0] for r in rows]
 
 
 @pytest.mark.parametrize("durable", [False, True], ids=["memory", "database"])

@@ -1078,6 +1078,32 @@ def test_table_functions_after_from_list_comma(engine):
     con.close()
 
 
+def test_table_refs_follow_the_from_list(engine):
+    """A table name is mapped only where a FROM item starts: after a
+    derived table whose inner query has a WHERE, after a CROSS JOIN item,
+    and not in the select list after a scalar subquery, where it is a
+    column — compared with DuckDB."""
+    import duckdb
+
+    con = duckdb.connect()
+    for s in (
+        "CREATE TABLE fl1 (x INTEGER)",
+        "INSERT INTO fl1 VALUES (1), (2)",
+        "CREATE TABLE fl2 (fl1 INTEGER)",
+        "INSERT INTO fl2 VALUES (10), (20), (30)",
+    ):
+        engine.execute(s)
+        con.execute(s)
+    for q in (
+        "SELECT count(*) FROM (SELECT x FROM fl1 WHERE x > 1) s, fl2",
+        "SELECT count(*) FROM fl1 a CROSS JOIN fl1 b, fl2",
+        "SELECT (SELECT max(x) FROM fl1) AS m, fl1 FROM fl2 ORDER BY fl1",
+    ):
+        mine = [tuple(r) for r in engine.execute(q).collect()]
+        assert mine == con.execute(q).fetchall(), q
+    con.close()
+
+
 def test_introspection_table_functions_match_duckdb(loaded_engine, sf_dir):
     """glob / parquet_schema / parquet_metadata replicate DuckDB's table
     functions from the same footers (driver-side, zero Spark jobs)."""

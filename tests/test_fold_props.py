@@ -12,15 +12,16 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
+from duckdb_nsql_spark import introspect
 from duckdb_nsql_spark import session as sess
 from duckdb_nsql_spark.frontend.tokenizer import tokenize
 
 
-def _fold(sql: str, rows, dtype) -> str:
+def _fold(spark, sql: str, rows, dtype) -> str:
+    """Fold ``sql`` over a localized CTE ``t(c)`` holding ``rows``."""
     schema = T.StructType([T.StructField("c", dtype)])
-    return sess._fold_local_subqueries(
-        sql, {"t": ([(v,) for v in rows], schema)}
-    )
+    local = introspect.local_df(spark, [(v,) for v in rows], schema)
+    return sess._fold_local_subqueries(sql, {"t": local})
 
 
 _ints = st.lists(
@@ -38,7 +39,7 @@ _strs = st.lists(
 @settings(max_examples=25, deadline=None)
 def test_scalar_fold_matches_duckdb_ints(spark, agg, vals):
     sql = f"SELECT (SELECT {agg}(c) FROM t) AS v"
-    folded = _fold(sql, vals, T.LongType())
+    folded = _fold(spark, sql, vals, T.LongType())
     d = duckdb.connect()
     d.execute("CREATE TABLE t (c BIGINT)")
     d.executemany("INSERT INTO t VALUES (?)", [(v,) for v in vals]) if vals \
@@ -58,7 +59,7 @@ def test_scalar_fold_matches_duckdb_ints(spark, agg, vals):
 @settings(max_examples=25, deadline=None)
 def test_in_fold_matches_duckdb_strings(spark, vals):
     sql = "SELECT 'abc' IN (SELECT c FROM t) AS v"
-    folded = _fold(sql, vals, T.StringType())
+    folded = _fold(spark, sql, vals, T.StringType())
     d = duckdb.connect()
     d.execute("CREATE TABLE t (c VARCHAR)")
     for v in vals:
@@ -78,7 +79,7 @@ def test_in_fold_matches_duckdb_strings(spark, vals):
 @settings(max_examples=15, deadline=None)
 def test_distinct_count_fold_matches_duckdb(spark, vals):
     sql = "SELECT (SELECT count(DISTINCT c) FROM t) AS v"
-    folded = _fold(sql, vals, T.LongType())
+    folded = _fold(spark, sql, vals, T.LongType())
     d = duckdb.connect()
     d.execute("CREATE TABLE t (c BIGINT)")
     for v in vals:

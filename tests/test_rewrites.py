@@ -746,6 +746,32 @@ def test_lateral_generator_after_derived_table():
     assert "LATERAL" in out2.upper()
 
 
+def test_from_item_starts():
+    """The one FROM-list scanner that table refs, table functions, file
+    paths and implicit-lateral generators share: an item starts after
+    FROM, JOIN or a depth-0 comma of a FROM list, each bracket group keeps
+    its own state, a clause keyword ends the list, and IS DISTINCT FROM is
+    an operator."""
+    from duckdb_nsql_spark.frontend.tokenizer import from_item_starts, tokenize
+
+    def items(sql):
+        toks = tokenize(sql)
+        return [toks[i].text for i in from_item_starts(toks)]
+
+    assert items("SELECT 1 FROM a, b CROSS JOIN c, d") == ["a", "b", "c", "d"]
+    assert items("SELECT 1 FROM (SELECT x FROM e WHERE x > 0) s, f") == [
+        "(", "e", "f"
+    ]
+    assert items("SELECT (SELECT max(x) FROM g), y FROM h") == ["g", "h"]
+    assert items("SELECT * FROM t(a, b), u") == ["t", "u"]
+    assert items("SELECT 1 FROM a JOIN b ON a.x = b.x, c ORDER BY 1, 2") == [
+        "a", "b", "c"
+    ]
+    assert items("SELECT x IS DISTINCT FROM y, z FROM w") == ["w"]
+    assert items("UPDATE t SET a = 1, b = 2 FROM u, v") == ["u", "v"]
+    assert items("DELETE FROM t WHERE a = 1 RETURNING a, b") == ["t"]
+
+
 class NumericResolver(NullResolver):
     """FakeResolver with column_numeric typing for the round/median tests."""
 
