@@ -30,7 +30,6 @@ from pyspark.sql import types as T
 from . import introspect, io_utils
 from .frontend import rewrites
 from .frontend.tokenizer import (
-    BIDENT,
     COMMENT,
     IDENT,
     NUMBER,
@@ -202,9 +201,14 @@ CTE_LOCALIZE_PROBE_MAX_INPUT_BYTES = 1 << 30
 # result is at most one row per group over a few MB of input.
 CTE_LOCALIZE_COLLECT_MAX_INPUT_BYTES = 64 << 20
 
-# A trailing ORDER BY runs as a single-partition local sort (no range
-# sampling, no exchange) when the plan scans at most this much estimated
-# input; bigger inputs keep Spark's distributed range sort.
+# A trailing ORDER BY (no LIMIT) over at most this much input runs as the
+# analyzed Sort over a non-shuffling Repartition(1): a sort of one
+# partition needs no range-sampling job and no exchange (DuckDB sorts a
+# small result in-process). The input is the statement's
+# file bytes x4 (parquet compresses ~4x) or, when any relation is not a
+# known file, the analyzed plan's leaf statistics. Bigger inputs keep
+# Spark's distributed range sort, the only shape that scales. See
+# DuckSparkSession._single_partition_sort.
 SMALL_SORT_MAX_INPUT_BYTES = 64 << 20
 
 # The one tiny-relation cap: a relation Spark computed that holds at most
@@ -239,18 +243,6 @@ _SMALL_STMT_CONFS = {
     "spark.sql.shuffle.partitions": "8",
     "spark.sql.files.maxPartitionBytes": str(2 << 20),
 }
-
-
-def _backtick(tok: Token) -> str:
-    """Render an identifier token as a backtick-quoted Spark name."""
-    text = tok.text
-    if tok.kind in (QIDENT, BIDENT):
-        text = text[1:-1]
-        if tok.kind == QIDENT:
-            text = text.replace('""', '"')
-        else:
-            text = text.replace("``", "`")
-    return "`" + text.replace("`", "``") + "`"
 
 
 def _plan_input_bytes(df: DataFrame) -> int:
@@ -1682,346 +1674,68 @@ class DuckSparkSession:
         if wrapped is not None:
             sql = wrapped
         text = self._rewrite_query(sql)
-        df = self._small_sort(text)
-        if df is None:
-            df = self.spark.sql(text)
+        df = self._single_partition_sort(self.spark.sql(text), text)
         return self._coerce_day_intervals(df), True
 
-    def _small_sort(self, text: str) -> Optional[DataFrame]:
-        """Execute a trailing top-level ORDER BY (no LIMIT/OFFSET) as a
-        single-partition local sort when the plan's input is small.
+    def _single_partition_sort(self, df: DataFrame, text: str) -> DataFrame:
+        """``df`` with its trailing global ORDER BY sorted in one
+        partition when the statement's input is at most
+        SMALL_SORT_MAX_INPUT_BYTES.
 
-        Spark's global sort range-partitions: a separate sampling pass over
-        the child plus a shuffle — ~100 ms of fixed latency that dominates
-        small results (DuckDB just sorts in-process). When the leaf-stat
-        input estimate is under SMALL_SORT_MAX_INPUT_BYTES the same total
-        order comes from coalesce(1) + sortWithinPartitions: one narrow
-        stage, no sampling, no exchange. Large inputs keep the distributed
-        range sort — the only shape that scales. Any parse/resolution
-        wrinkle falls back to native ORDER BY (returns None).
-        """
-        tokens = tokenize(text.rstrip().rstrip(";"))
-        depth = 0
-        order_at = None
-        for i, t in enumerate(tokens):
-            if t.kind == PUNCT and t.text in "([{":
-                depth += 1
-            elif t.kind == PUNCT and t.text in ")]}":
-                depth -= 1
-            elif depth == 0 and t.kind == IDENT and t.upper == "ORDER":
-                b = next_sig(tokens, i)
-                if b < len(tokens) and tokens[b].is_kw("BY"):
-                    order_at = (i, b)
-        if order_at is None:
-            return None
-        i, b = order_at
-        # items until end; any depth-0 terminator (LIMIT/OFFSET/...) means
-        # ORDER BY is not the final clause -> native path
-        items: list[tuple[int, int]] = []
-        item_start = next_sig(tokens, b)
-        k = item_start
-        depth = 0
-        while k < len(tokens):
-            tk = tokens[k]
-            if tk.kind == PUNCT and tk.text in "([{":
-                depth += 1
-            elif tk.kind == PUNCT and tk.text in ")]}":
-                if depth == 0:
-                    return None
-                depth -= 1
-            elif depth == 0 and tk.kind == IDENT and tk.upper in (
-                "LIMIT", "OFFSET", "FETCH", "UNION", "INTERSECT", "EXCEPT",
-                "WINDOW",
-            ):
-                return None
-            elif depth == 0 and tk.kind == PUNCT and tk.text == ",":
-                items.append((item_start, k))
-                item_start = next_sig(tokens, k)
-            k += 1
-        items.append((item_start, len(tokens)))
-        # Scope pre-check: the wrapper's only relation is the projected
-        # subquery, so an ORDER BY name that is NOT a select-list output
-        # (Spark's native sort can still see it through the projection —
-        # e.g. the DISTINCT ON rewrite orders by pre-alias columns) can
-        # never resolve inside the wrapper. Bail to the native path up
-        # front instead of paying a guaranteed analysis failure (which
-        # Spark logs as a scary ERROR before we fall back).
-        out_names = self._select_list_names(tokens)
-        if out_names is not None:
-            visible = {n.strip("`").lower() for n in out_names}
-            for lo, hi in items:
-                span = [
-                    x for x in tokens[lo:hi] if x.kind not in (WS, COMMENT)
-                ]
-                for j, tk in enumerate(span):
-                    if tk.kind not in (IDENT, QIDENT, BIDENT):
-                        continue
-                    if tk.kind == IDENT and tk.upper in (
-                        "ASC", "DESC", "NULLS", "FIRST", "LAST", "ALL",
-                        "AND", "OR", "NOT", "CASE", "WHEN", "THEN", "ELSE",
-                        "END", "IS", "NULL", "TRUE", "FALSE", "LIKE",
-                        "ILIKE", "BETWEEN", "IN", "CAST", "INTERVAL",
-                        "ESCAPE", "COLLATE", "DIV", "GLOB", "SIMILAR",
-                        "TO", "AS", "YEAR", "MONTH", "DAY", "HOUR",
-                        "MINUTE", "SECOND",
-                    ):
-                        continue
-                    nxt = span[j + 1] if j + 1 < len(span) else None
-                    if (
-                        nxt is not None
-                        and nxt.kind == PUNCT
-                        and nxt.text == "("
-                    ):
-                        continue  # function name
-                    if (
-                        nxt is not None
-                        and nxt.kind == PUNCT
-                        and nxt.text == "."
-                    ):
-                        # dotted-chain HEAD: a visible head is a struct
-                        # field access on an output column (resolves on
-                        # the wrapper's first attempt). An invisible head
-                        # is a table alias — resolvable via the stripped
-                        # retry IFF the chain's TAIL is a visible output;
-                        # otherwise nothing the wrapper tries can bind it.
-                        if tk.text.strip('"`').lower() in visible:
-                            continue
-                        tail = None
-                        m = j
-                        while (
-                            m + 2 < len(span)
-                            and span[m + 1].kind == PUNCT
-                            and span[m + 1].text == "."
-                            and span[m + 2].kind in (IDENT, QIDENT, BIDENT)
-                        ):
-                            tail = span[m + 2]
-                            m += 2
-                        if (
-                            tail is not None
-                            and tail.text.strip('"`').lower() in visible
-                        ):
-                            continue
-                        return None
-                    prv = span[j - 1] if j > 0 else None
-                    if (
-                        prv is not None
-                        and prv.kind == PUNCT
-                        and prv.text == "."
-                    ):
-                        continue  # dotted tail: judged at its chain head
-                    if tk.text.strip('"`').lower() not in visible:
-                        return None
-        # Python-side size gate first: when every referenced relation is a
-        # known on-disk file, the decision costs zero py4j round-trips
-        # (the JVM leaf-stats probe alone was ~16ms of socket latency).
-        # x4: parquet compresses ~4x, and the Catalyst estimate this
-        # replaces included fileCompressionFactor=4 — gating on raw file
-        # bytes let a 1.9M-row sf1 aggregate through, and the COALESCE(1)
-        # local sort collapses the FINAL AGG stage to one task (narrow
-        # coalesce), measured 2x slower on q3 at sf1.
-        fb = self._statement_file_bytes(text)
-        if fb is not None:
-            fb *= 4
-        if fb is not None and fb > SMALL_SORT_MAX_INPUT_BYTES:
-            return None
-        inner_text = render(tokens[:i])
-        if fb is not None:
-            # single-statement SQL form: one spark.sql analysis, no
-            # Column-object construction (the per-column F.col().asc_
-            # nulls_last() chains cost ~200 py4j commands per statement)
-            items_txt = self._sort_items_text(tokens, items)
-            if items_txt is not None:
-                candidates = [items_txt]
-                # table-alias-qualified items (ORDER BY a.col) can't
-                # resolve inside the wrapper, whose only relation is the
-                # view — retry with qualifiers stripped. Safe: a STRUCT
-                # field access (col.field) resolves on the FIRST attempt,
-                # so the stripped retry only ever sees true table aliases.
-                stripped = re.sub(
-                    r"\b[A-Za-z_][A-Za-z0-9_$]*\s*\.\s*"
-                    r"([A-Za-z_][A-Za-z0-9_$]*)",
-                    r"\1",
-                    items_txt,
-                )
-                if stripped != items_txt:
-                    candidates.append(stripped)
-                for cand in candidates:
-                    try:
-                        return self.spark.sql(
-                            "SELECT /*+ COALESCE(1) */ * FROM ("
-                            + inner_text
-                            + ") __ddbs_localsort SORT BY "
-                            + cand
-                        )
-                    except Exception:  # noqa: BLE001 — fall to Column path
-                        pass
-        try:
-            inner = self.spark.sql(inner_text)
-            if fb is None and _plan_input_bytes(inner) > (
-                SMALL_SORT_MAX_INPUT_BYTES
-            ):
-                return None
-            cols = self._sort_columns(inner, tokens, items)
-            if cols is None:
-                return None
-            return inner.coalesce(1).sortWithinPartitions(*cols)
-        except Exception:  # noqa: BLE001 — native ORDER BY is always valid
-            return None
-
-    def _sort_items_text(self, tokens, items) -> Optional[str]:
-        """Render ORDER BY items as SORT BY text with the engine's
-        default null order made explicit; None when an item needs schema
-        knowledge this path can't derive textually (ORDER BY ALL over a
-        ``*`` projection)."""
-        nulls_default = (
-            "LAST"
-            if self.settings.get("default_null_order", "nulls_last")
-            == "nulls_last"
-            else "FIRST"
-        )
-        parts: list[str] = []
-        for lo, hi in items:
-            span = [x for x in tokens[lo:hi] if x.kind not in (WS, COMMENT)]
-            if not span:
-                return None
-            if (
-                len(span) == 1
-                and span[0].kind == IDENT
-                and span[0].upper == "ALL"
-            ):
-                names = self._select_list_names(tokens)
-                if names is None:
-                    return None
-                parts.extend(f"{n} NULLS {nulls_default}" for n in names)
-                continue
-            txt = render(tokens[lo:hi]).strip()
-            if (
-                len(span) >= 2
-                and span[-1].kind == IDENT
-                and span[-1].upper in ("FIRST", "LAST")
-                and span[-2].kind == IDENT
-                and span[-2].upper == "NULLS"
-            ):
-                parts.append(txt)  # explicit NULLS kept as written
-            else:
-                # a column literally named first/last is NOT a null-order
-                # modifier — it still gets the session default appended
-                parts.append(f"{txt} NULLS {nulls_default}")
-        return ", ".join(parts)
-
-    def _select_list_names(self, tokens) -> Optional[list[str]]:
-        """Output names of the statement's top-level SELECT list, derived
-        textually (for ORDER BY ALL): the alias after a depth-0 AS, or
-        the last identifier of a bare (possibly dotted) column item.
-        None when any item's name isn't statically derivable (*,
-        expressions without aliases, set operations)."""
-        sig = [t for t in tokens if t.kind not in (WS, COMMENT)]
-        if not (sig and sig[0].kind == IDENT and sig[0].upper == "SELECT"):
-            return None
-        k = 1
-        if k < len(sig) and sig[k].kind == IDENT and sig[k].upper in (
-            "DISTINCT", "ALL"
+        The step walks the analyzed plan from the root through Project
+        and WithCTE's main plan to a global Sort, and puts a non-shuffling
+        Repartition(1) under it. The sort keys stay Catalyst's own, so
+        every key Spark resolves (ORDER BY ALL, ordinals, aliases,
+        qualified or unselected columns) sorts exactly as on the native
+        path. A plan of any other shape (a LIMIT or OFFSET over the Sort,
+        no ORDER BY) or a bigger input returns ``df`` unchanged."""
+        plan = df._jdf.queryExecution().analyzed()
+        path = []
+        node = plan
+        while node.getClass().getSimpleName() in ("Project", "WithCTE"):
+            path.append(node)
+            node = node.children().last()  # WithCTE: defs :+ main plan
+        if not (
+            node.getClass().getSimpleName() == "Sort"
+            and getattr(node, "global")()
         ):
-            k += 1
-        depth = 0
-        item: list = []
-        names: list[str] = []
-
-        def flush() -> bool:
-            if not item:
-                return False
-            # alias after the LAST top-level AS; else a bare column chain
-            for j in range(len(item) - 1, -1, -1):
-                if item[j][1] == 0 and item[j][0].kind == IDENT and (
-                    item[j][0].upper == "AS"
-                ):
-                    if j + 1 < len(item) and item[j + 1][0].kind in (
-                        IDENT, QIDENT, BIDENT
-                    ):
-                        names.append(_backtick(item[j + 1][0]))
-                        return True
-                    return False
-            toks = [t for t, _ in item]
-            if all(
-                t.kind in (IDENT, QIDENT, BIDENT)
-                or (t.kind == PUNCT and t.text == ".")
-                for t in toks
-            ) and toks[-1].kind in (IDENT, QIDENT, BIDENT):
-                kw = toks[-1].upper if toks[-1].kind == IDENT else ""
-                if kw in ("FROM",):
-                    return False
-                names.append(_backtick(toks[-1]))
-                return True
-            return False
-
-        while k < len(sig):
-            t = sig[k]
-            if t.kind == PUNCT and t.text in "([{":
-                depth += 1
-            elif t.kind == PUNCT and t.text in ")]}":
-                depth -= 1
-            elif depth == 0 and t.kind == IDENT and t.upper == "FROM":
-                return names if flush() else None
-            elif depth == 0 and t.kind == PUNCT and t.text == ",":
-                if not flush():
-                    return None
-                item = []
-                k += 1
-                continue
-            elif depth == 0 and t.kind == OP and t.text == "*" and not item:
-                return None  # bare * projection: names need the schema
-            item.append((t, depth))
-            k += 1
-        return names if flush() else None
-
-    def _sort_columns(self, df, tokens, items):
-        nulls_default = self.settings.get("default_null_order", "nulls_last")
-        cols = []
-        for lo, hi in items:
-            span = [x for x in tokens[lo:hi] if x.kind not in (WS, COMMENT)]
-            if not span:
-                return None
-            if len(span) == 1 and span[0].kind == IDENT and span[0].upper == "ALL":
-                # ORDER BY ALL: every output column, left to right, ASC
-                for c in df.columns:
-                    cols.append(
-                        F.col(c).asc_nulls_last()
-                        if nulls_default == "nulls_last"
-                        else F.col(c).asc_nulls_first()
-                    )
-                continue
-            nulls = None
-            if (
-                len(span) >= 2
-                and span[-2].kind == IDENT
-                and span[-2].upper == "NULLS"
-                and span[-1].upper in ("FIRST", "LAST")
-            ):
-                nulls = span[-1].upper
-                span = span[:-2]
-            desc = False
-            if span and span[-1].kind == IDENT and span[-1].upper in ("ASC", "DESC"):
-                desc = span[-1].upper == "DESC"
-                span = span[:-1]
-            if not span:
-                return None
-            expr_text = render(span).strip()
-            if re.fullmatch(r"\d+", expr_text):  # ordinal ORDER BY 2
-                idx = int(expr_text) - 1
-                if not (0 <= idx < len(df.columns)):
-                    return None
-                col = F.col(df.columns[idx])
-            else:
-                col = F.expr(expr_text)
-            if nulls is None:
-                nulls = "LAST" if nulls_default == "nulls_last" else "FIRST"
-            col = (
-                (col.desc_nulls_first() if nulls == "FIRST" else col.desc_nulls_last())
-                if desc
-                else (col.asc_nulls_first() if nulls == "FIRST" else col.asc_nulls_last())
+            return df
+        size = self._statement_file_bytes(text)
+        if size is not None:
+            # parquet compresses ~4x: gating on raw file bytes let a
+            # 1.9M-row sf1 aggregate through, whose final stage the
+            # narrow coalesce then ran as one task (2x slower on q3)
+            size *= 4
+        else:
+            leaves = plan.collectLeaves()
+            size = sum(
+                int(leaf.stats().sizeInBytes())
+                for leaf in map(leaves.apply, range(leaves.size()))
+                # a CTE reference's input is counted at its definition
+                if leaf.getClass().getSimpleName() != "CTERelationRef"
             )
-            cols.append(col)
-        return cols
+        if size > SMALL_SORT_MAX_INPUT_BYTES:
+            return df
+        jvm = self.spark._jvm
+        logical = jvm.org.apache.spark.sql.catalyst.plans.logical
+        # the same keys sorted within the one partition are the total
+        # order; a global Sort would only add its OrderedDistribution
+        # requirement, which alone makes Spark wrap the plan in AQE
+        new = logical.Sort(
+            node.order(), False,
+            logical.Repartition(1, False, node.child()), node.hint(),
+        )
+        for parent in reversed(path):
+            kids = parent.children()
+            new = parent.withNewChildren(jvm.PythonUtils.toSeq(
+                [kids.apply(i) for i in range(kids.size() - 1)] + [new]
+            ))
+        return DataFrame(
+            jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                self.spark._jsparkSession, new
+            ),
+            self.spark,
+        )
 
     @staticmethod
     def _coerce_day_intervals(df: DataFrame) -> DataFrame:
@@ -7367,72 +7081,13 @@ def _parse_copy_options(tokens: list[Token]) -> dict:
     return opts
 
 
-def _select_list_arity(tokens: list[Token], order_idx: int) -> int:
-    """Arity of the select list that the ORDER BY at ``order_idx``
-    belongs to: nearest preceding SELECT at the same paren depth. 0 when
-    unparseable (star / COLUMNS / no SELECT found) — caller keeps the
-    native ORDER BY ALL."""
-    depth = 0
-    depths = [0] * len(tokens)
-    for idx, tk in enumerate(tokens):
-        if tk.kind == PUNCT and tk.text in "([{":
-            depths[idx] = depth
-            depth += 1
-        elif tk.kind == PUNCT and tk.text in ")]}":
-            depth -= 1
-            depths[idx] = depth
-        else:
-            depths[idx] = depth
-    d = depths[order_idx]
-    sel = None
-    for idx in range(order_idx - 1, -1, -1):
-        if depths[idx] < d:
-            break  # left the block
-        if (
-            depths[idx] == d
-            and tokens[idx].kind == IDENT
-            and tokens[idx].upper == "SELECT"
-        ):
-            sel = idx
-            break
-    if sel is None:
-        return 0
-    j = next_sig(tokens, sel)
-    if j < len(tokens) and tokens[j].kind == IDENT and tokens[j].upper == "DISTINCT":
-        j = next_sig(tokens, j)
-    count = 1
-    k = j
-    while k < len(tokens):
-        tk = tokens[k]
-        if depths[k] < d:
-            break
-        if depths[k] == d:
-            if tk.kind == PUNCT and tk.text == "*":
-                return 0
-            if tk.kind == OP and tk.text == "*" and k == j:
-                return 0
-            if tk.kind == IDENT and tk.upper in (
-                "FROM", "WHERE", "GROUP", "HAVING", "QUALIFY", "ORDER",
-                "LIMIT", "UNION", "INTERSECT", "EXCEPT", "WINDOW",
-            ):
-                break
-            if tk.kind == IDENT and tk.upper == "COLUMNS":
-                return 0
-            if tk.kind == PUNCT and tk.text == ",":
-                count += 1
-        k += 1
-    # bare star as very first item (tokenizer may class '*' as OP)
-    first = tokens[j] if j < len(tokens) else None
-    if first is not None and first.text == "*":
-        return 0
-    return count
-
-
 def _pass_order_by_nulls(tokens: list[Token], order: str) -> list[Token]:
     """DuckDB's default null order is NULLS LAST for both directions
     (configurable via PRAGMA default_null_order, dev.json:220); Spark
     defaults to NULLS FIRST on ASC. Append explicit NULLS markers to
-    ORDER BY items that don't specify one."""
+    ORDER BY items that don't specify one; ``ORDER BY ALL [ASC|DESC]``
+    takes one like any other item, and Spark applies it to every output
+    column."""
     if order not in ("nulls_last", "nulls_first"):
         return tokens
     out = list(tokens)
@@ -7475,39 +7130,6 @@ def _pass_order_by_nulls(tokens: list[Token], order: str) -> list[Token]:
                     if not span:
                         continue
                     if any(x.kind == IDENT and x.upper == "NULLS" for x in span):
-                        continue
-                    if (
-                        len(items) == 1
-                        and span
-                        and span[0].kind == IDENT
-                        and span[0].upper == "ALL"
-                        and len(span) <= 2
-                    ):
-                        # ORDER BY ALL [ASC|DESC]: Spark's native ALL uses
-                        # its own NULLS FIRST default — expand to select-
-                        # list ordinals so the null order applies (grouping
-                        # -set NULL rows sort like DuckDB). Unparseable
-                        # select lists (star/COLUMNS) keep native ALL.
-                        dir_kw = (
-                            span[1].upper
-                            if len(span) == 2
-                            and span[1].upper in ("ASC", "DESC")
-                            else ""
-                        )
-                        ncols = _select_list_arity(out, i)
-                        if ncols:
-                            nl = (
-                                "NULLS LAST"
-                                if order == "nulls_last"
-                                else "NULLS FIRST"
-                            )
-                            txt = ", ".join(
-                                f"{p + 1} {dir_kw} {nl}".replace("  ", " ")
-                                for p in range(ncols)
-                            )
-                            out[lo:hi] = tokenize(txt) + [Token(WS, " ")]
-                        continue
-                    if len(span) == 1 and span[0].kind == IDENT and span[0].upper == "ALL":
                         continue
                     is_desc = span[-1].kind == IDENT and span[-1].upper == "DESC"
                     needs = (

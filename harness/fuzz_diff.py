@@ -2,6 +2,8 @@
 analytic queries (agg/scalar/window/join shapes over the TPC-H
 fixtures) run on the engine AND DuckDB; any row-set difference is a
 finding. Usage: python harness/fuzz_diff.py [seed] [n_queries].
+About one draw in four is followed by a gen_order_query() statement (a
+trailing ORDER BY without LIMIT), whose rows are compared in order.
 
 Round-4 findings it already caught (all fixed + pinned):
  - CAST(double AS INTEGER) used HALF-UP rounding; DuckDB's cast is
@@ -22,11 +24,15 @@ import duckdb
 import duckdb_nsql_spark as dns
 
 rng = random.Random(42)
+# the in-order ORDER BY family draws from its own stream, so adding it
+# left every seed's gen_query() sequence unchanged
+order_rng = random.Random("order:42")
 
 
 def reseed(seed: int) -> None:
-    global rng
+    global rng, order_rng
     rng = random.Random(seed)
+    order_rng = random.Random(f"order:{seed}")
 
 NUM_COLS = {
     "lineitem": ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
@@ -1283,6 +1289,61 @@ def gen_query():
     return (f"SELECT g, count(*) AS n FROM ({inner}) u GROUP BY g "
             f"ORDER BY ALL LIMIT 40")
 
+# NULL-bearing relations for gen_order_query: an in-session table (its
+# size comes from plan statistics) and a derived table over parquet (its
+# size comes from the file bytes). k is unique in both.
+ORDER_SETUP = [
+    "CREATE TABLE ord_c AS SELECT c_custkey AS k,"
+    " CASE WHEN c_custkey % 4 = 0 THEN NULL ELSE c_mktsegment END AS seg,"
+    " CASE WHEN c_custkey % 5 = 0 THEN NULL ELSE c_nationkey % 6 END AS nat,"
+    " CASE WHEN c_custkey % 3 = 0 THEN NULL ELSE c_acctbal END AS bal"
+    " FROM customer WHERE c_custkey <= 120",
+]
+ORDER_SOURCES = [
+    "ord_c",
+    "(SELECT c_custkey AS k, nullif(c_mktsegment, 'BUILDING') AS seg,"
+    " nullif(c_nationkey % 6, 0) AS nat,"
+    " CASE WHEN c_custkey % 3 = 1 THEN NULL ELSE c_acctbal END AS bal"
+    " FROM customer WHERE c_custkey <= 120)",
+]
+
+
+def gen_order_query():
+    """A trailing ORDER BY without LIMIT over NULL-bearing columns, whose
+    rows are compared IN ORDER (rows_match(..., ordered=True)). Every
+    order is total: the unique key k sorts last, or is in the ``*`` that
+    ORDER BY ALL sorts. Shapes: ORDER BY ALL over ``*``, ASC/DESC keys
+    with and without NULLS markers, keys that are not selected, and
+    table-qualified keys."""
+    r = order_rng
+    src = r.choice(ORDER_SOURCES)
+    where = r.choice(["", f" WHERE t.k % {r.randint(2, 4)} = {r.randint(0, 1)}"])
+    cols = ["seg", "nat", "bal"]
+    keys = r.sample(cols, r.randint(1, 2))
+
+    def mods():
+        return r.choice(["", " ASC", " DESC"]) + r.choice(
+            ["", "", " NULLS FIRST", " NULLS LAST"]
+        )
+
+    shape = r.random()
+    if shape < 0.25:
+        return f"SELECT * FROM {src} t{where} ORDER BY ALL{mods()}"
+    last = r.choice(["k", "k DESC"])
+    if shape < 0.5:
+        order = ", ".join(k + mods() for k in keys)
+        return (f"SELECT {', '.join(['k'] + keys)} FROM {src} t{where}"
+                f" ORDER BY {order}, {last}")
+    if shape < 0.75:
+        # sort keys that are not in the select list
+        out = ", ".join(c for c in cols if c not in keys)
+        order = ", ".join(k + mods() for k in keys)
+        return f"SELECT {out} FROM {src} t{where} ORDER BY {order}, {last}"
+    order = ", ".join(f"t.{k}{mods()}" for k in keys)
+    return (f"SELECT t.seg, t.nat, t.bal FROM {src} t{where}"
+            f" ORDER BY {order}, t.{last}")
+
+
 def _canon_zero(v):
     """Normalize IEEE negative zero anywhere in a value tree: SQL says
     -0.0 = 0.0, and the engines disagree on the SIGN a rounded tiny
@@ -1298,22 +1359,22 @@ def _canon_zero(v):
     return v
 
 
-def rows_match(d_rows, s_rows, tol=0.02) -> bool:
-    """Order-insensitive row-multiset compare with float tolerance:
-    distributed partial sums reorder double accumulation, so a
-    round(sum(double), 2) can flip a half-cent boundary — ulp noise,
-    not an engine bug. Strings and ints stay exact."""
+def rows_match(d_rows, s_rows, tol=0.02, ordered=False) -> bool:
+    """Row-multiset compare with float tolerance (row by row, in order,
+    when ``ordered``): distributed partial sums reorder double
+    accumulation, so a round(sum(double), 2) can flip a half-cent
+    boundary — ulp noise, not an engine bug. Strings and ints stay
+    exact."""
     if len(d_rows) != len(s_rows):
         return False
     d_rows = [_canon_zero(r) for r in d_rows]
     s_rows = [_canon_zero(r) for r in s_rows]
-    a = sorted(map(str, d_rows))
-    b = sorted(map(str, s_rows))
-    if a == b:
+    if not ordered:
+        d_rows = sorted(d_rows, key=str)
+        s_rows = sorted(s_rows, key=str)
+    if list(map(str, d_rows)) == list(map(str, s_rows)):
         return True
-    da = sorted(d_rows, key=str)
-    sb = sorted(s_rows, key=str)
-    for r1, r2 in zip(da, sb):
+    for r1, r2 in zip(d_rows, s_rows):
         if len(r1) != len(r2):
             return False
         for x, y in zip(r1, r2):
@@ -1339,9 +1400,16 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{SF}/{t}.parquet')"
         )
+    for stmt in ORDER_SETUP:
+        con.execute(stmt)
+        ddb.execute(stmt)
+    stream = []
+    for _ in range(N):
+        stream.append((gen_query(), False))
+        if order_rng.random() < 0.25:
+            stream.append((gen_order_query(), True))
     fails = 0
-    for qi in range(N):
-        q = gen_query()
+    for qi, (q, ordered) in enumerate(stream):
         try:
             d = ddb.execute(q).fetchall()
             derr = None
@@ -1354,16 +1422,19 @@ def main() -> None:
             s, serr = None, str(ex).strip().splitlines()[0][:130] if str(ex).strip() else type(ex).__name__
         if derr and serr:
             continue
-        if derr or serr or not rows_match(d, s):
+        if derr or serr or not rows_match(d, s, ordered=ordered):
             fails += 1
-            print(f"=== MISMATCH #{fails} (query {qi}) ===")
+            print(f"=== MISMATCH #{fails} (query {qi}"
+                  f"{', in order' if ordered else ''}) ===")
             print("QRY:", q)
             if derr or serr:
                 print(" duckerr:", derr, "\n sparkerr:", serr)
             elif d is not None and s is not None:
                 diffs = [(a, b) for a, b in zip(d, s) if a != b][:3]
                 print(f" rows duck={len(d)} spark={len(s)} first-diffs={diffs}")
-    print(f"FUZZ DONE: {N} queries, {fails} mismatches (seed {SEED})")
+    n_ordered = sum(ordered for _, ordered in stream)
+    print(f"FUZZ DONE: {N} queries + {n_ordered} in-order ORDER BY queries,"
+          f" {fails} mismatches (seed {SEED})")
 
 
 if __name__ == "__main__":

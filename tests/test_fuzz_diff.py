@@ -46,6 +46,24 @@ def test_fuzz_seed_42(loaded_engine, fuzz_duck, fuzz_mod):
         assert fuzz_mod.rows_match(d, s), q
 
 
+def test_order_family_in_order(loaded_engine, fuzz_duck, fuzz_mod):
+    """The trailing-ORDER-BY family over NULL-bearing columns matches
+    DuckDB row by row, in order, not just as a row multiset."""
+    fuzz_mod.reseed(42)
+    for stmt in fuzz_mod.ORDER_SETUP:
+        loaded_engine.execute(stmt)
+        fuzz_duck.execute(stmt)
+    try:
+        for _ in range(30):
+            q = fuzz_mod.gen_order_query()
+            d = fuzz_duck.execute(q).fetchall()
+            s = [tuple(r) for r in loaded_engine.execute(q).collect()]
+            assert fuzz_mod.rows_match(d, s, ordered=True), q
+    finally:
+        loaded_engine.execute("DROP TABLE ord_c")
+        fuzz_duck.execute("DROP TABLE ord_c")
+
+
 def test_sixth_wave_regressions(loaded_engine, fuzz_duck):
     """Pins the three bugs the sixth-wave fuzz grammar caught:
     1. plan-cache collision — two statements with byte-identical main
@@ -53,7 +71,7 @@ def test_sixth_wave_regressions(loaded_engine, fuzz_duck):
        cached plan (the override bindings are part of the cache key);
     2. GROUPING SETS/CUBE over an EMPTY input must emit the empty-set
        global row (Spark natively returns zero rows);
-    3. ORDER BY ALL expands to ordinals with DuckDB's NULLS LAST so
+    3. ORDER BY ALL takes DuckDB's NULLS LAST like any other item, so
        grouping-set NULL rows sort like DuckDB even on the native
        (LIMIT-bearing) path."""
     qs = [

@@ -147,6 +147,67 @@ def test_small_sort_skips_range_exchange(loaded_engine, spark):
         sess.SMALL_SORT_MAX_INPUT_BYTES = old
 
 
+_SORT_TABLES = [
+    "CREATE TABLE os_t (a INTEGER, b VARCHAR, c INTEGER)",
+    "INSERT INTO os_t VALUES (2, 'x', 1), (NULL, 'y', 2), (1, NULL, 3),"
+    " (3, 'z', 4), (NULL, NULL, 5), (2, 'w', 6)",
+    "CREATE TABLE os_u (a INTEGER, b VARCHAR)",
+    "INSERT INTO os_u VALUES (5, 'q'), (NULL, 'r'), (2, NULL)",
+]
+
+# every shape sorts totally (os_t.c is unique), so DuckDB's row order is
+# the only right one
+_SORT_SHAPES = [
+    "SELECT * FROM os_t ORDER BY ALL",
+    "SELECT * FROM os_t ORDER BY ALL LIMIT 2",
+    "SELECT * FROM os_t ORDER BY ALL DESC",
+    "SELECT * FROM os_t ORDER BY ALL DESC LIMIT 3",
+    "SELECT b FROM os_t ORDER BY c DESC",
+    "SELECT t.b, t.c FROM os_t t ORDER BY t.b, t.c",
+    "WITH w AS (SELECT a, b, c FROM os_t WHERE c > 1)"
+    " SELECT b, c FROM w ORDER BY a DESC, c",
+    "SELECT a, b FROM os_t UNION SELECT a, b FROM os_u ORDER BY a, b",
+    "SELECT DISTINCT a FROM os_t ORDER BY a",
+    "SELECT DISTINCT ON (a) a, b, c FROM os_t ORDER BY a, c DESC",
+    "SELECT c, sum(a) OVER (ORDER BY c) AS s FROM os_t ORDER BY 1",
+]
+
+
+def test_trailing_sort_matches_duckdb_in_order(engine, monkeypatch):
+    """A trailing ORDER BY returns DuckDB's rows in DuckDB's order, over
+    NULL-bearing in-session tables, at the default small-sort gate (the
+    analyzed Sort over one partition: no range exchange) and with the
+    gate at zero (Spark's range sort)."""
+    import duckdb
+
+    from duckdb_nsql_spark import session as sess
+
+    from .test_dml_ext import _jobs_started
+
+    ddb = duckdb.connect()
+    for s in _SORT_TABLES:
+        engine.execute(s)
+        ddb.execute(s)
+    for gate in (sess.SMALL_SORT_MAX_INPUT_BYTES, 0):
+        monkeypatch.setattr(sess, "SMALL_SORT_MAX_INPUT_BYTES", gate)
+        for q in _SORT_SHAPES:
+            df = engine.execute(q)
+            assert [tuple(r) for r in df.collect()] == ddb.execute(
+                q
+            ).fetchall(), (gate, q)
+            if gate:
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                assert "rangepartitioning" not in plan, (q, plan)
+    monkeypatch.undo()
+    # an unselected sort key stays one sorted stage: one Spark job
+    rows, jobs = _jobs_started(
+        engine.spark,
+        lambda: engine.execute("SELECT b FROM os_t ORDER BY c").collect(),
+    )
+    assert [r[0] for r in rows] == ["x", "y", None, "z", None, "w"]
+    assert len(jobs) == 1, jobs
+
+
 def test_whole_stage_codegen_covers_filter_agg(loaded_engine):
     df = loaded_engine.execute(
         "SELECT l_returnflag, count(*) AS n FROM lineitem "
