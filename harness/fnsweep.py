@@ -1,10 +1,9 @@
 """Function-surface parity sweep: evaluate a battery of DuckDB-dialect
-expressions through the engine AND through DuckDB on the same tables;
-report mismatches/errors. Not a test — an exploration harness used to
-drive rewrite-pass coverage (results get pinned as workload queries /
-rewrite unit tests once fixed).
+expressions through the engine AND through DuckDB on the same tables and
+report mismatches and errors. ``tests/test_fnsweep.py`` runs it as a
+gate through ``run_sweep``; run it directly to print every failing case.
 
-Usage: PYTHONPATH=/root/repo python harness/fnsweep.py [group ...]
+Usage: PYTHONPATH=. python harness/fnsweep.py [group ...]
 """
 from __future__ import annotations
 
@@ -294,6 +293,38 @@ EXPRS: list[tuple[str, str]] = [
     ("json", "json_extract('{\"a\": {\"b\": 7}}', '$.a.b')"),
     ("str", "'abc' GLOB 'a*'"),
     ("str", "'abc' SIMILAR TO 'a.c'"),
+    # one call per rewritten function name that nothing else exercised
+    ("list", "array_aggr([1,2,3], 'sum')"),
+    ("list", "array_aggregate([3,1,2], 'max')"),
+    ("list", "array_append([1,2], n_nationkey)"),
+    ("list", "array_distance([1.0, 2.0]::DOUBLE[2], [4.0, 6.0]::DOUBLE[2])"),
+    ("list", "array_dot_product([1.0, 2.0]::DOUBLE[2], [3.0, 4.0]::DOUBLE[2])"),
+    ("list", "array_grade_up([30,10,20])"),
+    ("list", "array_reduce([1,2,3], (a, b) -> a + b)"),
+    ("list", "array_transform([1,2,3], x -> x + n_nationkey)"),
+    ("list", "list_apply([1,2,3], x -> x * 3)"),
+    ("list", "list_has_any([1,2], [2,3])"),
+    ("list", "list_histogram([1,1,2])"),
+    ("list", "list_inner_product([1.0,2.0], [3.0,4.0])"),
+    ("list", "list_value(1, n_nationkey)"),
+    ("list", "array_length([1,2,3])"),
+    ("list", "array_length([1,2,3], 1)"),
+    ("str", "editdist3(n_name, 'ALGERIA')"),
+    ("str", "not_ilike_escape(n_name, '%a!_%', '!')"),
+    ("str", "not_like_escape(n_name, '%!_%', '!')"),
+    ("str", "right_grapheme(n_name, 2)"),
+    ("str", "substring_grapheme(n_name, 2, 3)"),
+    ("str", "unhex('414243')"),
+    ("dt", "datesub('month', DATE '2024-01-31', DATE '2024-05-01')"),
+    ("dt", "isoyear(DATE '2021-01-01')"),
+    ("dt", "millennium(DATE '2024-01-01')"),
+    ("dt", "timezone_minute(TIMESTAMP '2024-01-01 00:00:01')"),
+    ("dt", "TIMESTAMP '2000-01-01 00:00:00' + to_centuries(1)"),
+    ("dt", "TIMESTAMP '2000-01-01 00:00:00' + to_decades(2)"),
+    ("dt", "TIMESTAMP '2000-01-01 00:00:00' + to_millennia(1)"),
+    ("dt", "TIMESTAMP '2000-01-31 00:00:00' + to_months(1)"),
+    ("dt", "TIMESTAMP '2000-02-29 00:00:00' + to_years(1)"),
+    ("json", "json_transform_strict('{\"a\": 1}', '{\"a\": \"INTEGER\"}')"),
 ]
 
 # aggregates: SELECT <expr> AS v FROM orders (single row result)
@@ -359,6 +390,9 @@ AGG_EXPRS: list[tuple[str, str]] = [
     ("agg", "count(*) FILTER (o_totalprice > 200000)"),
     ("agg", "sum(o_totalprice ORDER BY o_orderkey)"),
     ("agg", "histogram(o_custkey % 4)"),
+    ("agg", "round(geometric_mean(o_totalprice), 2)"),
+    ("agg", "round(kurtosis_pop(o_totalprice), 4)"),
+    ("agg", "listagg(DISTINCT o_orderstatus, '|' ORDER BY o_orderstatus)"),
 ]
 
 
@@ -399,57 +433,82 @@ KNOWN_DIFFS: dict[str, str] = {
     "string_agg(DISTINCT o_orderstatus, '|')": "DISTINCT order unspecified in both engines",
     "list_zip([1,2],[3,4])": "zip struct field names differ (list_1/list_2 vs 0/1); values equal",
     "list_zip([1,2,3], ['a','b'])": "zip struct field names differ; values equal",
-    "make_time(12, 30, 15.5)": "TIME type unsupported by this Spark build (UNSUPPORTED_TIME_TYPE)",
 }
 
 
-def main() -> None:
-    groups = set(sys.argv[1:])
-    from duckdb_nsql_spark.session import DuckSparkSession, build_spark
+def run_sweep(eng, con, groups=()) -> dict:
+    """Run every case (or only those in ``groups``) through the engine
+    ``eng`` and the DuckDB connection ``con``, both holding TABLES.
+    Returns the counts and the failing cases: ``failures`` lists
+    (kind, sql, detail) for each mismatch and error, ``known`` the
+    KNOWN_DIFFS cases that still differ and ``stale_known`` those that
+    now match DuckDB."""
+    cases = [
+        (g, f"SELECT {e} AS v FROM nation ORDER BY n_nationkey LIMIT 5")
+        for g, e in EXPRS
+    ] + [(g, f"SELECT {e} AS v FROM orders") for g, e in AGG_EXPRS]
+    res = {"ok": 0, "mismatch": 0, "engine_err": 0, "oracle_err": 0,
+           "known_diff": 0, "failures": [], "known": [], "stale_known": []}
+    for g, sql in cases:
+        if groups and g not in groups:
+            continue
+        known = any(x in sql for x in KNOWN_DIFFS)
+        try:
+            want = [canon(r[0]) for r in con.execute(sql).fetchall()]
+        except Exception as e:  # noqa: BLE001
+            res["oracle_err"] += 1
+            res["failures"].append(("oracle_err", sql,
+                                    f"{type(e).__name__}: {str(e).splitlines()[0][:100]}"))
+            continue
+        try:
+            got = [canon(r[0]) for r in eng.execute(sql).collect()]
+        except Exception as e:  # noqa: BLE001
+            if known:
+                res["known_diff"] += 1
+                res["known"].append(sql)
+                continue
+            res["engine_err"] += 1
+            res["failures"].append(("engine_err", sql,
+                                    f"{type(e).__name__}: {str(e).splitlines()[0][:160]}"))
+            continue
+        if got == want:
+            res["ok"] += 1
+            if known:
+                res["stale_known"].append(sql)
+        elif known:
+            res["known_diff"] += 1
+            res["known"].append(sql)
+        else:
+            res["mismatch"] += 1
+            res["failures"].append(("mismatch", sql,
+                                    f"duckdb={want[:3]} engine={got[:3]}"))
+    return res
 
-    spark = build_spark(app_name="fnsweep", cpus=8)
-    eng = DuckSparkSession(spark=spark)
-    eng.register_parquet_dir(SF)
+
+def oracle_connection():
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
         )
+    return con
 
-    cases = [
-        (g, f"SELECT {e} AS v FROM nation ORDER BY n_nationkey LIMIT 5")
-        for g, e in EXPRS
-    ] + [(g, f"SELECT {e} AS v FROM orders") for g, e in AGG_EXPRS]
 
-    ok = mismatch = engine_err = oracle_err = known_diff = 0
-    for g, sql in cases:
-        if groups and g not in groups:
-            continue
-        try:
-            want = [canon(r[0]) for r in con.execute(sql).fetchall()]
-        except Exception as e:  # noqa: BLE001
-            oracle_err += 1
-            print(f"[oracle-err] {sql!r}: {type(e).__name__}: {str(e).splitlines()[0][:100]}")
-            continue
-        try:
-            got = [canon(r[0]) for r in eng.execute(sql).collect()]
-        except Exception as e:  # noqa: BLE001
-            if any(x in sql for x in KNOWN_DIFFS):
-                known_diff += 1
-                continue
-            engine_err += 1
-            print(f"[ENGINE-ERR] {sql!r}: {type(e).__name__}: {str(e).splitlines()[0][:160]}")
-            continue
-        if got == want:
-            ok += 1
-        elif any(e in sql for e in KNOWN_DIFFS):
-            known_diff += 1
-        else:
-            mismatch += 1
-            print(f"[MISMATCH]   {sql!r}\n   duckdb={want[:3]}\n   engine={got[:3]}")
+def main() -> None:
+    from duckdb_nsql_spark.session import DuckSparkSession, build_spark
+
+    spark = build_spark(app_name="fnsweep", cpus=8)
+    eng = DuckSparkSession(spark=spark)
+    eng.register_parquet_dir(SF)
+    res = run_sweep(eng, oracle_connection(), set(sys.argv[1:]))
+    for kind, sql, detail in res["failures"]:
+        print(f"[{kind}] {sql!r}: {detail}")
+    for sql in res["stale_known"]:
+        print(f"[stale-known] {sql!r} now matches DuckDB")
     print(
-        f"\nok={ok} mismatch={mismatch} engine_err={engine_err} "
-        f"oracle_err={oracle_err} known_diff={known_diff}"
+        f"\nok={res['ok']} mismatch={res['mismatch']} "
+        f"engine_err={res['engine_err']} oracle_err={res['oracle_err']} "
+        f"known_diff={res['known_diff']}"
     )
 
 
