@@ -688,7 +688,7 @@ def pass_list_fn_subscript(
     resolver types as string), rewrite to subscript form BEFORE
     pass_index_slice, whose dispatch implements the string semantics.
     Anything else (list literals, unknown columns, expressions) keeps
-    the list-semantics _FN_MACROS templates — the fn name's historical
+    the list-semantics _FN_REWRITES templates — the fn name's historical
     default."""
     out = list(tokens)
     i = 0
@@ -888,8 +888,8 @@ def pass_index_slice(tokens: list[Token], resolver: Resolver) -> list[Token]:
         if kind == "map" and not has_colon and sig_inner:
             # subscript by KEY of ANY type (string, int, ...): DuckDB
             # map[k] yields the LIST of values for the key ([] when
-            # absent). Emit the map_extract() form: the _FN_MACROS pass
-            # expands it to the CASE construct, and a chained subscript
+            # absent). Emit the map_extract() form: its _FN_REWRITES
+            # entry expands it to the CASE construct, and a chained subscript
             # (m['k'][1]) structurally infers ARRAY from the MAP_EXTRACT
             # name instead of falling back to string
             b = render(base)
@@ -2395,143 +2395,9 @@ def pass_int_cast_rounds(tokens: list[Token]) -> list[Token]:
 
 
 # ---------------------------------------------------------------------------
-# function renames
+# function rewrites: helpers of the _FN_REWRITES templates
 # ---------------------------------------------------------------------------
 
-_SIMPLE_RENAMES = {
-    # DuckDB name -> Spark name (argument-compatible)
-    # (COUNT_STAR is NOT here: the _FN_MACROS_0 dispatch branch owns
-    # every valid call shape — count_star() and count_star(*) — and a
-    # rename here would emit invalid bare count())
-    "LIST_CONTAINS": "array_contains",
-    "LIST_VALUE": "array",
-    "LIST_TRANSFORM": "transform",
-    "LIST_FILTER": "filter",
-    "LIST_APPLY": "transform",
-    "APPLY": "transform",
-    "ARRAY_TRANSFORM": "transform",
-    "ARRAY_FILTER": "filter",
-    "LIST_PACK": "array",
-    # 1-based position, 0 when absent, NULL needle -> NULL (exact match)
-    "ARRAY_INDEXOF": "array_position",
-    "LIST_INDEXOF": "array_position",
-    "LIST_MIN": "array_min",
-    "LIST_MAX": "array_max",
-    "LIST_DISTINCT": "array_distinct",
-    "LIST_CONCAT": "concat",
-    "LIST_APPEND": "array_append",
-    "ARRAY_APPEND": "array_append",
-    "LIST_REVERSE": "reverse",
-    "ARRAY_REVERSE": "reverse",
-    "ARRAY_HAS_ANY": "arrays_overlap",
-    "ARRAY_LENGTH": "size",
-    "LIST_HAS_ANY": "arrays_overlap",
-    "STRPOS": "instr",
-    "ARRAY_TO_STRING": "array_join",
-    # UNNEST has a dedicated branch (struct unnest -> inline; arrays ->
-    # explode — one generator per select, multiple unnests err loudly)
-    "ARG_MAX": "max_by",
-    "ARG_MIN": "min_by",
-    "ARGMAX": "max_by",
-    "ARGMIN": "min_by",
-    "MAX_BY": "max_by",
-    "MIN_BY": "min_by",
-    "TO_TIMESTAMP": "timestamp_seconds",  # DuckDB to_timestamp(sec)
-    "STRING_SPLIT_REGEX": "split",
-    "STR_SPLIT_REGEX": "split",
-    "REGEXP_SPLIT_TO_ARRAY": "split",
-    "LIST_CAT": "concat",
-    "ARRAY_CONCAT": "concat",
-    "EDITDIST3": "levenshtein",
-    "STARTS_WITH": "startswith",
-    "ENDS_WITH": "endswith",
-    "PREFIX": "startswith",
-    "SUFFIX": "endswith",
-    # PRINTF has a dedicated branch (numeric-directive casts); bare
-    # fallthrough keeps the name mapping for non-literal format strings
-    "CHR": "char",
-    "RANDOM": "rand",
-    # DuckDB array_agg/list aggregate -> collect_list (both orderless)
-    "ARRAY_AGG": "collect_list",
-    "LIST": "collect_list",
-    "TO_BASE64": "base64",
-    "FROM_BASE64": "unbase64",
-    "TO_HEX": "hex",
-    "FROM_HEX": "unhex",
-    "UNHEX": "unhex",
-    "UNICODE": "ascii",
-    "ORD": "ascii",
-    # DuckDB list_position/list_indexof return 0 on a miss, like Spark
-    "LIST_POSITION": "array_position",
-    "LIST_INDEXOF": "array_position",
-    "LIST_ZIP": "arrays_zip",
-    "ARRAY_ZIP": "arrays_zip",
-    "ARRAY_APPLY": "transform",
-    "LIST_INTERSECT": "array_intersect",
-    # fixed-size ARRAY constructor / json spellings
-    "ARRAY_VALUE": "array",
-    "ARRAY_TO_JSON": "to_json",
-    "ARBITRARY": "any_value",
-    # Kahan-compensated float aggs: Spark's sum/avg (values agree; the
-    # compensation is a single-node numerical nicety, meaningless once the
-    # sum is a distributed two-phase merge)
-    # (FSUM/SUMKAHAN/KAHAN_SUM/FAVG live in _FN_MACROS_1: DuckDB's
-    # float-compensated aggregates always return DOUBLE, so DECIMAL
-    # inputs cast before the fold)
-    "APPROX_QUANTILE": "approx_percentile",
-    "WEEK": "weekofyear",
-    "WEEKOFYEAR": "weekofyear",
-    "DATETRUNC": "date_trunc",  # Spark date_trunc shares DuckDB's arg order
-    "GEN_RANDOM_UUID": "uuid",
-    "UUIDV4": "uuid",
-}
-
-# macros expanded into pure Spark expressions over the argument spans
-_DOT_MACRO = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (s, x) -> s + x)"
-)
-_NORM_MACRO = (
-    "sqrt(aggregate({a}, CAST(0 AS DOUBLE), "
-    "(s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-)
-_FN_MACROS = {
-    "LIST_DOT_PRODUCT": _DOT_MACRO,
-    "LIST_INNER_PRODUCT": _DOT_MACRO,
-    # fixed-size ARRAY spellings: same math over Spark arrays (the
-    # engine types DuckDB's ARRAY(T, n) as array<T>)
-    "ARRAY_DOT_PRODUCT": _DOT_MACRO,
-    "ARRAY_INNER_PRODUCT": _DOT_MACRO,
-    "LIST_COSINE_SIMILARITY": (
-        f"({_DOT_MACRO} / ({_NORM_MACRO} * "
-        + _NORM_MACRO.replace("{a}", "{b}")
-        + "))"
-    ),
-    "ARRAY_COSINE_SIMILARITY": (
-        f"({_DOT_MACRO} / ({_NORM_MACRO} * "
-        + _NORM_MACRO.replace("{a}", "{b}")
-        + "))"
-    ),
-    # DuckDB list_prepend(elem, list) vs Spark array_prepend(list, elem)
-    "LIST_PREPEND": "array_prepend({b}, {a})",
-    # exact interpolated quantile: DuckDB quantile_cont == Spark percentile
-    # (both take a scalar or an array of fractions)
-    "QUANTILE_CONT": "percentile({a}, {b})",
-    # (QUANTILE_DISC/QUANTILE live in _FN_MACROS_N: the sorted-collect
-    # form preserves the input's type — Spark's percentile_disc always
-    # returns DOUBLE, DuckDB returns an actual element)
-    # DuckDB xor() function -> Spark's ^ operator (safe AFTER
-    # pass_caret_power has claimed user-written carets as exponentiation)
-    "XOR": "({a} ^ {b})",
-    # DuckDB map_extract returns the LIST of values for the key
-    # ([] when absent) — not a scalar. Spelled with Spark's native map
-    # subscript, NOT element_at: an element_at in the expansion would
-    # re-trigger the ELEMENT_AT branch below and expand forever.
-    "MAP_EXTRACT": (
-        "(CASE WHEN map_contains_key({a}, {b}) "
-        "THEN array(({a})[{b}]) ELSE array() END)"
-    ),
-}
 
 def _series_sequence_sql(args: list[str], inclusive: bool) -> str:
     """Guarded Spark ``sequence()`` for DuckDB range/generate_series.
@@ -2654,11 +2520,11 @@ def _time_bucket_sql(months: int, secs: int, ts: str) -> str:
 # inner regexp_replace runs on just the matched substring so backrefs
 # ($1 after conversion) still work.
 _REGEXP_REPLACE_FIRST = (
-    "CASE WHEN regexp_instr({a}, {b}) > 0 THEN ("
-    "substring({a}, 1, regexp_instr({a}, {b}) - 1) || "
-    "regexp_replace(regexp_extract({a}, {b}, 0), {b}, {c}) || "
-    "substring({a}, regexp_instr({a}, {b}) + length(regexp_extract({a}, {b}, 0)))"
-    ") ELSE {a} END"
+    "CASE WHEN regexp_instr({0}, {1}) > 0 THEN ("
+    "substring({0}, 1, regexp_instr({0}, {1}) - 1) || "
+    "regexp_replace(regexp_extract({0}, {1}, 0), {1}, {2}) || "
+    "substring({0}, regexp_instr({0}, {1}) + length(regexp_extract({0}, {1}, 0)))"
+    ") ELSE {0} END"
 )
 
 
@@ -2674,37 +2540,12 @@ def _convert_regexp_replacement(tok: Token) -> Token:
     sql = orig.replace("\\", "\\\\")
     return Token(STRING, "'" + sql + "'")
 
+
 # empty list -> NULL (DuckDB list_sum/list_avg semantics), else the fold
 _SUM_FOLD = (
-    "(CASE WHEN size({a}) = 0 THEN NULL ELSE "
-    "aggregate({a}, CAST(0 AS DOUBLE), (s, x) -> s + CAST(x AS DOUBLE)) END)"
+    "(CASE WHEN size({0}) = 0 THEN NULL ELSE "
+    "aggregate({0}, CAST(0 AS DOUBLE), (s, x) -> s + CAST(x AS DOUBLE)) END)"
 )
-
-# single-argument macros (Spark 4 has its own dayname() -> 'Mon'; DuckDB
-# returns the full 'Monday' — must expand before Spark resolves the name)
-_FN_MACROS_1 = {
-    "DAYNAME": "date_format({a}, 'EEEE')",
-    "MONTHNAME": "date_format({a}, 'MMMM')",
-    # double-precision folds (DuckDB keeps integer types for int lists;
-    # values agree, stated type is DOUBLE)
-    "LIST_SUM": _SUM_FOLD,
-    "LIST_AVG": f"({_SUM_FOLD} / size({{a}}))",
-    # DuckDB list_unique = COUNT of distinct NON-NULL elements
-    "LIST_UNIQUE": "size(filter(array_distinct({a}), x -> x IS NOT NULL))",
-    # epoch(ts) -> seconds as double (DuckDB keeps sub-second precision;
-    # 1e6 not 1000000.0 — Spark parses the latter as a DECIMAL literal)
-    "EPOCH": "(unix_micros(CAST({a} AS TIMESTAMP)) / 1e6)",
-    "EPOCH_MS": "unix_millis(CAST({a} AS TIMESTAMP))",
-    # Spark spells it sha2(expr, bits)
-    "SHA256": "sha2({a}, 256)",
-    # float-compensated aggregates: always DOUBLE in DuckDB (the Kahan
-    # compensation itself is a single-node nicety — meaningless once the
-    # sum is a distributed two-phase merge)
-    "FSUM": "CAST(sum(CAST({a} AS DOUBLE)) AS DOUBLE)",
-    "SUMKAHAN": "CAST(sum(CAST({a} AS DOUBLE)) AS DOUBLE)",
-    "KAHAN_SUM": "CAST(sum(CAST({a} AS DOUBLE)) AS DOUBLE)",
-    "FAVG": "avg(CAST({a} AS DOUBLE))",
-}
 
 # date_part fields whose numbering differs between the dialects:
 # DuckDB dow is Sunday=0..Saturday=6; isodow is Monday=1..Sunday=7
@@ -2795,286 +2636,6 @@ def _age_template(args: list[str]) -> str:
     )
 
 
-# Arity-dispatched macros producing FINAL Spark text: argument spans are
-# pre-rewritten recursively, then the expansion is spliced in and the scan
-# advances PAST it (never re-scanned) — so templates may safely mention
-# names that are themselves dialect-mapped (skewness, weekday, trim, ...).
-# DuckDB semantics verified against duckdb 1.x (see tests/test_rewrites.py).
-_FN_MACROS_N: dict[str, dict[int, str]] = {
-    # char-set trims (DuckDB trim(s, chars); Spark needs TRIM(BOTH..FROM..))
-    "TRIM": {2: "TRIM(BOTH {1} FROM {0})"},
-    "LTRIM": {2: "TRIM(LEADING {1} FROM {0})"},
-    "RTRIM": {2: "TRIM(TRAILING {1} FROM {0})"},
-    # numbers
-    "TO_BASE": {2: "conv({0}, 10, {1})"},
-    # even()/fdiv()/fmod() return DOUBLE in DuckDB regardless of input type
-    "EVEN": {1: "CAST(ceil(abs({0}) / 2) * 2 * "
-                "(CASE WHEN ({0}) < 0 THEN -1 ELSE 1 END) AS DOUBLE)"},
-    # Spark NaN = NaN is TRUE, so equality IS the NaN test (and NULL
-    # propagates, matching DuckDB — Spark's own isnan(NULL) is false)
-    "ISNAN": {1: "(({0}) = double('NaN'))"},
-    "ISINF": {1: "(abs(CAST(({0}) AS DOUBLE)) = double('Infinity'))"},
-    "ISFINITE": {
-        1: "(CASE WHEN ({0}) = double('NaN') THEN false "
-           "ELSE abs(CAST(({0}) AS DOUBLE)) <> double('Infinity') END)"
-    },
-    # 1-arg trunc: toward-zero truncation keeping the numeric value
-    "TRUNC": {1: "(floor(abs({0})) * CASE WHEN ({0}) < 0 THEN -1 ELSE 1 END)"},
-    # DuckDB fdiv/fmod are FLOORED division/modulo (sign of divisor)
-    "FDIV": {2: "CAST(floor(({0}) / ({1})) AS DOUBLE)"},
-    "FMOD": {2: "CAST(({0}) - floor(({0}) / ({1})) * ({1}) AS DOUBLE)"},
-    # DuckDB operator-function aliases; divide is the `//` operator
-    # (truncating on integers — Spark's `div` matches that tier)
-    "ADD": {2: "(({0}) + ({1}))"},
-    "SUBTRACT": {2: "(({0}) - ({1}))"},
-    "MULTIPLY": {2: "(({0}) * ({1}))"},
-    "DIVIDE": {2: "(({0}) div ({1}))"},
-    # dates
-    "YEARWEEK": {1: "(extract(YEAROFWEEK FROM {0}) * 100 + weekofyear({0}))"},
-    "CENTURY": {1: "CAST(ceil(year({0}) / 100.0) AS BIGINT)"},
-    "DECADE": {1: "CAST(floor(year({0}) / 10) AS BIGINT)"},
-    "MILLENNIUM": {1: "CAST(ceil(year({0}) / 1000.0) AS BIGINT)"},
-    "ISOYEAR": {1: "extract(YEAROFWEEK FROM {0})"},
-    # DuckDB dayofweek/weekday: Sunday=0..Saturday=6; isodow: Mon=1..Sun=7
-    "DAYOFWEEK": {1: "(dayofweek({0}) - 1)"},
-    "WEEKDAY": {1: "(dayofweek({0}) - 1)"},
-    "ISODOW": {1: "(weekday({0}) + 1)"},
-    # lists
-    "LIST_REVERSE_SORT": {1: "sort_array({0}, false)"},
-    "LIST_SLICE": {
-        3: "slice({0}, {1}, greatest(({2}) - ({1}) + 1, 0))",
-        4: _SLICE_STEP_MACRO,
-    },
-    "ARRAY_SLICE": {
-        3: "slice({0}, {1}, greatest(({2}) - ({1}) + 1, 0))",
-        4: _SLICE_STEP_MACRO,
-    },
-    "LIST_REDUCE": {
-        2: "aggregate(slice({0}, 2, greatest(size({0}) - 1, 0)), "
-           "try_element_at({0}, 1), {1})"
-    },
-    "LIST_ANY_VALUE": {1: "try_element_at(filter({0}, x -> x IS NOT NULL), 1)"},
-    # indices that would sort the list ascending, nulls last (APL grade-up)
-    "LIST_GRADE_UP": {
-        1: "transform(array_sort(zip_with({0}, sequence(1, size({0})), "
-           "(v, i) -> struct(v AS v, i AS i)), "
-           "(x, y) -> CASE WHEN x.v IS NULL AND y.v IS NULL THEN 0 "
-           "WHEN x.v IS NULL THEN 1 WHEN y.v IS NULL THEN -1 "
-           "WHEN x.v < y.v THEN -1 WHEN x.v > y.v THEN 1 ELSE 0 END), "
-           "s -> s.i)"
-    },
-    "LIST_HAS_ALL": {2: "forall({1}, x -> array_contains({0}, x))"},
-    "ARRAY_HAS_ALL": {2: "forall({1}, x -> array_contains({0}, x))"},
-    # aggregates
-    "GEOMEAN": {1: "exp(avg(ln({0})))"},
-    "GEOMETRIC_MEAN": {1: "exp(avg(ln({0})))"},
-    # DuckDB reports SAMPLE-corrected moments (G1/G2); Spark population g1/g2
-    "SKEWNESS": {
-        1: "(skewness({0}) * sqrt(count({0}) * (count({0}) - 1.0)) / (count({0}) - 2))"
-    },
-    "KURTOSIS": {
-        1: "((count({0}) - 1.0) / ((count({0}) - 2) * (count({0}) - 3)) "
-           "* ((count({0}) + 1) * kurtosis({0}) + 6))"
-    },
-    "KURTOSIS_POP": {1: "kurtosis({0})"},
-    "RESERVOIR_QUANTILE": {
-        2: "approx_percentile({0}, {1})",
-        3: "approx_percentile({0}, {1})",
-    },
-    # value-frequency map ordered by key (small-group collect_list scan;
-    # DuckDB histogram returns MAP(key -> count))
-    "HISTOGRAM": {
-        1: "map_from_entries(transform(array_sort(array_distinct("
-           "collect_list({0}))), v -> struct(v, "
-           "size(filter(collect_list({0}), y -> y = v)))))"
-    },
-    # engine typename, translated to DuckDB spelling by a registered UDF
-    "TYPEOF": {1: "duckdb_typename(typeof({0}))"},
-    # DuckDB left/right accept NEGATIVE counts: all-but-last-n /
-    # all-but-first-n (Spark returns ''); spelled via substring so the
-    # expansion never re-triggers itself
-    "LEFT": {
-        2: "(CASE WHEN ({1}) < 0 "
-           "THEN substring({0}, 1, greatest(length({0}) + ({1}), 0)) "
-           "ELSE substring({0}, 1, {1}) END)"
-    },
-    "RIGHT": {
-        2: "(CASE WHEN ({1}) < 0 THEN substring({0}, 1 - ({1})) "
-           "WHEN ({1}) = 0 THEN '' "
-           "ELSE substring({0}, greatest(0 - ({1}), 0 - length({0}))) END)"
-    },
-    # DuckDB sign() returns an integer; Spark's returns DOUBLE
-    "SIGN": {1: "CAST(signum({0}) AS INTEGER)"},
-    # Spark chr()/char() wrap at 256; %c takes the full unicode codepoint
-    "CHR": {1: "format_string('%c', CAST({0} AS INT))"},
-    # DuckDB strlen counts BYTES (length counts characters in both)
-    "STRLEN": {1: "octet_length({0})"},
-    # naive TIMESTAMPs carry no zone; the engine pins the session to UTC
-    # (io contract), so the offset is identically zero — like DuckDB's
-    # 2-arg timezone(tz, naive-ts): interpret in tz, render in the
-    # session zone (UTC by io contract) — exactly to_utc_timestamp
-    "TIMEZONE": {1: "CAST(0 AS INTEGER)", 2: "to_utc_timestamp({1}, {0})"},
-    "TIMEZONE_HOUR": {1: "CAST(0 AS INTEGER)"},
-    "TIMEZONE_MINUTE": {1: "CAST(0 AS INTEGER)"},
-    # DuckDB list_concat treats NULL as the identity ([1]||NULL = [1]);
-    # Spark's concat propagates NULL (and a bare NULL literal won't even
-    # type-check against an array) — wrap both sides in an array so the
-    # NULL coerces to the element type, drop it, flatten
-    "LIST_CONCAT": {
-        2: "flatten(filter(array({0}, {1}), x -> x IS NOT NULL))"
-    },
-    "ARRAY_CAT": {
-        2: "flatten(filter(array({0}, {1}), x -> x IS NOT NULL))"
-    },
-    # DuckDB age(): SYMBOLIC year/month/day interval — months count by
-    # calendar (months_between + add_months), the remainder is exact
-    # seconds; rendered as a day-time interval using DuckDB's own
-    # 30-day-month conversion (what its Python timedelta shows)
-    "AGE": {
-        2: _age_template,
-        1: "make_dt_interval(0, 0, 0, "
-           "floor(months_between(current_timestamp(), "
-           "CAST({0} AS TIMESTAMP))) * 2592000 + "
-           "(unix_micros(current_timestamp()) - "
-           "unix_micros(CAST({0} AS TIMESTAMP) + make_ym_interval(0, "
-           "CAST(floor(months_between(current_timestamp(), "
-           "CAST({0} AS TIMESTAMP))) AS INT)))) / 1e6)",
-    },
-    # julian day number, calibrated to DuckDB (julian(DATE '1970-01-01')
-    # = 2440588.0, time-of-day as a fraction)
-    "JULIAN": {1: "(2440588.0 + unix_micros(CAST({0} AS TIMESTAMP)) / 86400e6)"},
-    # grapheme-cluster variants: code-point approximation (true cluster
-    # segmentation needs ICU; identical for precomposed text)
-    "LENGTH_GRAPHEME": {1: "length({0})"},
-    "LEFT_GRAPHEME": {
-        2: "(CASE WHEN ({1}) < 0 "
-           "THEN substring({0}, 1, greatest(length({0}) + ({1}), 0)) "
-           "ELSE substring({0}, 1, {1}) END)"
-    },
-    "RIGHT_GRAPHEME": {
-        2: "(CASE WHEN ({1}) < 0 THEN substring({0}, 1 - ({1})) "
-           "WHEN ({1}) = 0 THEN '' "
-           "ELSE substring({0}, greatest(0 - ({1}), 0 - length({0}))) END)"
-    },
-    "SUBSTRING_GRAPHEME": {
-        2: "substring({0}, {1})", 3: "substring({0}, {1}, {2})",
-    },
-    # regexp_full_match(s, re) -> anchored RLIKE
-    "REGEXP_FULL_MATCH": {
-        2: "(({0}) RLIKE ('^(?:' || ({1}) || ')$'))"
-    },
-    # LIKE with an explicit escape character (Spark has the same clause)
-    "LIKE_ESCAPE": {3: "(({0}) LIKE ({1}) ESCAPE {2})"},
-    "NOT_LIKE_ESCAPE": {3: "(NOT (({0}) LIKE ({1}) ESCAPE {2}))"},
-    "ILIKE_ESCAPE": {3: "(upper({0}) LIKE upper({1}) ESCAPE {2})"},
-    "NOT_ILIKE_ESCAPE": {
-        3: "(NOT (upper({0}) LIKE upper({1}) ESCAPE {2}))"
-    },
-    # list_resize: pad with NULL / the fill value, or truncate
-    "LIST_RESIZE": {
-        2: "slice(transform(sequence(1, greatest(CAST({1} AS INT), 1)), "
-           "i -> try_element_at({0}, i)), 1, CAST({1} AS INT))",
-        3: "slice(transform(sequence(1, greatest(CAST({1} AS INT), 1)), "
-           "i -> CASE WHEN i <= size({0}) THEN element_at({0}, i) "
-           "ELSE ({2}) END), 1, CAST({1} AS INT))",
-    },
-    # list_select(l, idxs): gather by 1-based index (out-of-range -> NULL)
-    "LIST_SELECT": {
-        2: "transform({1}, i -> try_element_at({0}, CAST(i AS INT)))"
-    },
-    "ARRAY_SELECT": {
-        2: "transform({1}, i -> try_element_at({0}, CAST(i AS INT)))"
-    },
-    # list_where(l, mask): keep elements whose mask is true
-    "LIST_WHERE": {
-        2: "transform(filter(zip_with({0}, {1}, "
-           "(x, m) -> struct(x AS v, m AS k)), p -> p.k), p -> p.v)"
-    },
-    "ARRAY_WHERE": {
-        2: "transform(filter(zip_with({0}, {1}, "
-           "(x, m) -> struct(x AS v, m AS k)), p -> p.k), p -> p.v)"
-    },
-    "ARRAY_RESIZE": {
-        2: "slice(transform(sequence(1, greatest(CAST({1} AS INT), 1)), "
-           "i -> try_element_at({0}, i)), 1, CAST({1} AS INT))",
-        3: "slice(transform(sequence(1, greatest(CAST({1} AS INT), 1)), "
-           "i -> CASE WHEN i <= size({0}) THEN element_at({0}, i) "
-           "ELSE ({2}) END), 1, CAST({1} AS INT))",
-    },
-    # format_bytes: binary units, TRUNCATED to one decimal (DuckDB fmt)
-    "FORMAT_BYTES": {1: (
-        "(CASE WHEN abs(CAST({0} AS DOUBLE)) < 1024 "
-        "THEN concat(CAST(CAST({0} AS BIGINT) AS STRING), ' bytes') "
-        + "".join(
-            f"WHEN abs(CAST({{0}} AS DOUBLE)) < {1024.0 ** (k + 1):.0f} "
-            f"THEN concat(CAST(CAST("
-            f"CAST(CAST({{0}} AS DOUBLE) / {1024.0 ** k:.0f} * 10 AS BIGINT) "
-            f"AS DOUBLE) / 10 AS DECIMAL(18,1)), ' {u}') "
-            for k, u in ((1, "KiB"), (2, "MiB"), (3, "GiB"), (4, "TiB"))
-        )
-        + "ELSE concat(CAST(CAST("
-          "CAST(CAST({0} AS DOUBLE) / 1125899906842624 * 10 AS BIGINT) "
-          "AS DOUBLE) / 10 AS DECIMAL(18,1)), ' PiB') END)"
-    )},
-    # map_contains (DuckDB >= 1.1 name)
-    "MAP_CONTAINS": {2: "map_contains_key({0}, {1})"},
-    # top-n aggregate forms (DuckDB min/max/min_by/max_by with an N):
-    # one collect + one local sort per group — no per-row state
-    "MIN": {2: "slice(array_sort(collect_list({0})), 1, CAST({1} AS INT))"},
-    "MAX": {2: "slice(sort_array(collect_list({0}), false), 1, "
-               "CAST({1} AS INT))"},
-    "MIN_BY": {
-        3: "transform(slice(array_sort(collect_list("
-           "CASE WHEN ({1}) IS NOT NULL THEN struct({1} AS k, {0} AS v) "
-           "END)), 1, CAST({2} AS INT)), p -> p.v)"
-    },
-    "MAX_BY": {
-        3: "transform(slice(sort_array(collect_list("
-           "CASE WHEN ({1}) IS NOT NULL THEN struct({1} AS k, {0} AS v) "
-           "END), false), 1, CAST({2} AS INT)), p -> p.v)"
-    },
-    # bitstring_agg: '1' at each present value's offset in [min, max]
-    "BITSTRING_AGG": {
-        1: "array_join(transform(sequence(min({0}), max({0})), "
-           "p -> CASE WHEN array_contains(collect_set({0}), p) "
-           "THEN '1' ELSE '0' END), '')"
-    },
-}
-# DuckDB 1-arg encode/decode: UTF-8 string <-> BLOB
-_FN_MACROS_N["ENCODE"] = {1: "encode({0}, 'UTF-8')"}
-_FN_MACROS_N["DECODE"] = {1: "decode({0}, 'UTF-8')"}
-
-# zero-argument session functions: DuckDB names/values
-_FN_MACROS_0 = {
-    "CURRENT_SCHEMA": "'main'",
-    "TODAY": "current_date()",
-    "TRANSACTION_TIMESTAMP": "current_timestamp()",
-    "UUIDV4": "uuid()",
-    # single-session engine: the txid is the constant baseline (DuckDB's
-    # own in-memory db starts near 0; callers use it for ordering only)
-    "TXID_CURRENT": "CAST(0 AS BIGINT)",
-    "VERSION": "'v1.0.0-spark'",
-}
-
-# arg_max/arg_min top-n forms share the min_by/max_by templates.
-# 2-arg forms: DuckDB SKIPS rows whose VALUE argument is NULL; Spark's
-# min_by/max_by would happily return that NULL row's value. NULL-ing the
-# ordering key for NULL-value rows makes Spark skip them too; the
-# *_null variants are DuckDB's keep-NULLs spelling = plain min_by/max_by.
-_FN_MACROS_N["ARG_MAX"] = {
-    3: _FN_MACROS_N["MAX_BY"][3],
-    2: "max_by({0}, CASE WHEN ({0}) IS NULL THEN NULL ELSE ({1}) END)",
-}
-_FN_MACROS_N["ARGMAX"] = dict(_FN_MACROS_N["ARG_MAX"])
-_FN_MACROS_N["ARG_MIN"] = {
-    3: _FN_MACROS_N["MIN_BY"][3],
-    2: "min_by({0}, CASE WHEN ({0}) IS NULL THEN NULL ELSE ({1}) END)",
-}
-_FN_MACROS_N["ARGMIN"] = dict(_FN_MACROS_N["ARG_MIN"])
-_FN_MACROS_N["ARG_MAX_NULL"] = {2: "max_by({0}, {1})"}
-_FN_MACROS_N["ARG_MIN_NULL"] = {2: "min_by({0}, {1})"}
-
-# --- function-catalog sweep additions (duckdb_functions() diff) -----------
 def _current_schemas_template(args: list[str]) -> Optional[str]:
     """DuckDB current_schemas(true) = the full search path incl.
     implicit entries; (false) = explicit-only (empty for a fresh
@@ -3087,29 +2648,10 @@ def _current_schemas_template(args: list[str]) -> Optional[str]:
     return None
 
 
-_FN_MACROS_N["CURRENT_SCHEMAS"] = {1: _current_schemas_template}
-_FN_MACROS_N["IN_SEARCH_PATH"] = {
-    2: "(({0}) IN ('memory', 'system', 'temp')"
-       " AND ({1}) IN ('main', 'pg_catalog'))"
-}
-_FN_MACROS_N["SEM"] = {1: "(stddev_pop({0}) / sqrt(count({0})))"}
-# bare/array_ aliases of the existing list_* templates (grade_up,
-# no-initial-value reduce, reverse_sort are already defined above)
-_FN_MACROS_N["GRADE_UP"] = dict(_FN_MACROS_N["LIST_GRADE_UP"])
-_FN_MACROS_N["ARRAY_GRADE_UP"] = dict(_FN_MACROS_N["LIST_GRADE_UP"])
-_FN_MACROS_N["REDUCE"] = dict(_FN_MACROS_N["LIST_REDUCE"])
-_FN_MACROS_N["ARRAY_REDUCE"] = dict(_FN_MACROS_N["LIST_REDUCE"])
-_FN_MACROS_N["ARRAY_REVERSE_SORT"] = dict(_FN_MACROS_N["LIST_REVERSE_SORT"])
-_FN_MACROS_N["CONSTANT_OR_NULL"] = {
-    2: "(CASE WHEN ({1}) IS NULL THEN NULL ELSE ({0}) END)"
-}
 _UNBIN_T = (
     "unhex(lpad(conv({0}, 2, 16),"
     " CAST(ceil(length({0}) / 8.0) * 2 AS INT), '0'))"
 )
-_FN_MACROS_N["UNBIN"] = {1: _UNBIN_T}
-_FN_MACROS_N["FROM_BINARY"] = {1: _UNBIN_T}
-_FN_MACROS_N["ROW_TO_JSON"] = {1: "to_json({0})"}
 
 
 _DUCK_TO_SPARK_TYPE = {
@@ -3181,9 +2723,6 @@ def _from_json_template(args: list[str]) -> Optional[str]:
     return f"CAST(from_json({args[0]}, '{parse}') AS {target})"
 
 
-_FN_MACROS_N["FROM_JSON"] = {2: _from_json_template}
-_FN_MACROS_N["JSON_TRANSFORM"] = {2: _from_json_template}
-_FN_MACROS_N["JSON_TRANSFORM_STRICT"] = {2: _from_json_template}
 def _cross3_template(args: list[str]) -> str:
     # DOUBLE elements like DuckDB (decimal literals would otherwise
     # produce a DECIMAL-typed result array in Spark)
@@ -3197,21 +2736,6 @@ def _cross3_template(args: list[str]) -> str:
         f" element_at({a}, 1) * element_at({b}, 2)"
         f" - element_at({a}, 2) * element_at({b}, 1))"
     )
-
-
-_FN_MACROS_N["ARRAY_CROSS_PRODUCT"] = {2: _cross3_template}
-_FN_MACROS_N["LIST_CROSS_PRODUCT"] = {2: _cross3_template}
-
-# BIT functions over the '0'/'1' text carried by the BIT cast
-# passthrough (0-based bit indexes, like DuckDB)
-_FN_MACROS_N["GET_BIT"] = {
-    2: "CAST(substring({0}, CAST({1} AS INT) + 1, 1) AS INT)"
-}
-_FN_MACROS_N["SET_BIT"] = {
-    3: "concat(left({0}, CAST({1} AS INT)), CAST({2} AS STRING),"
-       " substring({0}, CAST({1} AS INT) + 2))"
-}
-_FN_MACROS_N["BITSTRING"] = {2: "lpad({0}, CAST({1} AS INT), '0')"}
 
 
 _BIT_LIT_RE = re.compile(
@@ -3241,14 +2765,6 @@ def _bit_length_template(args: list[str]) -> Optional[str]:
     return None
 
 
-_FN_MACROS_N["BIT_COUNT"] = {1: _bit_count_template}
-_FN_MACROS_N["BIT_LENGTH"] = {1: _bit_length_template}
-_FN_MACROS_N["UNPIVOT_LIST"] = {
-    n: (lambda args: "array(" + ", ".join(args) + ")")
-    for n in range(1, 9)
-}
-
-
 def _bin_string_template(args: list[str]) -> Optional[str]:
     """DuckDB bin(VARCHAR) is the BITSTRING of the string's bytes
     ('14' -> '0011000100110100'); Spark's bin() casts to LONG. Fold
@@ -3270,9 +2786,6 @@ def _bin_string_template(args: list[str]) -> Optional[str]:
             f" c -> c <> ''), c -> lpad(bin(ascii(c)), 8, '0')), '')"
         )
     return None
-
-
-_FN_MACROS_N["BIN"] = {1: _bin_string_template}
 
 
 def _substr_zero_template(args: list[str]) -> Optional[str]:
@@ -3303,10 +2816,6 @@ def _substr_zero_template(args: list[str]) -> Optional[str]:
         f"ELSE {ns} + ({args[2]}) END, length({s}) + 1)"
     )
     return f"substring({s}, {lo}, greatest({hi} - {lo}, 0))"
-
-
-_FN_MACROS_N["SUBSTR"] = {3: _substr_zero_template}
-_FN_MACROS_N["SUBSTRING"] = {3: _substr_zero_template}
 
 
 _ACTIVE_RESOLVER: list = [None]  # set by pass_function_renames
@@ -3488,15 +2997,12 @@ def _round_int_template(args: list[str]) -> Optional[str]:
     return None
 
 
-_FN_MACROS_N["ROUND"] = {
-    2: _round_int_template,
-    1: lambda args: (
-        f"CAST({args[0]} AS DOUBLE)"
-        if re.fullmatch(r"-?[0-9]+", args[0].strip())
-        or _expr_is_integerish(args[0].strip())
-        else None
-    ),
-}
+def _round_one_template(args: list[str]) -> Optional[str]:
+    """1-arg round(<integer-typed expr>) is DOUBLE in DuckDB too."""
+    a = args[0].strip()
+    if re.fullmatch(r"-?[0-9]+", a) or _expr_is_integerish(a):
+        return f"CAST({args[0]} AS DOUBLE)"
+    return None
 
 
 def _avg_double_template(args: list[str]) -> Optional[str]:
@@ -3511,17 +3017,13 @@ def _avg_double_template(args: list[str]) -> Optional[str]:
     return f"avg(CAST({a} AS DOUBLE))"
 
 
-_FN_MACROS_N["AVG"] = {1: _avg_double_template}
-_FN_MACROS_N["MEAN"] = {1: _avg_double_template}
-
-
 def _list_contains_null_template(args: list[str]) -> Optional[str]:
     """list_contains(l, NULL) is NULL in DuckDB; Spark's array_contains
     rejects an untyped NULL needle outright. Literal-NULL needles fold to
-    NULL; everything else falls through to the array_contains rename."""
+    NULL; everything else is Spark's array_contains."""
     if args[1].strip().upper() == "NULL":
         return "CAST(NULL AS BOOLEAN)"
-    return None
+    return f"array_contains({args[0]}, {args[1]})"
 
 
 _LAMBDA_2PARAM_RE = re.compile(
@@ -3531,31 +3033,22 @@ _LAMBDA_2PARAM_RE = re.compile(
 )
 
 
-def _lambda_index_shift(fn: str) -> "Callable[[list[str]], Optional[str]]":
+def _transform_template(args: list[str]) -> str:
     """DuckDB's two-parameter list lambdas pass a 1-BASED element index;
-    Spark's transform/filter pass 0-based. Shift by substituting the
-    index parameter with (i + 1) in the body (word-boundary, so strings
-    rarely collide; single-param lambdas fall through to the rename)."""
-
-    def tmpl(args: list[str]) -> Optional[str]:
-        m = _LAMBDA_2PARAM_RE.match(args[1].strip())
-        if not m:
-            return None
-        x, idx, body = m.group(1), m.group(2), m.group(3)
-        shifted = re.sub(rf"\b{re.escape(idx)}\b", f"({idx} + 1)", body)
-        return f"{fn}({args[0]}, ({x}, {idx}) -> {shifted})"
-
-    return tmpl
+    Spark's transform passes 0-based. Shift by substituting the index
+    parameter with (i + 1) in the body (word-boundary, so strings rarely
+    collide); single-param lambdas are Spark's transform as written."""
+    m = _LAMBDA_2PARAM_RE.match(args[1].strip())
+    if not m:
+        return f"transform({args[0]}, {args[1]})"
+    x, idx, body = m.group(1), m.group(2), m.group(3)
+    shifted = re.sub(rf"\b{re.escape(idx)}\b", f"({idx} + 1)", body)
+    return f"transform({args[0]}, ({x}, {idx}) -> {shifted})"
 
 
-for _nm in (
-    "LIST_TRANSFORM", "LIST_APPLY", "APPLY", "ARRAY_TRANSFORM",
-    "ARRAY_APPLY",
-):
-    _FN_MACROS_N[_nm] = {2: _lambda_index_shift("transform")}
 def _filter_bool_shift_template(args: list[str]) -> Optional[str]:
     """DuckDB list_filter/filter: the two-param lambda index is 1-BASED
-    (shifted like _lambda_index_shift) AND the lambda result coerces to
+    (shifted like _transform_template) AND the lambda result coerces to
     BOOLEAN (nonzero integers are true) — Spark's filter() requires a
     boolean lambda, so wrap the body in CAST(... AS BOOLEAN): a no-op
     for proper predicates, the int-truthiness coercion otherwise."""
@@ -3569,18 +3062,12 @@ def _filter_bool_shift_template(args: list[str]) -> Optional[str]:
             f" CAST(({body.strip()}) AS BOOLEAN))"
         )
     if "->" not in lam:
-        return None  # not a lambda form — leave untouched
+        return f"filter({args[0]}, {args[1]})"  # not a lambda form
     var, body = lam.split("->", 1)
     return (
         f"filter({args[0]}, {var.strip()} ->"
         f" CAST(({body.strip()}) AS BOOLEAN))"
     )
-
-
-for _nm in ("LIST_FILTER", "ARRAY_FILTER", "FILTER"):
-    _FN_MACROS_N[_nm] = {2: _filter_bool_shift_template}
-_FN_MACROS_N["LIST_CONTAINS"] = {2: _list_contains_null_template}
-_FN_MACROS_N["ARRAY_CONTAINS"] = {2: _list_contains_null_template}
 
 
 def _md5_number_half(offset: int) -> str:
@@ -3606,11 +3093,6 @@ def _md5_number_template(lower: bool):
     return tmpl
 
 
-_FN_MACROS_N["MD5_NUMBER_LOWER"] = {1: _md5_number_template(True)}
-_FN_MACROS_N["MD5_NUMBER_UPPER"] = {1: _md5_number_template(False)}
-
-# 1-arg make_timestamp(microseconds-since-epoch); 6-arg stays Spark-native
-_FN_MACROS_N["MAKE_TIMESTAMP"] = {1: "timestamp_micros(CAST({0} AS BIGINT))"}
 def _disc_pick_sql(value_txt: str, q_txt: str) -> str:
     """Smallest element with cumulative distribution >= q (DuckDB
     quantile_disc), type-preserving: 1-indexed pick from the sorted
@@ -3639,9 +3121,6 @@ def _quantile_disc_template(args: list[str]) -> str:
     return _disc_pick_sql(a, q)
 
 
-_FN_MACROS_N["QUANTILE_DISC"] = {2: _quantile_disc_template}
-_FN_MACROS_N["QUANTILE"] = {2: _quantile_disc_template}
-
 # DuckDB map(keys_list, values_list) -> Spark map_from_arrays (Spark's
 # own 2-arg map() reads two scalars as ONE key/value pair — which is
 # exactly what the brace-literal pass emits, so only LIST-shaped
@@ -3657,53 +3136,15 @@ def _map_from_lists_template(args: list[str]) -> Optional[str]:
     return None
 
 
-_FN_MACROS_N["MAP"] = {2: _map_from_lists_template}
-# list cardinality/count/distance family
-_FN_MACROS_N["ARRAY_UNIQUE"] = {
-    1: "size(filter(array_distinct({0}), x -> x IS NOT NULL))"
-}
-_FN_MACROS_N["LIST_COUNT"] = {1: "size(filter({0}, x -> x IS NOT NULL))"}
-_FN_MACROS_N["ARRAY_COUNT"] = {1: "size(filter({0}, x -> x IS NOT NULL))"}
-_FN_MACROS_N["ARRAY_LENGTH"] = {
-    2: lambda args: f"size({args[0]})" if args[1].strip() == "1" else None
-}
 _EUCLID = ("sqrt(aggregate(zip_with({0}, {1}, (a, b) -> "
            "CAST(a - b AS DOUBLE) * CAST(a - b AS DOUBLE)), "
            "CAST(0 AS DOUBLE), (s, x) -> s + x))")
-_FN_MACROS_N["LIST_DISTANCE"] = {2: _EUCLID}
-_FN_MACROS_N["ARRAY_DISTANCE"] = {2: _EUCLID}
-# setseed: engine RNG is per-query in Spark; accept and return NULL
-_FN_MACROS_N["SETSEED"] = {1: "CAST(NULL AS STRING)"}
-
-# multi-argument grouping(a, b, ...) -> Spark's grouping_id bitmask
-# (identical bit layout; 1-arg grouping() is native in both)
-_FN_MACROS_N["GROUPING"] = {
-    2: "grouping_id({0}, {1})",
-    3: "grouping_id({0}, {1}, {2})",
-    4: "grouping_id({0}, {1}, {2}, {3})",
-}
-
-# DuckDB regexp_extract_all defaults to group 0 (whole match); Spark's
-# default is group 1 and errors when the pattern has no groups
-_FN_MACROS_N["REGEXP_EXTRACT_ALL"] = {2: "regexp_extract_all({0}, {1}, 0)"}
-# (REGEXP_EXTRACT has no _FN_MACROS_N entry: the dedicated dispatch
-# branch owns every arity — 2-arg group-0 default, 3-arg group-overflow
-# guard, 4-arg flag folding — and runs before the table lookup)
-# 3-arg bar(value, min, max): DuckDB's default width is 80
-_FN_MACROS_N["BAR"] = {3: "bar({0}, {1}, {2}, 80)"}
-_FN_MACROS_N["ARRAY_HAS"] = {2: "array_contains({0}, {1})"}
-_FN_MACROS_N["LIST_HAS"] = {2: "array_contains({0}, {1})"}
-# DuckDB error('msg') raises with the message
-_FN_MACROS_N["ERROR"] = {1: "raise_error({0})"}
-
 # list_extract/array_extract: 1-based, negative-from-end, NULL for index
 # 0 or out of range (DuckDB never errors here)
 _LIST_EXTRACT = (
     "(CASE WHEN ({1}) = 0 THEN NULL "
     "ELSE try_element_at({0}, CAST({1} AS INT)) END)"
 )
-_FN_MACROS_N["LIST_EXTRACT"] = {2: _LIST_EXTRACT}
-_FN_MACROS_N["ARRAY_EXTRACT"] = {2: _LIST_EXTRACT}
 
 
 def _contains_template(args: list[str]) -> Optional[str]:
@@ -3718,116 +3159,671 @@ def _contains_template(args: list[str]) -> Optional[str]:
     return None
 
 
-_FN_MACROS_N["CONTAINS"] = {2: _contains_template}
-_FN_MACROS_N["EPOCH_NS"] = {1: "(unix_micros(CAST({0} AS TIMESTAMP)) * 1000)"}
-_FN_MACROS_N["EPOCH_US"] = {1: "unix_micros(CAST({0} AS TIMESTAMP))"}
+# ---------------------------------------------------------------------------
+# call templates over argument texts (entries of _FN_REWRITES below)
+# ---------------------------------------------------------------------------
 
-# to_<unit>(n) interval constructors -> Spark interval builders (day-time
-# units produce DayTimeIntervalType = python timedelta, like DuckDB;
-# month-based units produce YearMonthIntervalType)
-_FN_MACROS_N["TO_DAYS"] = {1: "make_dt_interval(CAST({0} AS INT))"}
-_FN_MACROS_N["TO_WEEKS"] = {1: "make_dt_interval(CAST({0} AS INT) * 7)"}
-_FN_MACROS_N["TO_HOURS"] = {1: "make_dt_interval(0, CAST({0} AS INT))"}
-_FN_MACROS_N["TO_MINUTES"] = {1: "make_dt_interval(0, 0, CAST({0} AS INT))"}
-_FN_MACROS_N["TO_SECONDS"] = {1: "make_dt_interval(0, 0, 0, {0})"}
-_FN_MACROS_N["TO_MILLISECONDS"] = {
-    1: "make_dt_interval(0, 0, 0, CAST({0} AS DOUBLE) / 1e3)"
-}
-_FN_MACROS_N["TO_MICROSECONDS"] = {
-    1: "make_dt_interval(0, 0, 0, CAST({0} AS DOUBLE) / 1e6)"
-}
-_FN_MACROS_N["TO_MONTHS"] = {1: "make_ym_interval(0, CAST({0} AS INT))"}
-_FN_MACROS_N["TO_YEARS"] = {1: "make_ym_interval(CAST({0} AS INT))"}
-_FN_MACROS_N["TO_DECADES"] = {1: "make_ym_interval(CAST({0} AS INT) * 10)"}
-_FN_MACROS_N["TO_CENTURIES"] = {1: "make_ym_interval(CAST({0} AS INT) * 100)"}
-_FN_MACROS_N["TO_MILLENNIA"] = {1: "make_ym_interval(CAST({0} AS INT) * 1000)"}
-_FN_MACROS_N["TO_QUARTERS"] = {1: "make_ym_interval(0, CAST({0} AS INT) * 3)"}
-# DuckDB returns 0 for valid non-array JSON where Spark returns NULL
-# (expansions are skipped by the scan cursor, so the inner call is safe)
-_FN_MACROS_N["JSON_ARRAY_LENGTH"] = {1: (
-    "(CASE WHEN ({0}) IS NULL THEN CAST(NULL AS BIGINT) "
-    "ELSE CAST(coalesce(json_array_length({0}), 0) AS BIGINT) END)"
-)}
 
-# function-catalog gap batch (round 5 scan vs duckdb_functions()):
-# single-arg operator/extremum identities, scalar micro/millisecond
-# accessors (include the seconds component, like the date_part fields),
-# scalar era(), bit_position over the BIT-as-bitstring-text carrier,
-# zero-arg timestamp aliases, and make_timestamptz (UTC session)
-_FN_MACROS_N["ADD"][1] = "({0})"
-_FN_MACROS_N["SUBTRACT"][1] = "(-({0}))"
-_FN_MACROS_N["GREATEST"] = {1: "({0})"}
-_FN_MACROS_N["LEAST"] = {1: "({0})"}
-_FN_MACROS_N["MICROSECOND"] = {
-    1: "pmod(unix_micros(CAST({0} AS TIMESTAMP)), 60000000)"
-}
-_FN_MACROS_N["MILLISECOND"] = {
-    1: "CAST(pmod(unix_micros(CAST({0} AS TIMESTAMP)), 60000000) / 1000"
-       " AS BIGINT)"
-}
-_FN_MACROS_N["ERA"] = {1: "(CASE WHEN year({0}) > 0 THEN 1 ELSE 0 END)"}
-_FN_MACROS_N["BIT_POSITION"] = {2: "instr({1}, {0})"}
-_FN_MACROS_0["GET_CURRENT_TIMESTAMP"] = "current_timestamp()"
-_FN_MACROS_0["CURRENT_LOCALTIMESTAMP"] = "localtimestamp()"
-# TIME-typed zero-arg aliases (Spark 4.1 TIME behind timeType.enabled —
-# see session.RUNTIME_CONFS; the engine pins UTC, so "local" time is
-# session time like DuckDB under SET TimeZone='UTC')
-_FN_MACROS_0["GET_CURRENT_TIME"] = "current_time()"
-_FN_MACROS_0["CURRENT_LOCALTIME"] = "current_time()"
-_FN_MACROS_0["COUNT_STAR"] = "count(*)"
-_FN_MACROS_0["CURRENT_USER"] = "'duckdb'"
-_FN_MACROS_0["CURRENT_ROLE"] = "'duckdb'"
-_FN_MACROS_0["SESSION_USER"] = "'duckdb'"
+def _literal(arg: str) -> Optional[Token]:
+    """The token when an argument text is a single string literal."""
+    sig = [tk for tk in tokenize(arg) if tk.kind not in (WS, COMMENT)]
+    return sig[0] if len(sig) == 1 and sig[0].kind == STRING else None
 
-# list_<agg> macro family (DuckDB's aggregate-over-one-list macros).
-# All cursor-advancing templates — expansions are plain Spark built-ins.
+
+def _order_at(toks: list[Token], lo: int = 0, hi: Optional[int] = None) -> Optional[int]:
+    """Index of the first bracket-depth-0 ORDER in toks[lo:hi] (an
+    in-call ORDER BY), or None."""
+    depth = 0
+    for k in range(lo, len(toks) if hi is None else hi):
+        tk = toks[k]
+        if tk.kind == PUNCT and tk.text in "([{":
+            depth += 1
+        elif tk.kind == PUNCT and tk.text in ")]}":
+            depth -= 1
+        elif depth == 0 and tk.kind == IDENT and tk.upper == "ORDER":
+            return k
+    return None
+
+
+def _len_template(fallback: Optional[str]) -> Callable[[list[str]], Optional[str]]:
+    """DuckDB len/length/cardinality are polymorphic: Spark needs size()
+    for arrays and maps and length() for strings."""
+
+    def tmpl(args: list[str]) -> Optional[str]:
+        toks = tokenize(args[0])
+        resolver = _ACTIVE_RESOLVER[0] or NullResolver()
+        if _span_is_array(toks, 0, len(toks), resolver):
+            return f"size({args[0]})"
+        return f"{fallback}({args[0]})" if fallback else None
+
+    return tmpl
+
+
+def _string_split_template(args: list[str]) -> str:
+    """Spark's split() takes a regex: quote a literal separator, and a
+    computed one at runtime with Java's \\Q...\\E (any text becomes
+    literal, regex metacharacters included)."""
+    lit = _literal(args[1])
+    if lit is None:
+        # a NULL separator splits nothing, like DuckDB: (?!) never matches
+        return (
+            f"split({args[0]}, "
+            f"coalesce(concat('\\\\Q', {args[1]}, '\\\\E'), '(?!)'))"
+        )
+    # pass_escape_backslashes already ran: undo its doubling to recover
+    # the true separator, then re-double the regex escape so Spark's
+    # literal unescape leaves the escape behind
+    sep = _str_value(lit).replace("\\\\", "\\")
+    quoted = _sql_str(re.escape(sep).replace("\\", "\\\\")).text
+    return f"split({args[0]}, {quoted})"
+
+
+def _regexp_matches_template(args: list[str]) -> Optional[str]:
+    """regexp_matches(s, re[, flags]) -> (s RLIKE re); literal flags fold
+    into an inline (?ism) prefix on a literal pattern."""
+    pat = args[1]
+    if len(args) == 3:
+        flags, p = _literal(args[2]), _literal(args[1])
+        if flags is None or p is None:
+            return None
+        fl = "".join(ch for ch in _str_value(flags) if ch in "ism")
+        pat = _sql_str((f"(?{fl})" if fl else "") + _str_value(p)).text
+    return f"({args[0]} RLIKE {pat})"
+
+
+def _date_trunc_template(args: list[str]) -> str:
+    """DuckDB returns DATE for day-or-coarser parts (any input type);
+    Spark's date_trunc always returns TIMESTAMP and knows no decade,
+    century or millennium."""
+    lit = _literal(args[0])
+    part = _str_value(lit).strip().lower() if lit else None
+    if part in _DATE_TRUNC_MACROS:
+        return _DATE_TRUNC_MACROS[part].replace("{x}", args[1])
+    call = f"date_trunc({args[0]}, {args[1]})"
+    if part in ("day", "week", "month", "quarter", "year"):
+        return f"CAST({call} AS DATE)"
+    return call
+
+
+def _strftime_template(args: list[str]) -> str:
+    """strftime(ts, '%Y-%m') -> date_format(ts, 'yyyy-MM'); specs Java
+    patterns can't express (%U/%W/%w week and weekday numbers) expand to
+    a concat of computed parts."""
+    lit = _literal(args[1])
+    if lit is None:
+        return f"date_format({args[0]}, {args[1]})"
+    fmt = _str_value(lit)
+    if re.search(r"%[UWw]", fmt):
+        return _strftime_concat(args[0], fmt)
+    return f"date_format({args[0]}, {_sql_str(_convert_strftime(fmt)).text})"
+
+
+def _strptime_template(args: list[str]) -> str:
+    """strptime(s, '%Y-%m-%d') -> to_timestamp with the lenient parsing
+    directive table; try_strptime is the same call (non-ANSI
+    to_timestamp already returns NULL on a parse failure)."""
+    lit = _literal(args[1])
+    if lit is None:
+        return f"to_timestamp({args[0]}, {args[1]})"
+    return _strptime_call(args[0], _str_value(lit))
+
+
+def _date_part_template(args: list[str]) -> Optional[str]:
+    """Fields whose numbering differs between the dialects expand to
+    explicit Spark expressions; a list of parts becomes a STRUCT like
+    DuckDB's list form; every other field stays Spark's date_part."""
+    sig = [tk for tk in tokenize(args[0]) if tk.kind not in (WS, COMMENT)]
+    # the list arrives as array('year', 'month') (pass_array_literals
+    # has already run) or as a bracket literal
+    is_list_form = (
+        len(sig) >= 3
+        and sig[0].kind == PUNCT
+        and sig[0].text == "["
+        and sig[-1].kind == PUNCT
+        and sig[-1].text == "]"
+        and all(
+            tk.kind == STRING or (tk.kind == PUNCT and tk.text in "[],")
+            for tk in sig
+        )
+    ) or (
+        len(sig) >= 4
+        and sig[0].kind == IDENT
+        and sig[0].upper == "ARRAY"
+        and all(
+            tk.kind == STRING or (tk.kind == PUNCT and tk.text in "(),")
+            for tk in sig[1:]
+        )
+    )
+    if is_list_form:
+        fields = []
+        for tk in sig:
+            if tk.kind == STRING:
+                p = _str_value(tk)
+                m = _DATE_PART_MACROS.get(p.lower())
+                e = (
+                    m.replace("{x}", args[1]) if m is not None
+                    else f"date_part('{p}', {args[1]})"
+                )
+                fields.append(f"'{p}', {e}")
+        return "named_struct(" + ", ".join(fields) + ")"
+    if len(sig) == 1 and sig[0].kind == STRING:
+        macro = _DATE_PART_MACROS.get(_str_value(sig[0]).lower())
+        if macro is not None:
+            return macro.replace("{x}", args[1])
+    return None
+
+
+def _extract_template(args: list[str]) -> Optional[str]:
+    """extract(dow FROM x): the numbering conventions of date_part;
+    every other field stays Spark's extract."""
+    toks = tokenize(args[0])
+    sig = [k for k, tk in enumerate(toks) if tk.kind not in (WS, COMMENT)]
+    if not (
+        len(sig) >= 3
+        and toks[sig[0]].kind in (IDENT, STRING)
+        and toks[sig[1]].is_kw("FROM")
+    ):
+        return None
+    part = toks[sig[0]]
+    name = _str_value(part) if part.kind == STRING else part.text
+    macro = _DATE_PART_MACROS.get(name.lower())
+    if macro is None:
+        return None
+    return macro.replace("{x}", render(_trim(toks[sig[1] + 1 :])))
+
+
+def _string_agg_template(args: list[str]) -> str:
+    """DuckDB puts ORDER BY inside the call; Spark's listagg takes it as
+    WITHIN GROUP (ORDER BY ...). A missing separator defaults to ','
+    (DuckDB), not '' (Spark)."""
+    toks = tokenize(", ".join(args))
+    p = _order_at(toks)
+    end = len(toks) if p is None else p
+    inner = render(_trim(toks[:end]))
+    if len(split_args(toks, 0, end)) == 1:
+        inner += ", ','"
+    if p is None:
+        return f"listagg({inner})"
+    return f"listagg({inner}) WITHIN GROUP ({render(_trim(toks[p:]))})"
+
+
+def _time_bucket_template(args: list[str]) -> Optional[str]:
+    """time_bucket(INTERVAL, ts[, offset]) over literal intervals."""
+    iv = _parse_interval_literal(tokenize(args[0]))
+    off = _parse_interval_literal(tokenize(args[2])) if len(args) == 3 else (0, 0)
+    if iv is None or off is None:
+        return None
+    ts = args[1]
+    off_iv = None
+    if off != (0, 0):
+        # 3-arg offset form: bucket(ts - off) + off
+        off_iv = (
+            f"make_ym_interval(0, {off[0]})" if off[0]
+            else f"make_dt_interval(0, 0, 0, {off[1]})"
+        )
+        ts = f"(CAST({ts} AS TIMESTAMP) - {off_iv})"
+    expanded = _time_bucket_sql(iv[0], iv[1], ts)
+    if off_iv is not None:
+        expanded = f"({expanded} + {off_iv})"
+    # DuckDB returns DATE (any bucket width) when the input is a DATE —
+    # detectable here only for DATE literals / to_date(...) calls
+    sig = [tk for tk in tokenize(args[1]) if tk.kind not in (WS, COMMENT)]
+    if sig and sig[0].kind == IDENT and sig[0].upper in ("DATE", "TO_DATE"):
+        expanded = f"CAST({expanded} AS DATE)"
+    return expanded
+
+
+def _regexp_extract_template(args: list[str]) -> Optional[str]:
+    """DuckDB's 2-arg default group is 0 (the whole match; Spark defaults
+    to 1). A list of group NAMES returns a struct of the named captures;
+    a group index beyond a literal pattern's capture count is '' (Spark
+    errors); the 4-arg options string folds into an inline (?i)(?s)(?m)
+    prefix on a literal pattern."""
+    if len(args) == 2:
+        return f"regexp_extract({args[0]}, {args[1]}, 0)"
+    pat = _literal(args[1])
+    if len(args) == 4:
+        flags = _literal(args[3])
+        if flags is None or pat is None:
+            return None
+        prefix = "".join(f"(?{ch})" for ch in _str_value(flags) if ch in "ism")
+        return f"regexp_extract({args[0]}, '{prefix}{pat.text[1:-1]}', {args[2]})"
+    gtoks = _trim(tokenize(args[2]))
+    if gtoks and gtoks[0].kind == IDENT and gtoks[0].upper == "ARRAY":
+        o = next_sig(gtoks, 0)
+        c = match_forward(gtoks, o, "(", ")")
+        names = [_trim(gtoks[lo:hi]) for lo, hi in split_args(gtoks, o + 1, c)]
+        if all(len(nm) == 1 and nm[0].kind == STRING for nm in names):
+            return "named_struct(" + ", ".join(
+                f"{nm[0].text}, regexp_extract({args[0]}, {args[1]}, {k + 1})"
+                for k, nm in enumerate(names)
+            ) + ")"
+    if pat is not None and args[2].isdigit():
+        # exact capture-group count via re.compile; a pattern Python
+        # cannot compile leaves the call untouched
+        try:
+            groups = re.compile(_str_value(pat)).groups
+        except re.error:
+            return None
+        if int(args[2]) > groups:
+            return "''"
+    return None
+
+
+def _regexp_replace_template(args: list[str]) -> Optional[str]:
+    """DuckDB regexp_replace replaces the FIRST match unless the 'g'
+    option is given (Spark always replaces all); 'i' folds into the
+    pattern; replacement backrefs \\1 become $1."""
+    flags = None
+    if len(args) == 4:
+        lit = _literal(args[3])
+        if lit is None:
+            return None  # non-literal options: pass through
+        flags = _str_value(lit)
+    a, b, c = args[:3]
+    if flags and "i" in flags:
+        lit = _literal(b)
+        if lit is not None:
+            b = "'(?i)" + lit.text[1:-1] + "'"
+    lit = _literal(c)
+    if lit is not None:
+        c = _convert_regexp_replacement(lit).text
+    if flags and "g" in flags:
+        return f"regexp_replace({a}, {b}, {c})"
+    return _fill(_REGEXP_REPLACE_FIRST, [a, b, c])
+
+
+def _named_arg(arg: str) -> Optional[tuple[str, str]]:
+    """(name, value text) of a ``name := value`` argument."""
+    toks = tokenize(arg)
+    sig = [k for k, tk in enumerate(toks) if tk.kind not in (WS, COMMENT)]
+    if (
+        len(sig) >= 4
+        and toks[sig[0]].kind in (IDENT, QIDENT)
+        and toks[sig[1]].kind == PUNCT
+        and toks[sig[1]].text == ":"
+        and toks[sig[2]].kind == OP
+        and toks[sig[2]].text == "="
+    ):
+        return toks[sig[0]].text.strip('"'), render(_trim(toks[sig[2] + 1 :]))
+    return None
+
+
+def _concat_template(args: list[str]) -> Optional[str]:
+    """DuckDB concat() is STRING concatenation that SKIPS NULL arguments
+    and stringifies non-strings — even lists render as text ('[1, 2]');
+    list concatenation is spelled list_concat/|| instead. concat_ws('')
+    over string-cast arguments matches exactly (Spark casts arrays to the
+    same '[1, 2]' rendering)."""
+    if not args:
+        return None
+    return "concat_ws('', " + ", ".join(f"CAST({a} AS STRING)" for a in args) + ")"
+
+
+def _struct_pack_template(args: list[str]) -> Optional[str]:
+    """struct_pack(name := expr, ...) -> named_struct('name', expr, ...)."""
+    pairs = [_named_arg(a) for a in args]
+    if not pairs or None in pairs:
+        return None
+    return "named_struct(" + ", ".join(
+        f"{_sql_str(n).text}, {v}" for n, v in pairs
+    ) + ")"
+
+
+def _union_value_template(args: list[str]) -> Optional[str]:
+    """union_value(tag := expr) -> the union's struct encoding
+    named_struct('__utag', 'tag', 'tag', expr) (types.py UNION(...);
+    inactive members of a TYPED union column are NULL-filled at INSERT
+    by session._align_insert's struct widening)."""
+    pair = _named_arg(args[0])
+    if pair is None:
+        return None
+    name, val = pair
+    tag = _sql_str(name).text
+    return f"named_struct('__utag', {tag}, {tag}, {val})"
+
+
+def _union_extract_template(args: list[str]) -> Optional[str]:
+    """union_extract(u, 'tag') is NULL unless 'tag' is the active member
+    (inactive members are stored NULL; the guard also covers values
+    built by an ad-hoc union_value)."""
+    lit = _literal(args[1])
+    if lit is None:
+        return None
+    tag = lit.text[1:-1].replace("''", "'")
+    member = tag.replace("`", "")
+    return (
+        f"(CASE WHEN ({args[0]}).__utag = '{tag}' "
+        f"THEN ({args[0]}).`{member}` END)"
+    )
+
+
+def _element_at_template(args: list[str]) -> Optional[str]:
+    """DuckDB element_at is a MAP accessor returning the list of values
+    for the key; only a string-literal key marks that form (numeric
+    second arguments are the array element_at of the index rewrite)."""
+    if _literal(args[1]) is None:
+        return None
+    return _fill(_MAP_EXTRACT, args)
+
+
+def _struct_extract_template(args: list[str]) -> Optional[str]:
+    """struct_extract(e, 'f') -> (e).`f`; a NUMERIC second argument
+    indexes an anonymous struct (row(...)): field N is Spark's colN."""
+    lit = _literal(args[1])
+    if lit is not None:
+        field = lit.text[1:-1].replace("''", "'")
+        return f"(({args[0]}).`{field}`)"
+    if args[1].isdigit():
+        return f"(({args[0]}).col{int(args[1])})"
+    return None
+
+
+def _json_array_template(args: list[str]) -> str:
+    """json_array(a, b, ...) -> the values of a struct rendered to JSON,
+    order-preserving, NULLs kept."""
+    if not args:
+        return "'[]'"
+    fields = ", ".join(f"({a}) AS f{k}" for k, a in enumerate(args))
+    return (
+        f"__ddb_json_obj_values(to_json(struct({fields}), "
+        "map('ignoreNullFields', 'false')))"
+    )
+
+
+def _ordered_pick_template(up: str) -> Callable[[list[str]], Optional[str]]:
+    """first/last/any_value(v ORDER BY k) -> min_by/max_by (a single
+    reduction, no sort); any_value picks the first NON-NULL v in key
+    order: min_by over a key nulled out on a NULL v. Orderless calls
+    stay Spark's."""
+
+    def tmpl(args: list[str]) -> Optional[str]:
+        toks = tokenize(", ".join(args))
+        p = _order_at(toks)
+        if p is None:
+            return None
+        by = next_sig(toks, p)
+        if not (by < len(toks) and toks[by].is_kw("BY")):
+            return None
+        keys, dirs = [], []
+        for lo, hi in split_args(toks, by + 1, len(toks)):
+            ktoks = _trim(toks[lo:hi])
+            d = "ASC"
+            if ktoks and ktoks[-1].kind == IDENT and ktoks[-1].upper in ("ASC", "DESC"):
+                d = ktoks[-1].upper
+                ktoks = _trim(ktoks[:-1])
+            if not ktoks:
+                return None
+            keys.append(render(ktoks))
+            dirs.append(d)
+        if len(set(dirs)) != 1:
+            return None
+        v = render(_trim(toks[:p]))
+        k = keys[0] if len(keys) == 1 else "struct(" + ", ".join(keys) + ")"
+        fn = "min_by" if (up != "LAST") == (dirs[0] == "ASC") else "max_by"
+        if up == "ANY_VALUE":
+            k = f"(CASE WHEN ({v}) IS NOT NULL THEN {k} END)"
+        expanded = f"{fn}({v}, {k})"
+        if up == "LAST" and len(keys) == 1:
+            # NULL keys sort LAST under the default null order in BOTH
+            # directions, so LAST must pick from a null-key row when one
+            # exists; min_by/max_by skip null keys
+            expanded = (
+                f"(CASE WHEN count(*) > count({k}) "
+                f"THEN any_value(CASE WHEN ({k}) IS NULL THEN ({v}) END) "
+                f"ELSE {expanded} END)"
+            )
+        return expanded
+
+    return tmpl
+
+
+def _format_template(args: list[str]) -> Optional[str]:
+    """DuckDB fmt-style format('{} x {}', ...) -> format_string('%s x
+    %s', ...); positional {N} -> %N+1$s; format specs {:.2f} / {0:d} ->
+    printf directives with numeric casts on the matching arguments."""
+    lit = _literal(args[0]) if args else None
+    if lit is None:
+        return None
+    fmt = _str_value(lit)
+    if len(args) == 1:
+        # format('abc') with no placeholders is the string
+        return lit.text if "{" not in fmt else None
+    converted = _convert_fmt_braces(fmt, args[1:])
+    if converted is None:
+        return None
+    fmt, cast_args = converted
+    return f"format_string({_sql_str(fmt).text}, {', '.join(cast_args)})"
+
+
+def _printf_template(args: list[str]) -> str:
+    """%-style directly; arguments cast per numeric directive (Spark's
+    format_string hands %f a Decimal unconverted and throws — DuckDB
+    casts)."""
+    lit = _literal(args[0]) if args else None
+    if lit is None or len(args) < 2:
+        return "format_string(" + ", ".join(args) + ")"
+    fmt = _str_value(lit)
+    cast_args = _cast_printf_args(fmt, args[1:])
+    return f"format_string({_sql_str(fmt).text}, {', '.join(cast_args)})"
+
+
+def _struct_insert_template(args: list[str]) -> Optional[str]:
+    """struct_insert(s, name := v, ...) -> struct(s.*, v AS name, ...).
+    Spark's s.* expansion needs a column REFERENCE, which the common call
+    shape provides; other shapes raise in analysis (loud, never wrong)."""
+    adds = [_named_arg(a) for a in args[1:]]
+    if not adds or None in adds:
+        return None
+    base = args[0]
+    if base.startswith("named_struct(") and base.endswith(")"):
+        # literal struct: splice the new pairs into the named_struct call
+        pairs = ", ".join(f"{_sql_str(n).text}, ({v})" for n, v in adds)
+        return base[:-1] + ", " + pairs + ")"
+    return f"struct({base}.*, " + ", ".join(f"({v}) AS {n}" for n, v in adds) + ")"
+
+
+def _unnest_template(args: list[str]) -> str:
+    """Arrays -> explode (one generator per select); a STRUCT unnest
+    expands the fields as columns — inline over a one-element array works
+    for any struct expression."""
+    if len(args) == 1:
+        toks = tokenize(args[0])
+        resolver = _ACTIVE_RESOLVER[0] or NullResolver()
+        if _span_is_struct(toks, 0, len(toks), resolver):
+            return f"inline(array({args[0]}))"
+    return "explode(" + ", ".join(args) + ")"
+
+
+def _list_aggregate_template(args: list[str]) -> Optional[str]:
+    """list_aggregate(l, 'name'[, extra]): apply a named aggregate to the
+    list's elements (NULL elements skipped, as DuckDB's aggregates do)."""
+    lit = _literal(args[1])
+    if lit is None:
+        return None
+    fname = _str_value(lit).strip().lower()
+    return _list_aggregate_sql(args[0], fname, args[2] if len(args) == 3 else None)
+
+
+def _list_sort_template(args: list[str]) -> Optional[str]:
+    """DuckDB list_sort: nulls LAST in both directions by default; a
+    third literal argument overrides the null order. Spark primitives:
+    array_sort = asc nulls last; sort_array(x, true) = asc nulls FIRST;
+    sort_array(x, false) = desc nulls last; reverse(array_sort(x)) =
+    desc nulls first."""
+    if not 1 <= len(args) <= 3:
+        return None
+    lits = [_literal(a) for a in args[1:]]
+    if None in lits:
+        return None
+    order = _str_value(lits[0]).strip().upper() if lits else "ASC"
+    nulls = _str_value(lits[1]).strip().upper() if len(lits) == 2 else ""
+    desc, nulls_first = order.startswith("DESC"), nulls.endswith("FIRST")
+    a = args[0]
+    if desc and nulls_first:
+        return f"reverse(array_sort({a}))"
+    if desc:
+        return f"sort_array({a}, false)"
+    if nulls_first:
+        return f"sort_array({a}, true)"
+    return f"array_sort({a})"
+
+
+def _date_add_template(args: list[str]) -> Optional[str]:
+    """DuckDB date_add(date, INTERVAL ..) returns a TIMESTAMP; with an
+    integer second argument both engines mean a day add."""
+    sig = [tk for tk in tokenize(args[1]) if tk.kind not in (WS, COMMENT)]
+    if sig and sig[0].is_kw("INTERVAL"):
+        return f"(CAST({args[0]} AS TIMESTAMP) + {args[1]})"
+    return None
+
+
+_DATE_SUB_SECONDS = {"second": 1, "sec": 1, "minute": 60, "min": 60,
+                     "hour": 3600, "day": 86400, "week": 604800}
+_DATE_SUB_MONTHS = {"month": 1, "mon": 1, "quarter": 3, "year": 12,
+                    "decade": 120, "century": 1200, "millennium": 12000}
+
+
+def _date_sub_template(args: list[str]) -> Optional[str]:
+    """DuckDB 3-arg date_sub('part', a, b): COMPLETE units between a and
+    b (signed, truncated toward zero) — distinct from date_diff's
+    boundary counting. Spark's own 2-arg date_sub(date, days) stays."""
+    lit = _literal(args[0])
+    if lit is None:
+        return None
+    part = _str_value(lit).strip().lower().rstrip("s")
+    a, b = args[1], args[2]
+    if part in _DATE_SUB_SECONDS:
+        ua = f"unix_micros(CAST({a} AS TIMESTAMP))"
+        ub = f"unix_micros(CAST({b} AS TIMESTAMP))"
+        return (
+            f"CAST(({ub} - {ua}) / "
+            f"{_DATE_SUB_SECONDS[part] * 1_000_000} AS BIGINT)"
+        )
+    if part in _DATE_SUB_MONTHS:
+        return (
+            f"CAST(months_between(CAST({b} AS TIMESTAMP), CAST({a} AS "
+            f"TIMESTAMP)) / {_DATE_SUB_MONTHS[part]} AS BIGINT)"
+        )
+    raise ValueError(f"date_sub: unsupported part {part!r}")
+
+# templates shared by several names
+_DOT = (
+    "aggregate(zip_with({0}, {1}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+    "CAST(0 AS DOUBLE), (s, x) -> s + x)"
+)
+_NORM = (
+    "sqrt(aggregate({0}, CAST(0 AS DOUBLE), "
+    "(s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+)
+_COSINE = f"({_DOT} / ({_NORM} * {_NORM.replace('{0}', '{1}')}))"
+# DuckDB map_extract / map-form element_at return the LIST of values for
+# the key ([] when absent) — not a scalar
+_MAP_EXTRACT = (
+    "(CASE WHEN map_contains_key({0}, {1}) "
+    "THEN array(({0})[{1}]) ELSE array() END)"
+)
+_LIST_UNIQUE = "size(filter(array_distinct({0}), x -> x IS NOT NULL))"
+_FSUM = "CAST(sum(CAST({0} AS DOUBLE)) AS DOUBLE)"
+_SLICE = {
+    3: "slice({0}, {1}, greatest(({2}) - ({1}) + 1, 0))",
+    4: _SLICE_STEP_MACRO,
+}
+_REDUCE = {
+    2: "aggregate(slice({0}, 2, greatest(size({0}) - 1, 0)), "
+       "try_element_at({0}, 1), {1})"
+}
+# indices that would sort the list ascending, nulls last (APL grade-up)
+_GRADE_UP = {
+    1: "transform(array_sort(zip_with({0}, sequence(1, size({0})), "
+       "(v, i) -> struct(v AS v, i AS i)), "
+       "(x, y) -> CASE WHEN x.v IS NULL AND y.v IS NULL THEN 0 "
+       "WHEN x.v IS NULL THEN 1 WHEN y.v IS NULL THEN -1 "
+       "WHEN x.v < y.v THEN -1 WHEN x.v > y.v THEN 1 ELSE 0 END), "
+       "s -> s.i)"
+}
+_HAS_ALL = {2: "forall({1}, x -> array_contains({0}, x))"}
+# DuckDB left/right accept NEGATIVE counts: all-but-last-n /
+# all-but-first-n (Spark returns '')
+_LEFT = {
+    2: "(CASE WHEN ({1}) < 0 "
+       "THEN substring({0}, 1, greatest(length({0}) + ({1}), 0)) "
+       "ELSE substring({0}, 1, {1}) END)"
+}
+_RIGHT = {
+    2: "(CASE WHEN ({1}) < 0 THEN substring({0}, 1 - ({1})) "
+       "WHEN ({1}) = 0 THEN '' "
+       "ELSE substring({0}, greatest(0 - ({1}), 0 - length({0}))) END)"
+}
+# DuckDB list_concat treats NULL as the identity ([1]||NULL = [1]);
+# Spark's concat propagates NULL (and a bare NULL literal won't even
+# type-check against an array) — wrap both sides in an array so the
+# NULL coerces to the element type, drop it, flatten
+_LIST_CONCAT = "flatten(filter(array({0}, {1}), x -> x IS NOT NULL))"
+# list_resize: pad with NULL / the fill value, or truncate
+_RESIZE = {
+    2: "slice(transform(sequence(1, greatest(CAST({1} AS INT), 1)), "
+       "i -> try_element_at({0}, i)), 1, CAST({1} AS INT))",
+    3: "slice(transform(sequence(1, greatest(CAST({1} AS INT), 1)), "
+       "i -> CASE WHEN i <= size({0}) THEN element_at({0}, i) "
+       "ELSE ({2}) END), 1, CAST({1} AS INT))",
+}
+# list_select(l, idxs): gather by 1-based index (out-of-range -> NULL)
+_SELECT = {2: "transform({1}, i -> try_element_at({0}, CAST(i AS INT)))"}
+# list_where(l, mask): keep elements whose mask is true
+_WHERE = {
+    2: "transform(filter(zip_with({0}, {1}, "
+       "(x, m) -> struct(x AS v, m AS k)), p -> p.k), p -> p.v)"
+}
+
+
+def _readable_size(base: int, units: tuple[str, ...]) -> str:
+    """format_bytes / formatReadableDecimalSize: powers of ``base``,
+    TRUNCATED to one decimal (DuckDB fmt)."""
+    return (
+        f"(CASE WHEN abs(CAST({{0}} AS DOUBLE)) < {base} "
+        "THEN concat(CAST(CAST({0} AS BIGINT) AS STRING), ' bytes') "
+        + "".join(
+            f"WHEN abs(CAST({{0}} AS DOUBLE)) < {float(base) ** (k + 1):.0f} "
+            f"THEN concat(CAST(CAST("
+            f"CAST(CAST({{0}} AS DOUBLE) / {float(base) ** k:.0f} * 10 AS BIGINT) "
+            f"AS DOUBLE) / 10 AS DECIMAL(18,1)), ' {u}') "
+            for k, u in enumerate(units[:4], 1)
+        )
+        + "ELSE concat(CAST(CAST("
+        f"CAST(CAST({{0}} AS DOUBLE) / {base ** 5} * 10 AS BIGINT) "
+        f"AS DOUBLE) / 10 AS DECIMAL(18,1)), ' {units[4]}') END)"
+    )
+
+
+# top-n aggregate forms (DuckDB min/max/min_by/max_by with an N): one
+# collect + one local sort per group — no per-row state
+_MIN_BY_N = (
+    "transform(slice(array_sort(collect_list("
+    "CASE WHEN ({1}) IS NOT NULL THEN struct({1} AS k, {0} AS v) "
+    "END)), 1, CAST({2} AS INT)), p -> p.v)"
+)
+_MAX_BY_N = (
+    "transform(slice(sort_array(collect_list("
+    "CASE WHEN ({1}) IS NOT NULL THEN struct({1} AS k, {0} AS v) "
+    "END), false), 1, CAST({2} AS INT)), p -> p.v)"
+)
+# arg_max/arg_min 2-arg forms: DuckDB SKIPS rows whose VALUE argument is
+# NULL; Spark's min_by/max_by would happily return that NULL row's value.
+# NULL-ing the ordering key for NULL-value rows makes Spark skip them
+# too; the *_null variants are DuckDB's keep-NULLs spelling = plain
+# min_by/max_by.
+_ARG_MAX = {
+    2: "max_by({0}, CASE WHEN ({0}) IS NULL THEN NULL ELSE ({1}) END)",
+    3: _MAX_BY_N,
+}
+_ARG_MIN = {
+    2: "min_by({0}, CASE WHEN ({0}) IS NULL THEN NULL ELSE ({1}) END)",
+    3: _MIN_BY_N,
+}
+# list_<agg> family (DuckDB's aggregate-over-one-list macros)
 _LMED = "array_sort(filter({0}, x -> x IS NOT NULL))"
-_FN_MACROS_N["LIST_ANY_VALUE"] = {
-    1: "try_element_at(filter({0}, x -> x IS NOT NULL), 1)"
-}
-_FN_MACROS_N["LIST_APPROX_COUNT_DISTINCT"] = {
-    1: "CAST(size(array_distinct(filter({0}, x -> x IS NOT NULL)))"
-       " AS BIGINT)"
-}
-_FN_MACROS_N["LIST_COUNT"] = {
-    1: "CAST(size(filter({0}, x -> x IS NOT NULL)) AS BIGINT)"
-}
-_FN_MACROS_N["LIST_FIRST"] = {1: "try_element_at({0}, 1)"}
-_FN_MACROS_N["LIST_LAST"] = {1: "try_element_at({0}, -1)"}
-_FN_MACROS_N["LIST_BIT_AND"] = {
-    1: "aggregate(filter({0}, x -> x IS NOT NULL), CAST(NULL AS BIGINT),"
-       " (acc, x) -> CASE WHEN acc IS NULL THEN CAST(x AS BIGINT)"
-       " ELSE acc & x END)"
-}
-_FN_MACROS_N["LIST_BIT_OR"] = {
-    1: "aggregate(filter({0}, x -> x IS NOT NULL), CAST(NULL AS BIGINT),"
-       " (acc, x) -> CASE WHEN acc IS NULL THEN CAST(x AS BIGINT)"
-       " ELSE acc | x END)"
-}
-# xor spelled arithmetically: (a|b) - (a&b); a literal ^ here would be
-# re-claimed as exponentiation by pass_caret_power's dialect rule
-_FN_MACROS_N["LIST_BIT_XOR"] = {
-    1: "aggregate(filter({0}, x -> x IS NOT NULL), CAST(NULL AS BIGINT),"
-       " (acc, x) -> CASE WHEN acc IS NULL THEN CAST(x AS BIGINT)"
-       " ELSE (acc | CAST(x AS BIGINT)) - (acc & CAST(x AS BIGINT)) END)"
-}
-_FN_MACROS_N["LIST_BOOL_AND"] = {
-    1: "aggregate(filter({0}, x -> x IS NOT NULL), CAST(NULL AS BOOLEAN),"
-       " (acc, x) -> CASE WHEN acc IS NULL THEN x ELSE acc AND x END)"
-}
-_FN_MACROS_N["LIST_BOOL_OR"] = {
-    1: "aggregate(filter({0}, x -> x IS NOT NULL), CAST(NULL AS BOOLEAN),"
-       " (acc, x) -> CASE WHEN acc IS NULL THEN x ELSE acc OR x END)"
-}
-_FN_MACROS_N["LIST_PRODUCT"] = {
-    # NULL seed like the LIST_BIT_* macros: DuckDB list_product([]) and
-    # list_product([NULL]) are NULL (probed), not 1.0 — the seed only
-    # becomes a value on the first non-NULL element.
-    1: "aggregate(filter({0}, x -> x IS NOT NULL), CAST(NULL AS DOUBLE),"
-       " (acc, x) -> CASE WHEN acc IS NULL THEN CAST(x AS DOUBLE)"
-       " ELSE acc * x END)"
-}
-_FN_MACROS_N["LIST_MEDIAN"] = {1: (
+_LIST_MEDIAN = (
     f"(CASE WHEN size({_LMED}) = 0 THEN CAST(NULL AS DOUBLE)"
     f" WHEN pmod(size({_LMED}), 2) = 1"
     f" THEN CAST(try_element_at({_LMED},"
@@ -3836,28 +3832,7 @@ _FN_MACROS_N["LIST_MEDIAN"] = {1: (
     f" CAST(size({_LMED}) / 2 AS INT)) AS DOUBLE)"
     f" + CAST(try_element_at({_LMED},"
     f" CAST(size({_LMED}) / 2 + 1 AS INT)) AS DOUBLE)) / 2 END)"
-)}
-_FN_MACROS_N["LIST_HISTOGRAM"] = {1: (
-    "map_from_entries(transform("
-    "array_sort(array_distinct(filter({0}, x -> x IS NOT NULL))),"
-    " d -> struct(d, CAST(size(filter({0}, x -> x = d)) AS BIGINT))))"
-)}
-_FN_MACROS_N["ARRAY_POP_BACK"] = {
-    1: "slice({0}, 1, greatest(size({0}) - 1, 0))"
-}
-_FN_MACROS_N["ARRAY_POP_FRONT"] = {
-    1: "(CASE WHEN size({0}) <= 1 THEN slice({0}, 1, 0)"
-       " ELSE slice({0}, 2, size({0}) - 1) END)"
-}
-_FN_MACROS_N["ARRAY_PUSH_BACK"] = {2: "array_append({0}, {1})"}
-_FN_MACROS_N["ARRAY_PUSH_FRONT"] = {2: "array_prepend({0}, {1})"}
-# json aggregation macros: duckdb renders through its JSON writer; Spark's
-# to_json over the collected values produces the same canonical text
-_FN_MACROS_N["JSON_GROUP_ARRAY"] = {1: "to_json(collect_list({0}))"}
-_FN_MACROS_N["JSON_GROUP_OBJECT"] = {
-    2: "to_json(map_from_entries(collect_list(struct({0}, {1}))))"
-}
-
+)
 # list moment family: central-moment folds over the null-filtered list.
 # Formulas match DuckDB's aggregates (verified numerically): skewness is
 # the adjusted Fisher-Pearson G1, kurtosis the sample-adjusted excess G2,
@@ -3876,73 +3851,15 @@ def _lmom(k: int) -> str:
     ).replace("@M@", _LMEAN).replace("@N@", _LN)
 
 
-_FN_MACROS_N["LIST_SEM"] = {1: f"sqrt({_lmom(2)} / {_LN})"}
-_FN_MACROS_N["LIST_SKEWNESS"] = {1: (
-    f"({_lmom(3)} / power({_lmom(2)}, 1.5)"
-    f" * sqrt({_LN} * ({_LN} - 1)) / ({_LN} - 2))"
-)}
-_FN_MACROS_N["LIST_KURTOSIS_POP"] = {1: (
-    f"({_lmom(4)} / ({_lmom(2)} * {_lmom(2)}) - 3)"
-)}
-_FN_MACROS_N["LIST_KURTOSIS"] = {1: (
-    f"((({_LN} + 1) * ({_lmom(4)} / ({_lmom(2)} * {_lmom(2)}) - 3) + 6)"
-    f" * ({_LN} - 1) / (({_LN} - 2) * ({_LN} - 3)))"
-)}
-_FN_MACROS_N["LIST_ENTROPY"] = {1: (
-    f"aggregate(transform(array_distinct({_LF}),"
-    f" d -> CAST(size(filter({_LF}, x -> x = d)) AS DOUBLE)),"
-    f" CAST(0 AS DOUBLE),"
-    f" (acc, c) -> acc - (c / {_LN}) * log2(c / {_LN}))"
-)}
-_FN_MACROS_N["LIST_MODE"] = {1: (
-    f"(try_element_at(array_sort(transform(array_distinct({_LF}),"
-    f" d -> struct(CAST(-size(filter({_LF}, x -> x = d)) AS INT) AS c,"
-    f" array_position({{0}}, d) AS p, d AS v))), 1).v)"
-)}
-_FN_MACROS_N["LIST_MAD"] = {1: _FN_MACROS_N["LIST_MEDIAN"][1].replace(
-    "{0}",
-    "transform("
-    + _LF
-    + ", x -> CAST(abs(x - "
-    + _FN_MACROS_N["LIST_MEDIAN"][1]
-    + ") AS DOUBLE))",
-)}
-# Spark's native regr_avgx/avgy keep DECIMAL typing; DuckDB: DOUBLE.
-# These live in _FN_MACROS_N (cursor-advancing, expansion NOT re-scanned)
-# because the template references the same function name.
-_FN_MACROS_N["REGR_AVGX"] = {
-    2: "CAST(regr_avgx(CAST({0} AS DOUBLE), CAST({1} AS DOUBLE)) AS DOUBLE)"
-}
-_FN_MACROS_N["REGR_AVGY"] = {
-    2: "CAST(regr_avgy(CAST({0} AS DOUBLE), CAST({1} AS DOUBLE)) AS DOUBLE)"
-}
-_FN_MACROS_N["MAKE_TIMESTAMPTZ"] = {
-    1: _FN_MACROS_N["MAKE_TIMESTAMP"][1],
-    6: "make_timestamp({0}, {1}, {2}, {3}, {4}, {5})",
-}
-_FN_MACROS_N["LIST_ELEMENT"] = _FN_MACROS_N["LIST_EXTRACT"]
-_FN_MACROS_N["FORMATREADABLESIZE"] = _FN_MACROS_N["FORMAT_BYTES"]
-# decimal-unit sibling: 1000-based units, same truncate-to-one-decimal
-_FN_MACROS_N["FORMATREADABLEDECIMALSIZE"] = {1: (
-    "(CASE WHEN abs(CAST({0} AS DOUBLE)) < 1000 "
-    "THEN concat(CAST(CAST({0} AS BIGINT) AS STRING), ' bytes') "
-    + "".join(
-        f"WHEN abs(CAST({{0}} AS DOUBLE)) < {1000.0 ** (k + 1):.0f} "
-        f"THEN concat(CAST(CAST("
-        f"CAST(CAST({{0}} AS DOUBLE) / {1000.0 ** k:.0f} * 10 AS BIGINT) "
-        f"AS DOUBLE) / 10 AS DECIMAL(18,1)), ' {u}') "
-        for k, u in ((1, "kB"), (2, "MB"), (3, "GB"), (4, "TB"))
+def _list_fold(acc_type: str, first: str, step: str) -> str:
+    """Fold over the non-NULL elements with a NULL seed: DuckDB
+    list_bit_and([]) and list_product([NULL]) are NULL (probed), not the
+    identity — the seed only becomes ``first`` on the first element."""
+    return (
+        f"aggregate(filter({{0}}, x -> x IS NOT NULL), CAST(NULL AS {acc_type}),"
+        f" (acc, x) -> CASE WHEN acc IS NULL THEN {first} ELSE {step} END)"
     )
-    + "ELSE concat(CAST(CAST("
-      "CAST(CAST({0} AS DOUBLE) / 1000000000000000 * 10 AS BIGINT) "
-      "AS DOUBLE) / 10 AS DECIMAL(18,1)), ' PB') END)"
-)}
 
-# DuckDB to_binary(VARCHAR): the '0'/'1' bit string of the UTF-8 bytes
-_FN_MACROS_N["TO_BINARY"] = {
-    1: "array_join(transform(filter(split(CAST({0} AS STRING), ''), "
-       "c -> c <> ''), c -> lpad(bin(ascii(c)), 8, '0')), '')"
-}
 
 # parse_path family (system '/' separator form). parse_path keeps a
 # leading '/' as its own component and drops empties; dirname is the
@@ -3952,15 +3869,6 @@ _PARSE_COMPONENTS = (
     "THEN concat(array('/'), filter(split({0}, '/'), x -> x <> '')) "
     "ELSE filter(split({0}, '/'), x -> x <> '') END)"
 )
-_FN_MACROS_N["PARSE_PATH"] = {1: _PARSE_COMPONENTS}
-_FN_MACROS_N["PARSE_DIRNAME"] = {
-    1: f"(CASE WHEN size({_PARSE_COMPONENTS}) > 1 "
-       f"THEN element_at({_PARSE_COMPONENTS}, 1) ELSE '' END)"
-}
-_FN_MACROS_N["PARSE_DIRPATH"] = {
-    1: "substring({0}, 1, greatest(length({0}) - "
-       "length(element_at(split({0}, '/'), -1)) - 1, 0))"
-}
 
 
 def _parse_filename_template(args: list[str]) -> str:
@@ -3970,9 +3878,600 @@ def _parse_filename_template(args: list[str]) -> str:
     return base
 
 
-_FN_MACROS_N["PARSE_FILENAME"] = {
-    1: _parse_filename_template, 2: _parse_filename_template,
+# The function-rewrite table: one entry per DuckDB function name, read by
+# the one dispatch branch of pass_function_renames. An entry is a
+# template, or a dict from arity to template (the key None covers every
+# other arity). A template is a string with {0}..{n} for the argument
+# texts and {*} for all of them, or a callable over the argument texts
+# that returns the call's text, or None to leave the call alone. The
+# rule: the arguments are rewritten first, once; the template's text is
+# final Spark SQL — spliced in and never scanned again — so a template
+# may name any function, its own included.
+# DuckDB semantics verified against duckdb 1.x (tests/test_rewrites.py,
+# harness/fnsweep.py).
+_FN_REWRITES: dict[str, object] = {
+    # --- plain renames (argument-compatible Spark spelling) ---
+    "LIST_VALUE": "array({*})",
+    "LIST_PACK": "array({*})",
+    "ARRAY_VALUE": "array({*})",
+    # 1-based position, 0 when absent, NULL needle -> NULL (exact match)
+    "ARRAY_INDEXOF": "array_position({*})",
+    "LIST_INDEXOF": "array_position({*})",
+    "LIST_POSITION": "array_position({*})",
+    "LIST_MIN": "array_min({*})",
+    "LIST_MAX": "array_max({*})",
+    "LIST_DISTINCT": "array_distinct({*})",
+    "LIST_APPEND": "array_append({*})",
+    "ARRAY_APPEND": "array_append({*})",
+    "LIST_REVERSE": "reverse({*})",
+    "ARRAY_REVERSE": "reverse({*})",
+    "ARRAY_HAS_ANY": "arrays_overlap({*})",
+    "LIST_HAS_ANY": "arrays_overlap({*})",
+    "LIST_INTERSECT": "array_intersect({*})",
+    "LIST_ZIP": "arrays_zip({*})",
+    "ARRAY_ZIP": "arrays_zip({*})",
+    "LIST_CAT": "concat({*})",
+    "ARRAY_CONCAT": "concat({*})",
+    "ARRAY_TO_STRING": "array_join({*})",
+    "ARRAY_TO_JSON": "to_json({*})",
+    "STRPOS": "instr({*})",
+    "STRING_SPLIT_REGEX": "split({*})",
+    "STR_SPLIT_REGEX": "split({*})",
+    "REGEXP_SPLIT_TO_ARRAY": "split({*})",
+    "EDITDIST3": "levenshtein({*})",
+    "STARTS_WITH": "startswith({*})",
+    "PREFIX": "startswith({*})",
+    "ENDS_WITH": "endswith({*})",
+    "SUFFIX": "endswith({*})",
+    "TO_BASE64": "base64({*})",
+    "FROM_BASE64": "unbase64({*})",
+    "TO_HEX": "hex({*})",
+    "FROM_HEX": "unhex({*})",
+    "UNICODE": "ascii({*})",
+    "ORD": "ascii({*})",
+    "TO_TIMESTAMP": "timestamp_seconds({*})",  # DuckDB to_timestamp(sec)
+    "WEEK": "weekofyear({*})",
+    "RANDOM": "rand({*})",
+    "GEN_RANDOM_UUID": "uuid({*})",
+    "ARBITRARY": "any_value({*})",
+    "APPROX_QUANTILE": "approx_percentile({*})",
+    # --- zero-argument session functions: DuckDB names and values ---
+    "CURRENT_SCHEMA": {0: "'main'"},
+    "CURRENT_USER": {0: "'duckdb'"},
+    "CURRENT_ROLE": {0: "'duckdb'"},
+    "SESSION_USER": {0: "'duckdb'"},
+    "VERSION": {0: "'v1.0.0-spark'"},
+    "TODAY": {0: "current_date()"},
+    "TRANSACTION_TIMESTAMP": {0: "current_timestamp()"},
+    "GET_CURRENT_TIMESTAMP": {0: "current_timestamp()"},
+    "CURRENT_LOCALTIMESTAMP": {0: "localtimestamp()"},
+    # TIME-typed zero-arg aliases (Spark 4.1 TIME behind timeType.enabled
+    # — see session.RUNTIME_CONFS; the engine pins UTC, so "local" time
+    # is session time like DuckDB under SET TimeZone='UTC')
+    "GET_CURRENT_TIME": {0: "current_time()"},
+    "CURRENT_LOCALTIME": {0: "current_time()"},
+    "UUIDV4": {0: "uuid()"},
+    # single-session engine: the txid is the constant baseline (DuckDB's
+    # own in-memory db starts near 0; callers use it for ordering only)
+    "TXID_CURRENT": {0: "CAST(0 AS BIGINT)"},
+    # count_star() and count_star(*)
+    "COUNT_STAR": {0: "count(*)", 1: lambda a: "count(*)" if a[0] == "*" else None},
+    # setseed: engine RNG is per-query in Spark; accept and return NULL
+    "SETSEED": {1: "CAST(NULL AS STRING)"},
+    "CURRENT_SCHEMAS": {1: _current_schemas_template},
+    "IN_SEARCH_PATH": {
+        2: "(({0}) IN ('memory', 'system', 'temp')"
+           " AND ({1}) IN ('main', 'pg_catalog'))"
+    },
+    # DuckDB error('msg') raises with the message
+    "ERROR": {1: "raise_error({0})"},
+    # --- strings ---
+    # char-set trims (DuckDB trim(s, chars); Spark needs TRIM(BOTH..FROM..))
+    "TRIM": {2: "TRIM(BOTH {1} FROM {0})"},
+    "LTRIM": {2: "TRIM(LEADING {1} FROM {0})"},
+    "RTRIM": {2: "TRIM(TRAILING {1} FROM {0})"},
+    "CONCAT": _concat_template,
+    "STRING_SPLIT": {2: _string_split_template},
+    "STR_SPLIT": {2: _string_split_template},
+    "STRING_TO_ARRAY": {2: _string_split_template},
+    "STRING_AGG": _string_agg_template,
+    "LISTAGG": _string_agg_template,
+    "GROUP_CONCAT": _string_agg_template,
+    "FORMAT": _format_template,
+    "PRINTF": _printf_template,
+    "LEFT": _LEFT,
+    "RIGHT": _RIGHT,
+    # grapheme-cluster variants: code-point approximation (true cluster
+    # segmentation needs ICU; identical for precomposed text)
+    "LENGTH_GRAPHEME": {1: "length({0})"},
+    "LEFT_GRAPHEME": _LEFT,
+    "RIGHT_GRAPHEME": _RIGHT,
+    "SUBSTRING_GRAPHEME": {
+        2: "substring({0}, {1})", 3: "substring({0}, {1}, {2})",
+    },
+    "SUBSTR": {3: _substr_zero_template},
+    "SUBSTRING": {3: _substr_zero_template},
+    # Spark chr()/char() wrap at 256; %c takes the full unicode codepoint
+    "CHR": {1: "format_string('%c', CAST({0} AS INT))"},
+    # DuckDB strlen counts BYTES (length counts characters in both)
+    "STRLEN": {1: "octet_length({0})"},
+    "LEN": {1: _len_template("length")},
+    "LENGTH": {1: _len_template(None)},
+    "CARDINALITY": {1: _len_template(None)},
+    # DuckDB's array_length takes only lists; only dimension 1 exists here
+    "ARRAY_LENGTH": {
+        1: "size({0})",
+        2: lambda a: f"size({a[0]})" if a[1] == "1" else None,
+    },
+    "SHA256": {1: "sha2({0}, 256)"},
+    "MD5_NUMBER_LOWER": {1: _md5_number_template(True)},
+    "MD5_NUMBER_UPPER": {1: _md5_number_template(False)},
+    # DuckDB 1-arg encode/decode: UTF-8 string <-> BLOB
+    "ENCODE": {1: "encode({0}, 'UTF-8')"},
+    "DECODE": {1: "decode({0}, 'UTF-8')"},
+    "UNBIN": {1: _UNBIN_T},
+    "FROM_BINARY": {1: _UNBIN_T},
+    "BIN": {1: _bin_string_template},
+    # DuckDB to_binary(VARCHAR): the '0'/'1' bit string of the UTF-8 bytes
+    "TO_BINARY": {
+        1: "array_join(transform(filter(split(CAST({0} AS STRING), ''), "
+           "c -> c <> ''), c -> lpad(bin(ascii(c)), 8, '0')), '')"
+    },
+    "FORMAT_BYTES": {1: _readable_size(1024, ("KiB", "MiB", "GiB", "TiB", "PiB"))},
+    "FORMATREADABLESIZE": {1: _readable_size(1024, ("KiB", "MiB", "GiB", "TiB", "PiB"))},
+    "FORMATREADABLEDECIMALSIZE": {1: _readable_size(1000, ("kB", "MB", "GB", "TB", "PB"))},
+    "PARSE_PATH": {1: _PARSE_COMPONENTS},
+    "PARSE_DIRNAME": {
+        1: f"(CASE WHEN size({_PARSE_COMPONENTS}) > 1 "
+           f"THEN element_at({_PARSE_COMPONENTS}, 1) ELSE '' END)"
+    },
+    "PARSE_DIRPATH": {
+        1: "substring({0}, 1, greatest(length({0}) - "
+           "length(element_at(split({0}, '/'), -1)) - 1, 0))"
+    },
+    "PARSE_FILENAME": {
+        1: _parse_filename_template, 2: _parse_filename_template,
+    },
+    # --- regular expressions and pattern matching ---
+    "REGEXP_MATCHES": {2: _regexp_matches_template, 3: _regexp_matches_template},
+    "REGEXP_EXTRACT": {
+        2: _regexp_extract_template, 3: _regexp_extract_template,
+        4: _regexp_extract_template,
+    },
+    # DuckDB regexp_extract_all defaults to group 0 (whole match); Spark's
+    # default is group 1 and errors when the pattern has no groups
+    "REGEXP_EXTRACT_ALL": {2: "regexp_extract_all({0}, {1}, 0)"},
+    "REGEXP_REPLACE": {3: _regexp_replace_template, 4: _regexp_replace_template},
+    # regexp_full_match(s, re) -> anchored RLIKE
+    "REGEXP_FULL_MATCH": {
+        2: "(({0}) RLIKE ('^(?:' || ({1}) || ')$'))"
+    },
+    # LIKE with an explicit escape character (Spark has the same clause)
+    "LIKE_ESCAPE": {3: "(({0}) LIKE ({1}) ESCAPE {2})"},
+    "NOT_LIKE_ESCAPE": {3: "(NOT (({0}) LIKE ({1}) ESCAPE {2}))"},
+    "ILIKE_ESCAPE": {3: "(upper({0}) LIKE upper({1}) ESCAPE {2})"},
+    "NOT_ILIKE_ESCAPE": {
+        3: "(NOT (upper({0}) LIKE upper({1}) ESCAPE {2}))"
+    },
+    # 2-arg contains over literal lists and maps
+    "CONTAINS": {2: _contains_template},
+    # --- numbers ---
+    "TO_BASE": {2: "conv({0}, 10, {1})"},
+    # even()/fdiv()/fmod() return DOUBLE in DuckDB regardless of input type
+    "EVEN": {1: "CAST(ceil(abs({0}) / 2) * 2 * "
+                "(CASE WHEN ({0}) < 0 THEN -1 ELSE 1 END) AS DOUBLE)"},
+    # Spark NaN = NaN is TRUE, so equality IS the NaN test (and NULL
+    # propagates, matching DuckDB — Spark's own isnan(NULL) is false)
+    "ISNAN": {1: "(({0}) = double('NaN'))"},
+    "ISINF": {1: "(abs(CAST(({0}) AS DOUBLE)) = double('Infinity'))"},
+    "ISFINITE": {
+        1: "(CASE WHEN ({0}) = double('NaN') THEN false "
+           "ELSE abs(CAST(({0}) AS DOUBLE)) <> double('Infinity') END)"
+    },
+    # 1-arg trunc: toward-zero truncation keeping the numeric value
+    "TRUNC": {1: "(floor(abs({0})) * CASE WHEN ({0}) < 0 THEN -1 ELSE 1 END)"},
+    # DuckDB fdiv/fmod are FLOORED division/modulo (sign of divisor)
+    "FDIV": {2: "CAST(floor(({0}) / ({1})) AS DOUBLE)"},
+    "FMOD": {2: "CAST(({0}) - floor(({0}) / ({1})) * ({1}) AS DOUBLE)"},
+    # DuckDB operator-function aliases; divide is the `//` operator
+    # (truncating on integers — Spark's `div` matches that tier)
+    "ADD": {1: "({0})", 2: "(({0}) + ({1}))"},
+    "SUBTRACT": {1: "(-({0}))", 2: "(({0}) - ({1}))"},
+    "MULTIPLY": {2: "(({0}) * ({1}))"},
+    "DIVIDE": {2: "(({0}) div ({1}))"},
+    # DuckDB xor() function -> Spark's ^ operator (pass_caret_power has
+    # already claimed user-written carets as exponentiation)
+    "XOR": {2: "({0} ^ {1})"},
+    "GREATEST": {1: "({0})"},
+    "LEAST": {1: "({0})"},
+    # DuckDB log(x) is base-10; Spark log(x) is ln (2-arg log agrees)
+    "LOG": {1: "log10({0})"},
+    # DuckDB sign() returns an integer; Spark's returns DOUBLE
+    "SIGN": {1: "CAST(signum({0}) AS INTEGER)"},
+    "ROUND": {1: _round_one_template, 2: _round_int_template},
+    # BIT functions over the '0'/'1' text carried by the BIT cast
+    # passthrough (0-based bit indexes, like DuckDB)
+    "GET_BIT": {
+        2: "CAST(substring({0}, CAST({1} AS INT) + 1, 1) AS INT)"
+    },
+    "SET_BIT": {
+        3: "concat(left({0}, CAST({1} AS INT)), CAST({2} AS STRING),"
+           " substring({0}, CAST({1} AS INT) + 2))"
+    },
+    "BITSTRING": {2: "lpad({0}, CAST({1} AS INT), '0')"},
+    "BIT_COUNT": {1: _bit_count_template},
+    "BIT_LENGTH": {1: _bit_length_template},
+    "BIT_POSITION": {2: "instr({1}, {0})"},
+    "CONSTANT_OR_NULL": {
+        2: "(CASE WHEN ({1}) IS NULL THEN NULL ELSE ({0}) END)"
+    },
+    # engine typename, translated to DuckDB spelling by a registered UDF
+    "TYPEOF": {1: "duckdb_typename(typeof({0}))"},
+    # --- dates and times ---
+    "DATE_TRUNC": {2: _date_trunc_template},
+    "DATETRUNC": {2: _date_trunc_template},
+    "DATE_PART": {2: _date_part_template},
+    "DATEPART": {2: _date_part_template},
+    "EXTRACT": {1: _extract_template},
+    "STRFTIME": {2: _strftime_template},
+    "STRPTIME": {2: _strptime_template},
+    "TRY_STRPTIME": {2: _strptime_template},
+    "TIME_BUCKET": {2: _time_bucket_template, 3: _time_bucket_template},
+    "DATE_ADD": {2: _date_add_template},
+    "DATE_SUB": {3: _date_sub_template},
+    "DATESUB": {3: _date_sub_template},
+    "YEARWEEK": {1: "(extract(YEAROFWEEK FROM {0}) * 100 + weekofyear({0}))"},
+    "CENTURY": {1: "CAST(ceil(year({0}) / 100.0) AS BIGINT)"},
+    "DECADE": {1: "CAST(floor(year({0}) / 10) AS BIGINT)"},
+    "MILLENNIUM": {1: "CAST(ceil(year({0}) / 1000.0) AS BIGINT)"},
+    "ISOYEAR": {1: "extract(YEAROFWEEK FROM {0})"},
+    # DuckDB dayofweek/weekday: Sunday=0..Saturday=6; isodow: Mon=1..Sun=7
+    "DAYOFWEEK": {1: "(dayofweek({0}) - 1)"},
+    "WEEKDAY": {1: "(dayofweek({0}) - 1)"},
+    "ISODOW": {1: "(weekday({0}) + 1)"},
+    # Spark 4 has its own dayname() -> 'Mon'; DuckDB returns 'Monday'
+    "DAYNAME": {1: "date_format({0}, 'EEEE')"},
+    "MONTHNAME": {1: "date_format({0}, 'MMMM')"},
+    "ERA": {1: "(CASE WHEN year({0}) > 0 THEN 1 ELSE 0 END)"},
+    # scalar micro/millisecond accessors include the seconds component,
+    # like the date_part fields
+    "MICROSECOND": {
+        1: "pmod(unix_micros(CAST({0} AS TIMESTAMP)), 60000000)"
+    },
+    "MILLISECOND": {
+        1: "CAST(pmod(unix_micros(CAST({0} AS TIMESTAMP)), 60000000) / 1000"
+           " AS BIGINT)"
+    },
+    # epoch(ts) -> seconds as double (DuckDB keeps sub-second precision;
+    # 1e6 not 1000000.0 — Spark parses the latter as a DECIMAL literal)
+    "EPOCH": {1: "(unix_micros(CAST({0} AS TIMESTAMP)) / 1e6)"},
+    "EPOCH_MS": {1: "unix_millis(CAST({0} AS TIMESTAMP))"},
+    "EPOCH_US": {1: "unix_micros(CAST({0} AS TIMESTAMP))"},
+    "EPOCH_NS": {1: "(unix_micros(CAST({0} AS TIMESTAMP)) * 1000)"},
+    # julian day number, calibrated to DuckDB (julian(DATE '1970-01-01')
+    # = 2440588.0, time-of-day as a fraction)
+    "JULIAN": {1: "(2440588.0 + unix_micros(CAST({0} AS TIMESTAMP)) / 86400e6)"},
+    # DuckDB age(): SYMBOLIC year/month/day interval — months count by
+    # calendar (months_between + add_months), the remainder is exact
+    # seconds; rendered as a day-time interval using DuckDB's own
+    # 30-day-month conversion (what its Python timedelta shows)
+    "AGE": {
+        2: _age_template,
+        1: "make_dt_interval(0, 0, 0, "
+           "floor(months_between(current_timestamp(), "
+           "CAST({0} AS TIMESTAMP))) * 2592000 + "
+           "(unix_micros(current_timestamp()) - "
+           "unix_micros(CAST({0} AS TIMESTAMP) + make_ym_interval(0, "
+           "CAST(floor(months_between(current_timestamp(), "
+           "CAST({0} AS TIMESTAMP))) AS INT)))) / 1e6)",
+    },
+    # naive TIMESTAMPs carry no zone; the engine pins the session to UTC
+    # (io contract), so the offset is identically zero — like DuckDB's
+    # 2-arg timezone(tz, naive-ts): interpret in tz, render in the
+    # session zone (UTC by io contract) — exactly to_utc_timestamp
+    "TIMEZONE": {1: "CAST(0 AS INTEGER)", 2: "to_utc_timestamp({1}, {0})"},
+    "TIMEZONE_HOUR": {1: "CAST(0 AS INTEGER)"},
+    "TIMEZONE_MINUTE": {1: "CAST(0 AS INTEGER)"},
+    # 1-arg make_timestamp(microseconds-since-epoch); 6-arg stays Spark's
+    "MAKE_TIMESTAMP": {1: "timestamp_micros(CAST({0} AS BIGINT))"},
+    "MAKE_TIMESTAMPTZ": {
+        1: "timestamp_micros(CAST({0} AS BIGINT))",
+        6: "make_timestamp({0}, {1}, {2}, {3}, {4}, {5})",
+    },
+    # to_<unit>(n) interval constructors -> Spark interval builders
+    # (day-time units produce DayTimeIntervalType = python timedelta, like
+    # DuckDB; month-based units produce YearMonthIntervalType)
+    "TO_DAYS": {1: "make_dt_interval(CAST({0} AS INT))"},
+    "TO_WEEKS": {1: "make_dt_interval(CAST({0} AS INT) * 7)"},
+    "TO_HOURS": {1: "make_dt_interval(0, CAST({0} AS INT))"},
+    "TO_MINUTES": {1: "make_dt_interval(0, 0, CAST({0} AS INT))"},
+    "TO_SECONDS": {1: "make_dt_interval(0, 0, 0, {0})"},
+    "TO_MILLISECONDS": {
+        1: "make_dt_interval(0, 0, 0, CAST({0} AS DOUBLE) / 1e3)"
+    },
+    "TO_MICROSECONDS": {
+        1: "make_dt_interval(0, 0, 0, CAST({0} AS DOUBLE) / 1e6)"
+    },
+    "TO_MONTHS": {1: "make_ym_interval(0, CAST({0} AS INT))"},
+    "TO_QUARTERS": {1: "make_ym_interval(0, CAST({0} AS INT) * 3)"},
+    "TO_YEARS": {1: "make_ym_interval(CAST({0} AS INT))"},
+    "TO_DECADES": {1: "make_ym_interval(CAST({0} AS INT) * 10)"},
+    "TO_CENTURIES": {1: "make_ym_interval(CAST({0} AS INT) * 100)"},
+    "TO_MILLENNIA": {1: "make_ym_interval(CAST({0} AS INT) * 1000)"},
+    # --- lists ---
+    "LIST_TRANSFORM": {2: _transform_template},
+    "LIST_APPLY": {2: _transform_template},
+    "APPLY": {2: _transform_template},
+    "ARRAY_TRANSFORM": {2: _transform_template},
+    "ARRAY_APPLY": {2: _transform_template},
+    "LIST_FILTER": {2: _filter_bool_shift_template},
+    "ARRAY_FILTER": {2: _filter_bool_shift_template},
+    "FILTER": {2: _filter_bool_shift_template},
+    "LIST_CONTAINS": {2: _list_contains_null_template},
+    "ARRAY_CONTAINS": {2: _list_contains_null_template},
+    "ARRAY_HAS": {2: "array_contains({0}, {1})"},
+    "LIST_HAS": {2: "array_contains({0}, {1})"},
+    "LIST_HAS_ALL": _HAS_ALL,
+    "ARRAY_HAS_ALL": _HAS_ALL,
+    "LIST_CONCAT": {2: _LIST_CONCAT, None: "concat({*})"},
+    "ARRAY_CAT": {2: _LIST_CONCAT},
+    # DuckDB list_prepend(elem, list) vs Spark array_prepend(list, elem)
+    "LIST_PREPEND": {2: "array_prepend({1}, {0})"},
+    "ARRAY_PUSH_BACK": {2: "array_append({0}, {1})"},
+    "ARRAY_PUSH_FRONT": {2: "array_prepend({0}, {1})"},
+    "ARRAY_POP_BACK": {
+        1: "slice({0}, 1, greatest(size({0}) - 1, 0))"
+    },
+    "ARRAY_POP_FRONT": {
+        1: "(CASE WHEN size({0}) <= 1 THEN slice({0}, 1, 0)"
+           " ELSE slice({0}, 2, size({0}) - 1) END)"
+    },
+    "LIST_SORT": _list_sort_template,
+    "LIST_REVERSE_SORT": {1: "sort_array({0}, false)"},
+    "ARRAY_REVERSE_SORT": {1: "sort_array({0}, false)"},
+    "LIST_SLICE": _SLICE,
+    "ARRAY_SLICE": _SLICE,
+    # list_extract/array_extract: 1-based, negative-from-end, NULL for
+    # index 0 or out of range (DuckDB never errors here)
+    "LIST_EXTRACT": {2: _LIST_EXTRACT},
+    "ARRAY_EXTRACT": {2: _LIST_EXTRACT},
+    "LIST_ELEMENT": {2: _LIST_EXTRACT},
+    "LIST_REDUCE": _REDUCE,
+    "REDUCE": _REDUCE,
+    "ARRAY_REDUCE": _REDUCE,
+    "LIST_GRADE_UP": _GRADE_UP,
+    "GRADE_UP": _GRADE_UP,
+    "ARRAY_GRADE_UP": _GRADE_UP,
+    "LIST_RESIZE": _RESIZE,
+    "ARRAY_RESIZE": _RESIZE,
+    "LIST_SELECT": _SELECT,
+    "ARRAY_SELECT": _SELECT,
+    "LIST_WHERE": _WHERE,
+    "ARRAY_WHERE": _WHERE,
+    "LIST_DOT_PRODUCT": {2: _DOT},
+    "LIST_INNER_PRODUCT": {2: _DOT},
+    # fixed-size ARRAY spellings: same math over Spark arrays (the engine
+    # types DuckDB's ARRAY(T, n) as array<T>)
+    "ARRAY_DOT_PRODUCT": {2: _DOT},
+    "ARRAY_INNER_PRODUCT": {2: _DOT},
+    "LIST_COSINE_SIMILARITY": {2: _COSINE},
+    "ARRAY_COSINE_SIMILARITY": {2: _COSINE},
+    "LIST_DISTANCE": {2: _EUCLID},
+    "ARRAY_DISTANCE": {2: _EUCLID},
+    "LIST_CROSS_PRODUCT": {2: _cross3_template},
+    "ARRAY_CROSS_PRODUCT": {2: _cross3_template},
+    # DuckDB list_unique = COUNT of distinct NON-NULL elements
+    "LIST_UNIQUE": {1: _LIST_UNIQUE},
+    "ARRAY_UNIQUE": {1: _LIST_UNIQUE},
+    "LIST_COUNT": {1: "CAST(size(filter({0}, x -> x IS NOT NULL)) AS BIGINT)"},
+    "ARRAY_COUNT": {1: "size(filter({0}, x -> x IS NOT NULL))"},
+    "UNPIVOT_LIST": "array({*})",
+    "GENERATE_SERIES": lambda a: (
+        _series_sequence_sql(a, inclusive=True) if 1 <= len(a) <= 3 else None
+    ),
+    "RANGE": lambda a: (
+        _series_sequence_sql(a, inclusive=False) if 1 <= len(a) <= 3 else None
+    ),
+    # generate_subscripts(list, dim) = unnest of the 1-based index range
+    # (only 1-D lists exist here, so dim collapses)
+    "GENERATE_SUBSCRIPTS": {2: "explode(sequence(1, size({0})))"},
+    "UNNEST": _unnest_template,
+    "LIST_AGGREGATE": {2: _list_aggregate_template, 3: _list_aggregate_template},
+    "LIST_AGGR": {2: _list_aggregate_template, 3: _list_aggregate_template},
+    "ARRAY_AGGREGATE": {2: _list_aggregate_template, 3: _list_aggregate_template},
+    "ARRAY_AGGR": {2: _list_aggregate_template, 3: _list_aggregate_template},
+    # double-precision folds (DuckDB keeps integer types for int lists;
+    # values agree, stated type is DOUBLE)
+    "LIST_SUM": {1: _SUM_FOLD},
+    "LIST_AVG": {1: f"({_SUM_FOLD} / size({{0}}))"},
+    "LIST_ANY_VALUE": {1: "try_element_at(filter({0}, x -> x IS NOT NULL), 1)"},
+    "LIST_APPROX_COUNT_DISTINCT": {
+        1: "CAST(size(array_distinct(filter({0}, x -> x IS NOT NULL)))"
+           " AS BIGINT)"
+    },
+    "LIST_FIRST": {1: "try_element_at({0}, 1)"},
+    "LIST_LAST": {1: "try_element_at({0}, -1)"},
+    "LIST_BIT_AND": {1: _list_fold("BIGINT", "CAST(x AS BIGINT)", "acc & x")},
+    "LIST_BIT_OR": {1: _list_fold("BIGINT", "CAST(x AS BIGINT)", "acc | x")},
+    # xor spelled arithmetically: (a|b) - (a&b); a literal ^ here would
+    # be re-claimed as exponentiation by pass_caret_power's dialect rule
+    "LIST_BIT_XOR": {1: _list_fold(
+        "BIGINT", "CAST(x AS BIGINT)",
+        "(acc | CAST(x AS BIGINT)) - (acc & CAST(x AS BIGINT))",
+    )},
+    "LIST_BOOL_AND": {1: _list_fold("BOOLEAN", "x", "acc AND x")},
+    "LIST_BOOL_OR": {1: _list_fold("BOOLEAN", "x", "acc OR x")},
+    "LIST_PRODUCT": {1: _list_fold("DOUBLE", "CAST(x AS DOUBLE)", "acc * x")},
+    "LIST_MEDIAN": {1: _LIST_MEDIAN},
+    "LIST_MAD": {1: _LIST_MEDIAN.replace(
+        "{0}",
+        f"transform({_LF}, x -> CAST(abs(x - {_LIST_MEDIAN}) AS DOUBLE))",
+    )},
+    "LIST_HISTOGRAM": {1: (
+        "map_from_entries(transform("
+        "array_sort(array_distinct(filter({0}, x -> x IS NOT NULL))),"
+        " d -> struct(d, CAST(size(filter({0}, x -> x = d)) AS BIGINT))))"
+    )},
+    "LIST_SEM": {1: f"sqrt({_lmom(2)} / {_LN})"},
+    "LIST_SKEWNESS": {1: (
+        f"({_lmom(3)} / power({_lmom(2)}, 1.5)"
+        f" * sqrt({_LN} * ({_LN} - 1)) / ({_LN} - 2))"
+    )},
+    "LIST_KURTOSIS_POP": {1: (
+        f"({_lmom(4)} / ({_lmom(2)} * {_lmom(2)}) - 3)"
+    )},
+    "LIST_KURTOSIS": {1: (
+        f"((({_LN} + 1) * ({_lmom(4)} / ({_lmom(2)} * {_lmom(2)}) - 3) + 6)"
+        f" * ({_LN} - 1) / (({_LN} - 2) * ({_LN} - 3)))"
+    )},
+    "LIST_ENTROPY": {1: (
+        f"aggregate(transform(array_distinct({_LF}),"
+        f" d -> CAST(size(filter({_LF}, x -> x = d)) AS DOUBLE)),"
+        f" CAST(0 AS DOUBLE),"
+        f" (acc, c) -> acc - (c / {_LN}) * log2(c / {_LN}))"
+    )},
+    "LIST_MODE": {1: (
+        f"(try_element_at(array_sort(transform(array_distinct({_LF}),"
+        f" d -> struct(CAST(-size(filter({_LF}, x -> x = d)) AS INT) AS c,"
+        f" array_position({{0}}, d) AS p, d AS v))), 1).v)"
+    )},
+    # --- maps, structs, unions and JSON ---
+    "MAP": {2: _map_from_lists_template},
+    "MAP_EXTRACT": {2: _MAP_EXTRACT},
+    "ELEMENT_AT": {2: _element_at_template},
+    # map_contains (DuckDB >= 1.1 name)
+    "MAP_CONTAINS": {2: "map_contains_key({0}, {1})"},
+    "STRUCT_PACK": _struct_pack_template,
+    "STRUCT_INSERT": _struct_insert_template,
+    "STRUCT_EXTRACT": {2: _struct_extract_template},
+    # row(...) -> anonymous struct; fields are aliased col1..colN (Spark's
+    # struct() would otherwise keep source COLUMN names, breaking
+    # positional struct_extract)
+    "ROW": lambda a: "struct(" + ", ".join(
+        f"({x}) AS col{k + 1}" for k, x in enumerate(a)
+    ) + ")",
+    "UNION_VALUE": {1: _union_value_template},
+    "UNION_TAG": {1: "(({0}).__utag)"},
+    "UNION_EXTRACT": {2: _union_extract_template},
+    "JSON_ARRAY": _json_array_template,
+    "JSON_OBJECT": (
+        "to_json(named_struct({*}), map('ignoreNullFields', 'false'))"
+    ),
+    "ROW_TO_JSON": {1: "to_json({0})"},
+    "FROM_JSON": {2: _from_json_template},
+    "JSON_TRANSFORM": {2: _from_json_template},
+    "JSON_TRANSFORM_STRICT": {2: _from_json_template},
+    # DuckDB returns 0 for valid non-array JSON where Spark returns NULL
+    "JSON_ARRAY_LENGTH": {1: (
+        "(CASE WHEN ({0}) IS NULL THEN CAST(NULL AS BIGINT) "
+        "ELSE CAST(coalesce(json_array_length({0}), 0) AS BIGINT) END)"
+    )},
+    # json aggregation: DuckDB renders through its JSON writer; Spark's
+    # to_json over the collected values produces the same canonical text
+    "JSON_GROUP_ARRAY": {1: "to_json(collect_list({0}))"},
+    "JSON_GROUP_OBJECT": {
+        2: "to_json(map_from_entries(collect_list(struct({0}, {1}))))"
+    },
+    # --- aggregates ---
+    "AVG": {1: _avg_double_template},
+    "MEAN": {1: _avg_double_template},
+    # float-compensated aggregates: always DOUBLE in DuckDB (the Kahan
+    # compensation itself is a single-node nicety — meaningless once the
+    # sum is a distributed two-phase merge)
+    "FSUM": {1: _FSUM},
+    "SUMKAHAN": {1: _FSUM},
+    "KAHAN_SUM": {1: _FSUM},
+    "FAVG": {1: "avg(CAST({0} AS DOUBLE))"},
+    "MIN": {2: "slice(array_sort(collect_list({0})), 1, CAST({1} AS INT))"},
+    "MAX": {2: "slice(sort_array(collect_list({0}), false), 1, "
+               "CAST({1} AS INT))"},
+    "MIN_BY": {3: _MIN_BY_N},
+    "MAX_BY": {3: _MAX_BY_N},
+    "ARG_MAX": _ARG_MAX,
+    "ARGMAX": _ARG_MAX,
+    "ARG_MIN": _ARG_MIN,
+    "ARGMIN": _ARG_MIN,
+    "ARG_MAX_NULL": {2: "max_by({0}, {1})"},
+    "ARG_MIN_NULL": {2: "min_by({0}, {1})"},
+    "FIRST": _ordered_pick_template("FIRST"),
+    "LAST": _ordered_pick_template("LAST"),
+    "ANY_VALUE": _ordered_pick_template("ANY_VALUE"),
+    # exact interpolated quantile: DuckDB quantile_cont == Spark
+    # percentile (both take a scalar or an array of fractions)
+    "QUANTILE_CONT": {2: "percentile({0}, {1})"},
+    # the sorted-collect pick keeps the input's type (Spark's
+    # percentile_disc always returns DOUBLE)
+    "QUANTILE_DISC": {2: _quantile_disc_template},
+    "QUANTILE": {2: _quantile_disc_template},
+    "RESERVOIR_QUANTILE": {
+        2: "approx_percentile({0}, {1})",
+        3: "approx_percentile({0}, {1})",
+    },
+    "GEOMEAN": {1: "exp(avg(ln({0})))"},
+    "GEOMETRIC_MEAN": {1: "exp(avg(ln({0})))"},
+    # DuckDB reports SAMPLE-corrected moments (G1/G2); Spark population g1/g2
+    "SKEWNESS": {
+        1: "(skewness({0}) * sqrt(count({0}) * (count({0}) - 1.0)) / (count({0}) - 2))"
+    },
+    "KURTOSIS": {
+        1: "((count({0}) - 1.0) / ((count({0}) - 2) * (count({0}) - 3)) "
+           "* ((count({0}) + 1) * kurtosis({0}) + 6))"
+    },
+    "KURTOSIS_POP": {1: "kurtosis({0})"},
+    "SEM": {1: "(stddev_pop({0}) / sqrt(count({0})))"},
+    # Spark's native regr_avgx/avgy keep DECIMAL typing; DuckDB: DOUBLE
+    "REGR_AVGX": {
+        2: "CAST(regr_avgx(CAST({0} AS DOUBLE), CAST({1} AS DOUBLE)) AS DOUBLE)"
+    },
+    "REGR_AVGY": {
+        2: "CAST(regr_avgy(CAST({0} AS DOUBLE), CAST({1} AS DOUBLE)) AS DOUBLE)"
+    },
+    # value-frequency map ordered by key (small-group collect_list scan;
+    # DuckDB histogram returns MAP(key -> count))
+    "HISTOGRAM": {
+        1: "map_from_entries(transform(array_sort(array_distinct("
+           "collect_list({0}))), v -> struct(v, "
+           "size(filter(collect_list({0}), y -> y = v)))))"
+    },
+    # bitstring_agg: '1' at each present value's offset in [min, max]
+    "BITSTRING_AGG": {
+        1: "array_join(transform(sequence(min({0}), max({0})), "
+           "p -> CASE WHEN array_contains(collect_set({0}), p) "
+           "THEN '1' ELSE '0' END), '')"
+    },
+    # multi-argument grouping(a, b, ...) -> Spark's grouping_id bitmask
+    # (identical bit layout; 1-arg grouping() is native in both)
+    "GROUPING": {
+        2: "grouping_id({0}, {1})",
+        3: "grouping_id({0}, {1}, {2})",
+        4: "grouping_id({0}, {1}, {2}, {3})",
+    },
+    # 3-arg bar(value, min, max): DuckDB's default width is 80
+    "BAR": {3: "bar({0}, {1}, {2}, 80)"},
 }
+
+
+def _fill(tmpl: str, args: list[str]) -> str:
+    """A string template with {0}..{n} replaced by the argument texts and
+    {*} by all of them."""
+    return re.sub(
+        r"\{(\d+|\*)\}",
+        lambda m: ", ".join(args) if m.group(1) == "*" else args[int(m.group(1))],
+        tmpl,
+    )
+
+
+def _expand_call(up: str, args: list[str]) -> Optional[str]:
+    """The final Spark text of the call ``up(args)`` (argument texts
+    already rewritten) by its _FN_REWRITES entry; None leaves the call
+    alone."""
+    entry = _FN_REWRITES[up]
+    if isinstance(entry, dict):
+        entry = entry.get(len(args), entry.get(None))
+    if entry is None:
+        return None
+    return entry(args) if callable(entry) else _fill(entry, args)
+
 
 # aggregates where an in-call ORDER BY is a no-op DuckDB tolerates —
 # stripped by pass_strip_agg_order before anything else parses the call
@@ -4296,7 +4795,7 @@ _ARRAY_FUNCS = frozenset(
     "LIST_DISTINCT LIST_CONCAT LIST_APPEND LIST_PREPEND LIST_REVERSE "
     "LIST_RESIZE LIST_SELECT LIST_WHERE ARRAY_TRANSFORM ARRAY_FILTER "
     "LIST_INTERSECT ZIP_WITH ARRAY_CAT LIST_PACK APPLY LIST_APPLY "
-    "FILTER REVERSE_ARRAY ARRAY_APPEND ARRAY_PREPEND".split()
+    "FILTER REVERSE_ARRAY ARRAY_APPEND ARRAY_PREPEND ARRAY_INTERSECT".split()
 )
 
 
@@ -4427,10 +4926,7 @@ def _tok_is_ts_primary(sig: list[Token], resolver: Resolver) -> bool:
         else:
             return False
     if name is not None:
-        try:
-            return bool(resolver.column_timestamp(name.lower()))
-        except AttributeError:
-            return False
+        return bool(resolver.column_timestamp(name.lower()))
     return False
 
 
@@ -4703,7 +5199,9 @@ def pass_ts_time_cast(
 
 
 def _span_is_array(tokens: list[Token], lo: int, hi: int, resolver: Resolver) -> bool:
-    """Best-effort: does tokens[lo:hi] evaluate to an array?"""
+    """Best-effort: does tokens[lo:hi] evaluate to an array? Reads
+    rewritten Spark text too: parentheses, a CASE's ELSE arm, reverse()
+    and CAST(.. AS ARRAY<..>) are looked through."""
     sig = [tk for tk in tokens[lo:hi] if tk.kind not in (WS, COMMENT)]
     if not sig:
         return False
@@ -4711,6 +5209,36 @@ def _span_is_array(tokens: list[Token], lo: int, hi: int, resolver: Resolver) ->
         return True
     if sig[0].kind == IDENT and sig[0].upper in _ARRAY_FUNCS:
         return True
+    whole_call = len(sig) > 2 and _match_sig_forward(sig, 1) == len(sig) - 1
+    if sig[0].text == "(" and _match_sig_forward(sig, 0) == len(sig) - 1:
+        return _span_is_array(sig, 1, len(sig) - 1, resolver)
+    if sig[0].is_kw("REVERSE") and whole_call:
+        return _span_is_array(sig, 2, len(sig) - 1, resolver)
+    depth = cases = 0
+    if sig[0].is_kw("CAST") and whole_call:
+        target = None
+        for k in range(2, len(sig) - 1):
+            if sig[k].kind == PUNCT and sig[k].text in "([{":
+                depth += 1
+            elif sig[k].kind == PUNCT and sig[k].text in ")]}":
+                depth -= 1
+            elif depth == 0 and sig[k].is_kw("AS"):
+                target = sig[k + 1]
+        return target is not None and target.is_kw("ARRAY")
+    if sig[0].is_kw("CASE") and sig[-1].is_kw("END"):
+        # the ELSE arm of the outermost CASE
+        for k, tk in enumerate(sig):
+            if tk.kind == PUNCT and tk.text in "([{":
+                depth += 1
+            elif tk.kind == PUNCT and tk.text in ")]}":
+                depth -= 1
+            elif depth == 0 and tk.is_kw("CASE"):
+                cases += 1
+            elif depth == 0 and tk.is_kw("END"):
+                cases -= 1
+            elif depth == 0 and cases == 1 and tk.is_kw("ELSE"):
+                return _span_is_array(sig, k + 1, len(sig) - 1, resolver)
+        return False
     if sig[0].kind == IDENT and sig[0].upper == "FROM_JSON":
         # array-shaped only when its schema literal says so (the
         # JSON-parsing composite-cast rewrite emits these)
@@ -6326,9 +6854,9 @@ def _list_aggregate_sql(l: str, fname: str, extra: Optional[str]) -> str:
     if fname == "max":
         return f"array_max({l})"
     if fname == "sum":
-        return _SUM_FOLD.replace("{a}", l)
+        return _fill(_SUM_FOLD, [l])
     if fname in ("avg", "mean"):
-        return f"({_SUM_FOLD.replace('{a}', l)} / size({nn}))"
+        return f"({_fill(_SUM_FOLD, [l])} / size({nn}))"
     if fname == "count":
         return f"size({nn})"
     if fname in ("first", "any_value"):
@@ -6349,9 +6877,11 @@ def _list_aggregate_sql(l: str, fname: str, extra: Optional[str]) -> str:
     if fname in ("countif", "count_if"):
         return f"size(filter({l}, x -> x))"
     if re.fullmatch(r"[a-z_][a-z0-9_]*", fname):
-        # any other name routes through the list_* battery (list_distinct,
-        # list_sort, ...) — the caller re-scans the spliced call
-        return f"list_{fname}({l})"
+        # any other name is the list_<fname> call (list_distinct,
+        # list_sort, ...) by its own table entry
+        name = "LIST_" + fname.upper()
+        expanded = _expand_call(name, [l]) if name in _FN_REWRITES else None
+        return f"list_{fname}({l})" if expanded is None else expanded
     raise NotImplementedError(
         f"list_aggregate: unsupported aggregate {fname!r}"
     )
@@ -7982,6 +8512,12 @@ def _is_distinct_window_agg(out: list[Token], n: int) -> bool:
 
 
 def pass_function_renames(tokens: list[Token], resolver: Optional[Resolver] = None) -> list[Token]:
+    """DuckDB function calls -> Spark SQL. Every name with an entry in
+    _FN_REWRITES goes through it; four shapes stay token-level because
+    they read what a template over argument texts cannot see: alias()
+    (its argument as written), DISTINCT window aggregates (the OVER
+    clause after the call), array_agg/list (a trailing FILTER or OVER)
+    and percentile_disc (its WITHIN GROUP)."""
     resolver = resolver or NullResolver()
     _ACTIVE_RESOLVER[0] = resolver  # for schema-aware macro templates
     # UNION with the caller's set and restore on exit: macro dispatch
@@ -8010,192 +8546,7 @@ def _pass_function_renames_impl(
             is_call = n < len(out) and out[n].kind == PUNCT and out[n].text == "("
             if is_call:
                 up = t.upper
-                if up in ("LEN", "LENGTH", "ARRAY_LENGTH", "CARDINALITY"):
-                    # DuckDB len/length are polymorphic; Spark needs size()
-                    # for arrays/maps and length() for strings
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if up == "ARRAY_LENGTH" and len(spans) == 2:
-                        # 2-arg form carries a dimension; only dim 1 is
-                        # meaningful for Spark arrays — drop the argument
-                        dim = render(
-                            _trim(out[spans[1][0] : spans[1][1]])
-                        ).strip()
-                        if dim == "1":
-                            out[spans[0][1] : c] = []
-                            c = match_forward(out, n, "(", ")")
-                    if _span_is_array(out, n + 1, c, resolver):
-                        out[i] = _ident("size")
-                    elif up in ("LEN",):
-                        out[i] = _ident("length")
-                elif up in ("STRING_SPLIT", "STR_SPLIT", "STRING_TO_ARRAY"):
-                    # split(s, sep) in Spark takes a regex -> quote the literal
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        lo, hi = spans[1]
-                        sig = [tk for tk in out[lo:hi] if tk.kind not in (WS, COMMENT)]
-                        if len(sig) == 1 and sig[0].kind == STRING:
-                            sep = _str_value(sig[0])
-                            # pass_escape_backslashes already ran: undo
-                            # its doubling to recover the true separator,
-                            # then re-double the regex escape so Spark's
-                            # literal unescape leaves the escape behind
-                            true_sep = sep.replace("\\\\", "\\")
-                            out[lo:hi] = [_sql_str(
-                                re.escape(true_sep).replace("\\", "\\\\")
-                            )]
-                        else:
-                            # non-literal separator: quote at runtime
-                            # with Java regex \Q...\E (any separator text
-                            # becomes literal, incl. regex metachars)
-                            out[lo:hi] = (
-                                tokenize("concat('\\\\Q', ")
-                                + _trim(out[lo:hi])
-                                + tokenize(", '\\\\E')")
-                            )
-                    out[i] = _ident("split")
-                elif up == "REGEXP_MATCHES":
-                    # regexp_matches(s, re[, flags]) -> (s RLIKE re);
-                    # literal flags fold into an inline (?ism) prefix on
-                    # a literal pattern (same scheme as 4-arg
-                    # regexp_extract)
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 3:
-                        fsig = [
-                            tk
-                            for tk in out[spans[2][0] : spans[2][1]]
-                            if tk.kind not in (WS, COMMENT)
-                        ]
-                        psig = [
-                            tk
-                            for tk in out[spans[1][0] : spans[1][1]]
-                            if tk.kind not in (WS, COMMENT)
-                        ]
-                        if (
-                            len(fsig) == 1
-                            and fsig[0].kind == STRING
-                            and len(psig) == 1
-                            and psig[0].kind == STRING
-                        ):
-                            flags = "".join(
-                                ch
-                                for ch in _str_value(fsig[0])
-                                if ch in "ism"
-                            )
-                            pat = _str_value(psig[0])
-                            if flags:
-                                pat = f"(?{flags})" + pat
-                            out[spans[1][0] : spans[2][1]] = [
-                                _sql_str(pat)
-                            ]
-                            c = match_forward(out, n, "(", ")")
-                            spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        (alo, ahi), (blo, bhi) = spans
-                        new = (
-                            [_punct("(")]
-                            + _trim(out[alo:ahi])
-                            + [_ws(), _ident("RLIKE"), _ws()]
-                            + _trim(out[blo:bhi])
-                            + [_punct(")")]
-                        )
-                        out = out[:i] + new + out[c + 1 :]
-                        continue
-                elif up in ("DATE_TRUNC", "DATETRUNC"):
-                    # DuckDB returns DATE for day-or-coarser parts (any
-                    # input type); Spark's date_trunc always returns
-                    # TIMESTAMP. Wrap in CAST(.. AS DATE) when the part
-                    # literal is coarse.
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    out[i] = _ident("date_trunc")
-                    if len(spans) == 2:
-                        psig = _trim(out[spans[0][0] : spans[0][1]])
-                        part0 = (
-                            _str_value(psig[0]).strip().lower()
-                            if len(psig) == 1 and psig[0].kind == STRING
-                            else None
-                        )
-                        if part0 in _DATE_TRUNC_MACROS:
-                            # fields Spark doesn't know (returns NULL):
-                            # expand to explicit floor-of-year arithmetic
-                            x_txt = render(
-                                pass_function_renames(
-                                    _trim(out[spans[1][0] : spans[1][1]]),
-                                    resolver,
-                                )
-                            )
-                            new_toks = tokenize(
-                                _DATE_TRUNC_MACROS[part0].replace(
-                                    "{x}", x_txt
-                                )
-                            )
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                        if part0 in (
-                            "day", "week", "month", "quarter", "year",
-                        ):
-                            pre = tokenize("CAST(")
-                            post = tokenize(" AS DATE)")
-                            out = (
-                                out[:i] + pre + out[i : c + 1] + post
-                                + out[c + 1 :]
-                            )
-                            # jump past the whole wrapped span so the
-                            # renamed inner call is not re-matched
-                            i = c + len(pre) + len(post) + 1
-                            continue
-                elif up == "STRFTIME":
-                    # strftime(ts, '%Y-%m') -> date_format(ts, 'yyyy-MM');
-                    # specs Java patterns can't express (%U/%W/%w week and
-                    # weekday numbers) expand to a concat of computed parts
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        blo, bhi = spans[1]
-                        sig2 = [tk for tk in out[blo:bhi] if tk.kind not in (WS, COMMENT)]
-                        if len(sig2) == 1 and sig2[0].kind == STRING:
-                            raw = _str_value(sig2[0])
-                            if re.search(r"%[UWw]", raw):
-                                x_txt = render(pass_function_renames(
-                                    _trim(out[spans[0][0] : spans[0][1]]),
-                                    resolver,
-                                ))
-                                expanded = _strftime_concat(x_txt, raw)
-                                new_toks = tokenize(expanded)
-                                out = out[:i] + new_toks + out[c + 1 :]
-                                i += len(new_toks)
-                                continue
-                            out[blo:bhi] = [_sql_str(_convert_strftime(raw))]
-                    out[i] = _ident("date_format")
-                elif up in ("STRPTIME", "TRY_STRPTIME"):
-                    # strptime(s, '%Y-%m-%d') -> to_timestamp with the
-                    # lenient PARSING directive table (single-letter Java
-                    # fields accept unpadded numbers; %a/%A stripped).
-                    # try_strptime is the same call: non-ANSI to_timestamp
-                    # already returns NULL on parse failure
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        sig2 = [tk for tk in out[spans[1][0] : spans[1][1]]
-                                if tk.kind not in (WS, COMMENT)]
-                        if len(sig2) == 1 and sig2[0].kind == STRING:
-                            s_txt = render(pass_function_renames(
-                                _trim(out[spans[0][0] : spans[0][1]]),
-                                resolver,
-                            ))
-                            expanded = _strptime_call(
-                                s_txt, _str_value(sig2[0])
-                            )
-                            new_toks = tokenize(expanded)
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                    out[i] = _ident("to_timestamp")
-                elif up == "ALIAS":
+                if up == "ALIAS":
                     # DuckDB alias(expr) = the expression's default output
                     # name: last segment of an identifier chain, else the
                     # expression's own rendered text ('42', "'abc'")
@@ -8251,566 +8602,6 @@ def _pass_function_renames_impl(
                         i += 1
                         continue
                     out[i] = _ident("alias")  # unsupported shape: loud
-                elif up in ("DATE_PART", "DATEPART"):
-                    # numbering-convention fields expand to explicit Spark
-                    # expressions; everything else passes through to Spark's
-                    # own date_part
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        sig1 = [tk for tk in out[spans[0][0] : spans[0][1]]
-                                if tk.kind not in (WS, COMMENT)]
-                        is_list_form = (
-                            len(sig1) >= 3
-                            and sig1[0].kind == PUNCT
-                            and sig1[0].text == "["
-                            and sig1[-1].kind == PUNCT
-                            and sig1[-1].text == "]"
-                            and all(
-                                tk.kind == STRING
-                                or (tk.kind == PUNCT and tk.text in "[],")
-                                for tk in sig1
-                            )
-                        ) or (
-                            # pass_array_literals has already run: the
-                            # list arrives as array('year', 'month')
-                            len(sig1) >= 4
-                            and sig1[0].kind == IDENT
-                            and sig1[0].upper == "ARRAY"
-                            and all(
-                                tk.kind == STRING
-                                or (tk.kind == PUNCT and tk.text in "(),")
-                                for tk in sig1[1:]
-                            )
-                        )
-                        if is_list_form:
-                            # date_part(['year','month'], x) -> STRUCT of
-                            # the requested parts, like DuckDB's list form
-                            parts = [
-                                _str_value(tk) for tk in sig1
-                                if tk.kind == STRING
-                            ]
-                            x_txt = render(
-                                pass_function_renames(
-                                    _trim(out[spans[1][0] : spans[1][1]]),
-                                    resolver,
-                                )
-                            )
-                            fields = []
-                            for p in parts:
-                                m2 = _DATE_PART_MACROS.get(p.lower())
-                                e2 = (
-                                    m2.replace("{x}", x_txt)
-                                    if m2 is not None
-                                    else f"date_part('{p}', {x_txt})"
-                                )
-                                fields.append(f"'{p}', {e2}")
-                            new_toks = tokenize(
-                                "named_struct(" + ", ".join(fields) + ")"
-                            )
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                        if len(sig1) == 1 and sig1[0].kind == STRING:
-                            part = _str_value(sig1[0]).lower()
-                            macro = _DATE_PART_MACROS.get(part)
-                            if macro is not None:
-                                # pre-rewrite the arg, splice FINAL text and
-                                # advance: the expansions mention weekday/
-                                # dayofweek, which are themselves dialect-
-                                # mapped names (re-scan would double-shift)
-                                x_txt = render(
-                                    pass_function_renames(
-                                        _trim(out[spans[1][0] : spans[1][1]]),
-                                        resolver,
-                                    )
-                                )
-                                new_toks = tokenize(macro.replace("{x}", x_txt))
-                                out = out[:i] + new_toks + out[c + 1 :]
-                                i += len(new_toks)
-                                continue
-                elif up == "EXTRACT":
-                    # extract(dow FROM x) — same numbering conventions as
-                    # date_part; non-divergent fields pass through native
-                    c = match_forward(out, n, "(", ")")
-                    sig = [k for k in range(n + 1, c)
-                           if out[k].kind not in (WS, COMMENT)]
-                    if (
-                        len(sig) >= 3
-                        and out[sig[0]].kind in (IDENT, STRING)
-                        and out[sig[1]].is_kw("FROM")
-                    ):
-                        part = (
-                            _str_value(out[sig[0]])
-                            if out[sig[0]].kind == STRING
-                            else out[sig[0]].text
-                        ).lower()
-                        macro = _DATE_PART_MACROS.get(part)
-                        if macro is not None:
-                            x_txt = render(
-                                pass_function_renames(
-                                    _trim(out[sig[1] + 1 : c]), resolver
-                                )
-                            )
-                            new_toks = tokenize(macro.replace("{x}", x_txt))
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                elif up in ("STRING_AGG", "LISTAGG", "GROUP_CONCAT"):
-                    # DuckDB puts ORDER BY inside the call; Spark's listagg
-                    # takes it as WITHIN GROUP (ORDER BY ...). A missing
-                    # separator defaults to ',' (DuckDB), not '' (Spark).
-                    c = match_forward(out, n, "(", ")")
-                    depth = 0
-                    p = None
-                    for k in range(n + 1, c):
-                        tk = out[k]
-                        if tk.kind == PUNCT and tk.text in "([{":
-                            depth += 1
-                        elif tk.kind == PUNCT and tk.text in ")]}":
-                            depth -= 1
-                        elif depth == 0 and tk.kind == IDENT and tk.upper == "ORDER":
-                            p = k
-                            break
-                    if p is not None:
-                        inner = _trim(out[n + 1 : p])
-                        if len(split_args(out, n + 1, p)) == 1:
-                            inner = inner + tokenize(", ','")
-                        order = _trim(out[p:c])
-                        new = (
-                            [_ident("listagg"), _punct("(")]
-                            + inner
-                            + [_punct(")"), _ws(), _ident("WITHIN"), _ws(),
-                               _ident("GROUP"), _ws(), _punct("(")]
-                            + order
-                            + [_punct(")")]
-                        )
-                        out = out[:i] + new + out[c + 1 :]
-                        i += len(new)
-                        continue
-                    if len(split_args(out, n + 1, c)) == 1:
-                        out = out[:c] + tokenize(", ','") + out[c:]
-                    out[i] = _ident("listagg")
-                elif up in ("GENERATE_SERIES", "RANGE"):
-                    # select-position list forms; FROM-position occurrences
-                    # were already expanded by session._expand_table_functions.
-                    # range is end-EXCLUSIVE, generate_series INCLUSIVE, and
-                    # both are empty when bounds face away from the step.
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if 1 <= len(spans) <= 3:
-                        args = [
-                            render(
-                                pass_function_renames(
-                                    _trim(out[lo:hi]), resolver
-                                )
-                            )
-                            for lo, hi in spans
-                        ]
-                        expanded = _series_sequence_sql(
-                            args, inclusive=(up == "GENERATE_SERIES")
-                        )
-                        new_toks = tokenize(expanded)
-                        out = out[:i] + new_toks + out[c + 1 :]
-                        i += len(new_toks)
-                        continue
-                elif up == "TIME_BUCKET":
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) in (2, 3):
-                        iv = _parse_interval_literal(
-                            _trim(out[spans[0][0] : spans[0][1]])
-                        )
-                        off = (
-                            _parse_interval_literal(
-                                _trim(out[spans[2][0] : spans[2][1]])
-                            )
-                            if len(spans) == 3
-                            else (0, 0)
-                        )
-                        if iv is not None and off is not None:
-                            arg_sig = _trim(out[spans[1][0] : spans[1][1]])
-                            ts_txt = render(
-                                pass_function_renames(arg_sig, resolver)
-                            )
-                            # 3-arg offset form: bucket(ts - off) + off
-                            off_iv = None
-                            if off != (0, 0):
-                                off_iv = (
-                                    f"make_ym_interval(0, {off[0]})"
-                                    if off[0]
-                                    else f"make_dt_interval(0, 0, 0, {off[1]})"
-                                )
-                                ts_txt = (
-                                    f"(CAST({ts_txt} AS TIMESTAMP) - {off_iv})"
-                                )
-                            expanded = _time_bucket_sql(iv[0], iv[1], ts_txt)
-                            if off_iv is not None:
-                                expanded = f"({expanded} + {off_iv})"
-                            # DuckDB returns DATE (any bucket width) when
-                            # the input is a DATE — detectable here only
-                            # for DATE literals / to_date(...) calls
-                            sig0 = [tk for tk in arg_sig
-                                    if tk.kind not in (WS, COMMENT)]
-                            if sig0 and sig0[0].kind == IDENT and (
-                                sig0[0].upper in ("DATE", "TO_DATE")
-                            ):
-                                expanded = f"CAST({expanded} AS DATE)"
-                            new_toks = tokenize(expanded)
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                elif up == "LOG":
-                    # DuckDB log(x) is base-10; Spark log(x) is ln.
-                    # 2-arg log(base, x) agrees in both engines.
-                    c = match_forward(out, n, "(", ")")
-                    if len(split_args(out, n + 1, c)) == 1:
-                        out[i] = _ident("log10")
-                elif up == "REGEXP_EXTRACT":
-                    # 4-arg form carries an options string: fold literal
-                    # flags into an inline (?i)(?s)(?m) prefix on a literal
-                    # pattern (Spark's regexp_extract has no flags arg)
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        # DuckDB's 2-arg default group is 0 (the whole
-                        # match); Spark defaults to 1 and errors on
-                        # group-less patterns — make group 0 explicit
-                        out[c:c] = tokenize(", 0")
-                        c = match_forward(out, n, "(", ")")
-                        spans = split_args(out, n + 1, c)
-                    if len(spans) == 3:
-                        gsig_a = _trim(out[spans[2][0] : spans[2][1]])
-                        if (
-                            gsig_a
-                            and gsig_a[0].kind == IDENT
-                            and gsig_a[0].upper == "ARRAY"
-                        ):
-                            # group-NAME list (round-12 probe find):
-                            # regexp_extract(s, re, ['y','m']) returns a
-                            # struct of the named capture groups, '' on
-                            # no match (Spark's default too)
-                            oa = next_sig(gsig_a, 0)
-                            ca = match_forward(gsig_a, oa, "(", ")")
-                            nspans = split_args(gsig_a, oa + 1, ca)
-                            names = []
-                            for lo, hi in nspans:
-                                ntk = _trim(gsig_a[lo:hi])
-                                if len(ntk) == 1 and ntk[0].kind == STRING:
-                                    names.append(ntk[0].text)
-                                else:
-                                    names = []
-                                    break
-                            if names:
-                                s_txt = render(pass_function_renames(
-                                    _trim(out[spans[0][0] : spans[0][1]]),
-                                    resolver,
-                                ))
-                                p_txt = render(pass_function_renames(
-                                    _trim(out[spans[1][0] : spans[1][1]]),
-                                    resolver,
-                                ))
-                                fields = ", ".join(
-                                    f"{nm}, regexp_extract({s_txt},"
-                                    f" {p_txt}, {gi + 1})"
-                                    for gi, nm in enumerate(names)
-                                )
-                                new_toks = tokenize(
-                                    f"named_struct({fields})"
-                                )
-                                out = out[:i] + new_toks + out[c + 1 :]
-                                i += len(new_toks)
-                                continue
-                    if len(spans) == 3:
-                        # DuckDB returns '' for a group index beyond the
-                        # pattern's capture-group count; Spark errors.
-                        # Statically checkable for literal pattern + idx.
-                        psig = _trim(out[spans[1][0] : spans[1][1]])
-                        gsig = _trim(out[spans[2][0] : spans[2][1]])
-                        if (
-                            len(psig) == 1
-                            and psig[0].kind == STRING
-                            and len(gsig) == 1
-                            and gsig[0].kind == NUMBER
-                            and gsig[0].text.isdigit()
-                        ):
-                            pat = _str_value(psig[0])
-                            # exact capture-group count via re.compile
-                            # (the findall heuristic miscounted '(' in
-                            # character classes and after escaped
-                            # backslashes — round-5 advice); on a
-                            # non-Python-compilable pattern leave the
-                            # call untouched
-                            try:
-                                groups: Optional[int] = re.compile(
-                                    pat
-                                ).groups
-                            except re.error:
-                                groups = None
-                            if groups is not None and int(
-                                gsig[0].text
-                            ) > groups:
-                                out = out[:i] + [_sql_str("")] + out[c + 1 :]
-                                i += 1
-                                continue
-                    if len(spans) == 4:
-                        fsig = _trim(out[spans[3][0] : spans[3][1]])
-                        psig = _trim(out[spans[1][0] : spans[1][1]])
-                        if (
-                            len(fsig) == 1
-                            and fsig[0].kind == STRING
-                            and len(psig) == 1
-                            and psig[0].kind == STRING
-                        ):
-                            flags = "".join(
-                                ch for ch in _str_value(fsig[0])
-                                if ch in "ism"
-                            )
-                            prefix = "".join(f"(?{ch})" for ch in flags)
-                            pat = prefix + psig[0].text[1:-1]
-                            a_txt = render(pass_function_renames(
-                                _trim(out[spans[0][0] : spans[0][1]]),
-                                resolver,
-                            ))
-                            g_txt = render(
-                                _trim(out[spans[2][0] : spans[2][1]])
-                            )
-                            new_toks = tokenize(
-                                f"regexp_extract({a_txt}, '{pat}', {g_txt})"
-                            )
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                elif up == "REGEXP_REPLACE":
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) not in (3, 4):
-                        i += 1
-                        continue
-                    flags = None
-                    if len(spans) == 4:
-                        fsig = _trim(out[spans[3][0] : spans[3][1]])
-                        if len(fsig) == 1 and fsig[0].kind == STRING:
-                            flags = _str_value(fsig[0])
-                        else:
-                            i += 1  # non-literal options: pass through
-                            continue
-                    # recurse into the args first: the expansion below is
-                    # final Spark text and is NOT re-scanned (the inner
-                    # regexp_replace must keep replace-all semantics)
-                    a_txt = render(
-                        pass_function_renames(
-                            _trim(out[spans[0][0] : spans[0][1]]), resolver
-                        )
-                    )
-                    b_span = _trim(out[spans[1][0] : spans[1][1]])
-                    b_txt = render(b_span)
-                    if flags and "i" in flags:
-                        if len(b_span) == 1 and b_span[0].kind == STRING:
-                            b_txt = "'(?i)" + b_span[0].text[1:-1] + "'"
-                        # non-literal pattern: can't fold the flag; the
-                        # global path below still applies it as-is
-                    c_span = _trim(out[spans[2][0] : spans[2][1]])
-                    if len(c_span) == 1 and c_span[0].kind == STRING:
-                        c_txt = _convert_regexp_replacement(c_span[0]).text
-                    else:
-                        c_txt = render(
-                            pass_function_renames(list(c_span), resolver)
-                        )
-                    if flags and "g" in flags:
-                        expanded = f"regexp_replace({a_txt}, {b_txt}, {c_txt})"
-                    else:
-                        expanded = (
-                            _REGEXP_REPLACE_FIRST
-                            .replace("{a}", a_txt)
-                            .replace("{b}", b_txt)
-                            .replace("{c}", c_txt)
-                        )
-                    new_toks = tokenize(expanded)
-                    out = out[:i] + new_toks + out[c + 1 :]
-                    i += len(new_toks)
-                    continue
-                elif up == "STRUCT_PACK":
-                    # struct_pack(name := expr, ...) -> named_struct
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    parts = []
-                    ok = bool(spans)
-                    for lo, hi in spans:
-                        sig = [
-                            k for k in range(lo, hi)
-                            if out[k].kind not in (WS, COMMENT)
-                        ]
-                        if (
-                            len(sig) >= 4
-                            and out[sig[0]].kind in (IDENT, QIDENT)
-                            and out[sig[1]].kind == PUNCT
-                            and out[sig[1]].text == ":"
-                            and out[sig[2]].kind == OP
-                            and out[sig[2]].text == "="
-                        ):
-                            nm = out[sig[0]].text.strip('"').replace("'", "''")
-                            val = render(_trim(out[sig[2] + 1 : hi]))
-                            parts.append(f"'{nm}', {val}")
-                        else:
-                            ok = False
-                            break
-                    if ok:
-                        expanded = "named_struct(" + ", ".join(parts) + ")"
-                        out = out[:i] + tokenize(expanded) + out[c + 1 :]
-                        continue
-                elif up == "CONCAT":
-                    # DuckDB concat() is STRING concatenation that SKIPS
-                    # NULL arguments and stringifies non-strings — even
-                    # lists render as text ('[1, 2]'); list concatenation
-                    # is spelled list_concat/|| instead. concat_ws('')
-                    # over string-cast args matches exactly (Spark casts
-                    # arrays to the same '[1, 2]' rendering).
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if spans:
-                        args = ", ".join(
-                            f"CAST({render(_trim(out[lo:hi]))} AS STRING)"
-                            for lo, hi in spans
-                        )
-                        expanded = f"concat_ws('', {args})"
-                        out = out[:i] + tokenize(expanded) + out[c + 1 :]
-                        continue
-                elif up == "UNION_VALUE":
-                    # union_value(tag := expr) -> the union's struct
-                    # encoding: named_struct('__utag','tag','tag',expr)
-                    # (types.py UNION(...) parse; inactive members of a
-                    # TYPED union column are NULL-filled at INSERT by
-                    # session._align_insert's struct widening)
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 1:
-                        lo, hi = spans[0]
-                        sig = [
-                            k for k in range(lo, hi)
-                            if out[k].kind not in (WS, COMMENT)
-                        ]
-                        if (
-                            len(sig) >= 4
-                            and out[sig[0]].kind in (IDENT, QIDENT)
-                            and out[sig[1]].kind == PUNCT
-                            and out[sig[1]].text == ":"
-                            and out[sig[2]].kind == OP
-                            and out[sig[2]].text == "="
-                        ):
-                            nm = out[sig[0]].text.strip('"').replace("'", "''")
-                            val = render(_trim(out[sig[2] + 1 : hi]))
-                            expanded = (
-                                f"named_struct('__utag', '{nm}', '{nm}', {val})"
-                            )
-                            out = out[:i] + tokenize(expanded) + out[c + 1 :]
-                            continue
-                elif up == "UNION_TAG":
-                    # union_tag(u) -> u.__utag
-                    c = match_forward(out, n, "(", ")")
-                    a_txt = render(_trim(out[n + 1 : c]))
-                    out = out[:i] + tokenize(f"(({a_txt}).__utag)") + out[c + 1 :]
-                    continue
-                elif up == "UNION_EXTRACT":
-                    # union_extract(u, 'tag') -> NULL unless 'tag' is active
-                    # (matches DuckDB: extracting an inactive member gives
-                    # NULL; inactive members are stored NULL, but the guard
-                    # also covers values built by ad-hoc union_value)
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        btoks = _trim(out[spans[1][0] : spans[1][1]])
-                        if len(btoks) == 1 and btoks[0].kind == STRING:
-                            a_txt = render(_trim(out[spans[0][0] : spans[0][1]]))
-                            tag = btoks[0].text[1:-1].replace("''", "'")
-                            member = tag.replace("`", "")
-                            expanded = (
-                                f"(CASE WHEN ({a_txt}).__utag = '{tag}' "
-                                f"THEN ({a_txt}).`{member}` END)"
-                            )
-                            out = out[:i] + tokenize(expanded) + out[c + 1 :]
-                            continue
-                elif up == "ELEMENT_AT":
-                    # DuckDB element_at is a MAP accessor returning the
-                    # list of values for the key; only a string-literal key
-                    # marks that form (numeric second args are the array
-                    # element_at our own index rewrite emits — leave those)
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        btoks = _trim(out[spans[1][0] : spans[1][1]])
-                        if len(btoks) == 1 and btoks[0].kind == STRING:
-                            a_txt = render(_trim(out[spans[0][0] : spans[0][1]]))
-                            b_txt = render(btoks)
-                            # native subscript, not element_at — see
-                            # MAP_EXTRACT note (self-retrigger)
-                            expanded = (
-                                f"(CASE WHEN map_contains_key({a_txt}, {b_txt}) "
-                                f"THEN array(({a_txt})[{b_txt}]) "
-                                f"ELSE array() END)"
-                            )
-                            out = out[:i] + tokenize(expanded) + out[c + 1 :]
-                            continue
-                elif up == "STRUCT_EXTRACT":
-                    # struct_extract(e, 'f') -> (e).`f`; a NUMERIC second
-                    # argument indexes an anonymous struct (row(...)):
-                    # field N is Spark's colN
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        a_txt = render(pass_function_renames(
-                            _trim(out[spans[0][0] : spans[0][1]]), resolver))
-                        btoks = _trim(out[spans[1][0] : spans[1][1]])
-                        expanded = None
-                        if len(btoks) == 1 and btoks[0].kind == STRING:
-                            fld = btoks[0].text[1:-1].replace("''", "'")
-                            expanded = f"(({a_txt}).`{fld}`)"
-                        elif len(btoks) == 1 and btoks[0].kind == NUMBER:
-                            expanded = f"(({a_txt}).col{int(btoks[0].text)})"
-                        if expanded is not None:
-                            new_toks = tokenize(expanded)
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                elif up == "JSON_ARRAY":
-                    # json_array(a, b, ...) -> values of a struct rendered
-                    # to JSON, order-preserving, nulls kept
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    args = [
-                        render(pass_function_renames(_trim(out[lo:hi]),
-                                                     resolver))
-                        for lo, hi in spans
-                        if _trim(out[lo:hi])
-                    ]
-                    if not args:
-                        expanded = "'[]'"
-                    else:
-                        struct_args = ", ".join(
-                            f"({a}) AS f{k}" for k, a in enumerate(args)
-                        )
-                        expanded = (
-                            "__ddb_json_obj_values(to_json(struct("
-                            + struct_args
-                            + "), map('ignoreNullFields', 'false')))"
-                        )
-                    new_toks = tokenize(expanded)
-                    out = out[:i] + new_toks + out[c + 1 :]
-                    i += len(new_toks)
-                    continue
-                elif up == "JSON_OBJECT":
-                    # json_object('k', v, ...) -> to_json(named_struct(...))
-                    c = match_forward(out, n, "(", ")")
-                    inner = render(pass_function_renames(
-                        _trim(out[n + 1 : c]), resolver))
-                    expanded = (
-                        f"to_json(named_struct({inner}), "
-                        "map('ignoreNullFields', 'false'))"
-                    )
-                    new_toks = tokenize(expanded)
-                    out = out[:i] + new_toks + out[c + 1 :]
-                    i += len(new_toks)
-                    continue
                 elif up in (
                     "COUNT", "SUM", "AVG", "MIN", "MAX"
                 ) and _is_distinct_window_agg(out, n):
@@ -8819,12 +8610,7 @@ def _pass_function_renames_impl(
                     # (collect_list drops NULLs, which IS the DISTINCT
                     # aggregate NULL rule). min/max just drop the
                     # redundant DISTINCT; other DISTINCT window
-                    # aggregates keep Spark's loud error. The guard MUST
-                    # be part of the elif condition itself: avg/min/max
-                    # calls that are NOT distinct-window aggregates fall
-                    # through to their _FN_MACROS_N entries (avg()'s
-                    # always-DOUBLE input cast, 2-arg min/max top-n
-                    # lists) — claiming them here shadowed those.
+                    # aggregates keep Spark's loud error.
                     c = match_forward(out, n, "(", ")")
                     isig = [
                         k for k in range(n + 1, c)
@@ -8943,17 +8729,7 @@ def _pass_function_renames_impl(
                         ):
                             filt += f" OVER {out[wo].text}"
                             c_end = wo
-                    depth = 0
-                    p = None
-                    for k in range(n + 1, c):
-                        tk = out[k]
-                        if tk.kind == PUNCT and tk.text in "([{":
-                            depth += 1
-                        elif tk.kind == PUNCT and tk.text in ")]}":
-                            depth -= 1
-                        elif depth == 0 and tk.kind == IDENT and tk.upper == "ORDER":
-                            p = k
-                            break
+                    p = _order_at(out, n + 1, c)
 
                     def _null_keeping_collect(arg_toks) -> list[Token]:
                         # DuckDB array_agg/list KEEP NULL elements;
@@ -9050,69 +8826,6 @@ def _pass_function_renames_impl(
                             out = out[:i] + new_toks + out[c_end + 1 :]
                             i += len(new_toks)
                             continue
-                elif up in ("FIRST", "LAST", "ANY_VALUE"):
-                    # DuckDB first/last with in-call ORDER BY -> min_by /
-                    # max_by (single reduction, no sort — the scale-correct
-                    # plan). Orderless first/last pass through to Spark's.
-                    # any_value(v ORDER BY k) picks the first NON-NULL v in
-                    # key order: min_by over a key nulled out on null v.
-                    c = match_forward(out, n, "(", ")")
-                    depth = 0
-                    p = None
-                    for k in range(n + 1, c):
-                        tk = out[k]
-                        if tk.kind == PUNCT and tk.text in "([{":
-                            depth += 1
-                        elif tk.kind == PUNCT and tk.text in ")]}":
-                            depth -= 1
-                        elif depth == 0 and tk.kind == IDENT and tk.upper == "ORDER":
-                            p = k
-                            break
-                    if p is not None:
-                        by = next_sig(out, p)
-                        if by < c and out[by].is_kw("BY"):
-                            keys, dirs = [], []
-                            bad = False
-                            for klo, khi in split_args(out, by + 1, c):
-                                ktoks = _trim(out[klo:khi])
-                                d = "ASC"
-                                if ktoks and ktoks[-1].kind == IDENT and \
-                                        ktoks[-1].upper in ("ASC", "DESC"):
-                                    d = ktoks[-1].upper
-                                    ktoks = _trim(ktoks[:-1])
-                                if not ktoks:
-                                    bad = True
-                                    break
-                                keys.append(render(
-                                    pass_function_renames(ktoks, resolver)))
-                                dirs.append(d)
-                            if not bad and len(set(dirs)) == 1:
-                                v_txt = render(pass_function_renames(
-                                    _trim(out[n + 1 : p]), resolver))
-                                k_txt = (keys[0] if len(keys) == 1
-                                         else "struct(" + ", ".join(keys) + ")")
-                                takes_min = (up != "LAST") == (dirs[0] == "ASC")
-                                fn = "min_by" if takes_min else "max_by"
-                                if up == "ANY_VALUE":
-                                    k_txt = (f"(CASE WHEN ({v_txt}) IS NOT "
-                                             f"NULL THEN {k_txt} END)")
-                                expanded = f"{fn}({v_txt}, {k_txt})"
-                                if up == "LAST" and len(keys) == 1:
-                                    # NULL keys sort LAST under the default
-                                    # null order in BOTH directions, so
-                                    # LAST must pick from a null-key row
-                                    # when one exists; min_by/max_by skip
-                                    # null keys
-                                    expanded = (
-                                        f"(CASE WHEN count(*) > count({k_txt}) "
-                                        f"THEN any_value(CASE WHEN ({k_txt}) "
-                                        f"IS NULL THEN ({v_txt}) END) "
-                                        f"ELSE {expanded} END)"
-                                    )
-                                new_toks = tokenize(expanded)
-                                out = out[:i] + new_toks + out[c + 1 :]
-                                i += len(new_toks)
-                                continue
                 elif up == "PERCENTILE_DISC":
                     # percentile_disc(q) WITHIN GROUP (ORDER BY x) —
                     # Spark's native version returns DOUBLE; the
@@ -9157,368 +8870,21 @@ def _pass_function_renames_impl(
                             out = out[:i] + new_toks + out[c2 + 1 :]
                             i += len(new_toks)
                             continue
-                elif up == "FORMAT":
-                    # DuckDB fmt-style format('{} x {}', ...) ->
-                    # format_string('%s x %s', ...); positional {N} ->
-                    # %N+1$s; format specs {:.2f} / {0:d} -> printf
-                    # directives with numeric casts on the matching args
+                elif up in _FN_REWRITES:
                     c = match_forward(out, n, "(", ")")
                     spans = split_args(out, n + 1, c)
-                    fsig = _trim(out[spans[0][0] : spans[0][1]]) if spans else []
-                    if (
-                        len(spans) == 1
-                        and len(fsig) == 1
-                        and fsig[0].kind == STRING
-                        and "{" not in _str_value(fsig[0])
-                    ):
-                        # format('abc') with no placeholders = the string
-                        out = out[:i] + [fsig[0]] + out[c + 1 :]
-                        i += 1
-                        continue
-                    if (
-                        len(spans) >= 2
-                        and len(fsig) == 1
-                        and fsig[0].kind == STRING
-                    ):
-                        args = [
-                            render(pass_function_renames(_trim(out[lo:hi]), resolver))
-                            for lo, hi in spans[1:]
-                        ]
-                        converted = _convert_fmt_braces(
-                            _str_value(fsig[0]), args
-                        )
-                        if converted is not None:
-                            fmt, cast_args = converted
-                            expanded = (
-                                "format_string('" + fmt.replace("'", "''")
-                                + "', " + ", ".join(cast_args) + ")"
-                            )
-                            new_toks = tokenize(expanded)
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                elif up == "PRINTF":
-                    # %-style directly; cast args per numeric directive
-                    # (Spark's format_string hands %f a Decimal unconverted
-                    # and throws — DuckDB casts)
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    fsig = _trim(out[spans[0][0] : spans[0][1]]) if spans else []
-                    if (
-                        len(spans) >= 2
-                        and len(fsig) == 1
-                        and fsig[0].kind == STRING
-                    ):
-                        args = [
-                            render(pass_function_renames(_trim(out[lo:hi]), resolver))
-                            for lo, hi in spans[1:]
-                        ]
-                        fmt = _str_value(fsig[0])
-                        cast_args = _cast_printf_args(fmt, args)
-                        expanded = (
-                            "format_string('" + fmt.replace("'", "''")
-                            + "', " + ", ".join(cast_args) + ")"
-                        )
-                        new_toks = tokenize(expanded)
-                        out = out[:i] + new_toks + out[c + 1 :]
-                        i += len(new_toks)
-                        continue
-                    out[i] = _ident("format_string")
-                elif up in _FN_MACROS_0:
-                    c = match_forward(out, n, "(", ")")
-                    a = next_sig(out, n)
-                    if a == c or (
-                        # count_star(*) — DuckDB also accepts the * arg
-                        up == "COUNT_STAR"
-                        and out[a].kind == OP and out[a].text == "*"
-                        and next_sig(out, a) == c
-                    ):
-                        new_toks = tokenize(_FN_MACROS_0[up])
-                        out = out[:i] + new_toks + out[c + 1 :]
-                        i += len(new_toks)
-                        continue
-                elif up == "ROW":
-                    # row(...) -> anonymous struct. Fields are explicitly
-                    # aliased col1..colN: Spark's struct() would otherwise
-                    # keep source COLUMN names, breaking positional
-                    # struct_extract
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
+                    if len(spans) == 1 and not _trim(out[n + 1 : c]):
+                        spans = []  # f()
                     args = [
-                        render(pass_function_renames(_trim(out[lo:hi]),
-                                                     resolver))
+                        render(pass_function_renames(_trim(out[lo:hi]), resolver))
                         for lo, hi in spans
                     ]
-                    expanded = "struct(" + ", ".join(
-                        f"({a}) AS col{k + 1}" for k, a in enumerate(args)
-                    ) + ")"
-                    new_toks = tokenize(expanded)
-                    out = out[:i] + new_toks + out[c + 1 :]
-                    i += len(new_toks)
-                    continue
-                elif up == "STRUCT_INSERT":
-                    # struct_insert(s, name := v, ...) -> struct(s.*, v AS
-                    # name, ...). Spark's s.* expansion needs a column
-                    # REFERENCE, which the common call shape provides;
-                    # other shapes raise in analysis (loud, never wrong).
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) >= 2:
-                        a_txt = render(pass_function_renames(
-                            _trim(out[spans[0][0] : spans[0][1]]), resolver))
-                        adds = []
-                        ok_ins = True
-                        for lo, hi in spans[1:]:
-                            m_ins = re.match(
-                                r"\s*(\w+)\s*:=\s*(.+?)\s*$",
-                                render(out[lo:hi]),
-                                re.DOTALL,
-                            )
-                            if m_ins:
-                                val = render(pass_function_renames(
-                                    tokenize(m_ins.group(2)), resolver))
-                                adds.append(f"({val}) AS {m_ins.group(1)}")
-                            else:
-                                ok_ins = False
-                                break
-                        if ok_ins:
-                            if a_txt.startswith("named_struct(") and (
-                                a_txt.endswith(")")
-                            ):
-                                # literal struct: splice the new pairs into
-                                # the named_struct call directly
-                                pairs = ", ".join(
-                                    "'{}', {}".format(
-                                        a.split(" AS ")[-1],
-                                        a.rsplit(" AS ", 1)[0],
-                                    )
-                                    for a in adds
-                                )
-                                expanded = a_txt[:-1] + ", " + pairs + ")"
-                            else:
-                                expanded = (
-                                    f"struct({a_txt}.*, {', '.join(adds)})"
-                                )
-                            new_toks = tokenize(expanded)
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                elif up == "GENERATE_SUBSCRIPTS":
-                    # generate_subscripts(list, dim) = unnest of the
-                    # 1-based index range (only 1-D lists exist here, so
-                    # dim collapses). Rewritten IN PLACE to an UNNEST call
-                    # — the cursor stays so the generator branch below
-                    # handles the explosion placement rules.
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        l_txt = render(pass_function_renames(
-                            _trim(out[spans[0][0] : spans[0][1]]), resolver
-                        ))
-                        out[i : c + 1] = tokenize(
-                            f"unnest(sequence(1, size({l_txt})))"
-                        )
-                        continue
-                elif up == "UNNEST":
-                    # arrays -> explode (one generator per select); STRUCT
-                    # unnest expands the fields as columns — inline over a
-                    # one-element array works for ANY struct expression
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    # (named-arg forms — recursive := / max_depth := —
-                    # were already reduced by pass_unnest_named_args)
-                    if len(spans) == 1 and _span_is_struct(
-                        out, spans[0][0], spans[0][1], resolver
-                    ):
-                        a_txt = render(pass_function_renames(
-                            _trim(out[spans[0][0] : spans[0][1]]), resolver))
-                        new_toks = tokenize(f"inline(array({a_txt}))")
-                        out = out[:i] + new_toks + out[c + 1 :]
-                        i += len(new_toks)
-                        continue
-                    out[i] = _ident("explode")
-                elif up in ("LIST_AGGREGATE", "LIST_AGGR", "ARRAY_AGGREGATE",
-                            "ARRAY_AGGR"):
-                    # list_aggregate(l, 'name'[, extra]): apply a named
-                    # aggregate to the list's elements. Null elements are
-                    # skipped (DuckDB aggregate semantics).
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) >= 2:
-                        fsig = _trim(out[spans[1][0] : spans[1][1]])
-                        if len(fsig) == 1 and fsig[0].kind == STRING:
-                            fname = _str_value(fsig[0]).strip().lower()
-                            a_txt = render(pass_function_renames(
-                                _trim(out[spans[0][0] : spans[0][1]]),
-                                resolver,
-                            ))
-                            extra = None
-                            if len(spans) == 3:
-                                extra = render(pass_function_renames(
-                                    _trim(out[spans[2][0] : spans[2][1]]),
-                                    resolver,
-                                ))
-                            expanded = _list_aggregate_sql(
-                                a_txt, fname, extra
-                            )
-                            new_toks = tokenize(expanded)
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            if not expanded.startswith("list_"):
-                                # a list_<fn> fallback must be re-scanned
-                                # by this very pass; final text advances
-                                i += len(new_toks)
-                            continue
-                elif up == "LIST_SORT":
-                    # DuckDB list_sort: default nulls LAST both directions;
-                    # a third literal argument overrides the null order.
-                    # Spark primitives: array_sort = asc nulls last;
-                    # sort_array(x, true) = asc nulls FIRST; sort_array(x,
-                    # false) = desc nulls last; reverse(array_sort(x)) =
-                    # desc nulls first.
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    dir_up = "ASC"
-                    nulls_up = ""
-                    ok = len(spans) == 1
-                    if len(spans) >= 2:
-                        dsig = _trim(out[spans[1][0] : spans[1][1]])
-                        if len(dsig) == 1 and dsig[0].kind == STRING:
-                            dir_up = _str_value(dsig[0]).strip().upper()
-                            ok = True
-                    if len(spans) == 3 and ok:
-                        nsig = _trim(out[spans[2][0] : spans[2][1]])
-                        ok = len(nsig) == 1 and nsig[0].kind == STRING
-                        if ok:
-                            nulls_up = _str_value(nsig[0]).strip().upper()
-                    if ok:
-                        a_txt = render(pass_function_renames(
-                            _trim(out[spans[0][0] : spans[0][1]]), resolver))
-                        desc = dir_up.startswith("DESC")
-                        nulls_first = nulls_up.endswith("FIRST")
-                        if desc and nulls_first:
-                            expanded = f"reverse(array_sort({a_txt}))"
-                        elif desc:
-                            expanded = f"sort_array({a_txt}, false)"
-                        elif nulls_first:
-                            expanded = f"sort_array({a_txt}, true)"
-                        else:
-                            expanded = f"array_sort({a_txt})"
+                    expanded = _expand_call(up, args)
+                    if expanded is not None:
                         new_toks = tokenize(expanded)
                         out = out[:i] + new_toks + out[c + 1 :]
                         i += len(new_toks)
                         continue
-                elif up == "DATE_ADD":
-                    # DuckDB date_add(date, INTERVAL ..) -> TIMESTAMP; with
-                    # an integer second arg both engines mean day-add
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        bsig = _trim(out[spans[1][0] : spans[1][1]])
-                        if bsig and bsig[0].is_kw("INTERVAL"):
-                            a_txt = render(pass_function_renames(
-                                _trim(out[spans[0][0] : spans[0][1]]), resolver))
-                            b_txt = render(bsig)
-                            new_toks = tokenize(
-                                f"(CAST({a_txt} AS TIMESTAMP) + {b_txt})"
-                            )
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                elif up in ("DATE_SUB", "DATESUB"):
-                    # DuckDB 3-arg date_sub('part', a, b): COMPLETE units
-                    # between a and b (signed, truncated toward zero) —
-                    # distinct from date_diff's boundary counting. Spark's
-                    # own 2-arg date_sub(date, days) passes through.
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    psig = (
-                        _trim(out[spans[0][0] : spans[0][1]])
-                        if len(spans) == 3 else []
-                    )
-                    if (
-                        len(spans) == 3
-                        and len(psig) == 1
-                        and psig[0].kind == STRING
-                    ):
-                        part = _str_value(psig[0]).strip().lower().rstrip("s")
-                        a_txt = render(pass_function_renames(
-                            _trim(out[spans[1][0] : spans[1][1]]), resolver))
-                        b_txt = render(pass_function_renames(
-                            _trim(out[spans[2][0] : spans[2][1]]), resolver))
-                        ua = f"unix_micros(CAST({a_txt} AS TIMESTAMP))"
-                        ub = f"unix_micros(CAST({b_txt} AS TIMESTAMP))"
-                        secs = {"second": 1, "sec": 1, "minute": 60,
-                                "min": 60, "hour": 3600, "day": 86400,
-                                "week": 604800}
-                        months = {"month": 1, "mon": 1, "quarter": 3,
-                                  "year": 12, "decade": 120, "century": 1200,
-                                  "millennium": 12000}
-                        if part in secs:
-                            expanded = (
-                                f"CAST(({ub} - {ua}) / "
-                                f"{secs[part] * 1_000_000} AS BIGINT)"
-                            )
-                        elif part in months:
-                            expanded = (
-                                f"CAST(months_between(CAST({b_txt} AS "
-                                f"TIMESTAMP), CAST({a_txt} AS TIMESTAMP)) "
-                                f"/ {months[part]} AS BIGINT)"
-                            )
-                        else:
-                            raise ValueError(
-                                f"date_sub: unsupported part {part!r}"
-                            )
-                        new_toks = tokenize(expanded)
-                        out = out[:i] + new_toks + out[c + 1 :]
-                        i += len(new_toks)
-                        continue
-                elif up in _FN_MACROS_N:
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    tmpl = _FN_MACROS_N[up].get(len(spans))
-                    if tmpl is not None:
-                        args = [
-                            render(pass_function_renames(_trim(out[lo:hi]), resolver))
-                            for lo, hi in spans
-                        ]
-                        if callable(tmpl):
-                            # conditional template: None = leave the call
-                            # in place (already Spark-compatible)
-                            expanded = tmpl(args)
-                        else:
-                            expanded = re.sub(
-                                r"\{(\d)\}",
-                                lambda m: args[int(m.group(1))],
-                                tmpl,
-                            )
-                        if expanded is not None:
-                            new_toks = tokenize(expanded)
-                            out = out[:i] + new_toks + out[c + 1 :]
-                            i += len(new_toks)
-                            continue
-                    if up in _SIMPLE_RENAMES:
-                        # arity not macro'd (e.g. 2-arg arg_max): fall back
-                        # to the plain name mapping
-                        out[i] = _ident(_SIMPLE_RENAMES[up])
-                elif up in _FN_MACROS_1:
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 1:
-                        a_txt = render(_trim(out[spans[0][0] : spans[0][1]]))
-                        expanded = _FN_MACROS_1[up].replace("{a}", a_txt)
-                        out = out[:i] + tokenize(expanded) + out[c + 1 :]
-                        continue
-                elif up in _FN_MACROS:
-                    c = match_forward(out, n, "(", ")")
-                    spans = split_args(out, n + 1, c)
-                    if len(spans) == 2:
-                        a_txt = render(_trim(out[spans[0][0] : spans[0][1]]))
-                        b_txt = render(_trim(out[spans[1][0] : spans[1][1]]))
-                        expanded = _FN_MACROS[up].replace("{a}", a_txt).replace("{b}", b_txt)
-                        out = out[:i] + tokenize(expanded) + out[c + 1 :]
-                        continue
-                elif up in _SIMPLE_RENAMES:
-                    out[i] = _ident(_SIMPLE_RENAMES[up])
         i += 1
     return out
 

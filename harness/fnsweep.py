@@ -45,6 +45,8 @@ EXPRS: list[tuple[str, str]] = [
     ("str", "regexp_matches(n_name, 'A.G')"),
     ("str", "regexp_split_to_array(n_name, '[AEIOU]+')"),
     ("str", "string_split_regex(n_name, '[AEIOU]+')"),
+    ("str", "string_split(n_name, substring(n_name, 2, 1))"),
+    ("str", "string_split(n_name, NULL)"),
     ("str", "to_hex(255)"),
     ("str", "from_hex('ff')"),
     ("str", "unicode(n_name)"),
@@ -384,7 +386,8 @@ AGG_EXPRS: list[tuple[str, str]] = [
     ("agg", "arg_max(o_orderkey, o_totalprice)"),
     ("agg", "arg_min(o_orderkey, o_totalprice)"),
     ("agg", "bit_xor(o_custkey)"),
-    ("agg", "string_agg(DISTINCT o_orderstatus, '|')"),
+    # DISTINCT order is unspecified in both engines: compare the sorted parts
+    ("agg", "list_sort(string_split(string_agg(DISTINCT o_orderstatus, '|'), '|'))"),
     ("agg", "list_sort(list(DISTINCT o_orderstatus))"),
     ("agg", "max(o_orderdate)"),
     ("agg", "count(*) FILTER (o_totalprice > 200000)"),
@@ -430,7 +433,6 @@ KNOWN_DIFFS: dict[str, str] = {
     "hash('abc')": "engine-specific hash function (both deterministic within their engine)",
     "approx_count_distinct(o_custkey)": "approximate sketch; estimates differ by design",
     "approx_quantile(o_totalprice, 0.5)": "approximate sketch; estimates differ by design",
-    "string_agg(DISTINCT o_orderstatus, '|')": "DISTINCT order unspecified in both engines",
     "list_zip([1,2],[3,4])": "zip struct field names differ (list_1/list_2 vs 0/1); values equal",
     "list_zip([1,2,3], ['a','b'])": "zip struct field names differ; values equal",
 }

@@ -311,11 +311,9 @@ def test_list_prepend_arg_swap():
 def test_list_unique_is_count():
     # count of distinct NON-NULL elements (round-4b sweep fix)
     out = rewrite_sql("SELECT list_unique(a) FROM t")
-    # filter lambda body wears the DuckDB int-truthiness BOOLEAN cast
-    assert (
-        "size(filter(array_distinct(a), x ->"
-        " CAST((x IS NOT NULL) AS BOOLEAN)))" in out
-    )
+    # the template is final Spark text: its own filter() is not
+    # rewritten again as DuckDB's list_filter
+    assert "size(filter(array_distinct(a), x -> x IS NOT NULL))" in out
 
 
 def test_lambda_arrow_not_json_mangled():
@@ -1822,3 +1820,45 @@ def test_round_double_template_caseless_and_null(loaded_engine):
         " FROM orders WHERE o_orderkey < 0"
     ).collect()[0]
     assert row["a"] is None and row["b"] is None
+
+
+def test_array_length_over_derived_list_matches_duckdb(engine):
+    """DuckDB's array_length takes only lists, so it is size() whatever
+    the argument's shape — a derived-table or CTE list column included,
+    which the resolver cannot type."""
+    import duckdb
+
+    for sql in (
+        "SELECT array_length(l) AS n FROM (SELECT [1, 2] AS l) t",
+        "SELECT array_length(l, 1) AS n FROM (SELECT [1, 2] AS l) t",
+        "WITH c AS (SELECT [1, 2, 3] AS l) SELECT array_length(l) AS n FROM c",
+    ):
+        want = duckdb.sql(sql).fetchall()
+        got = [tuple(r) for r in engine.execute(sql).collect()]
+        assert got == want, sql
+
+
+def test_function_rewrites_have_one_entry_per_name():
+    """_FN_REWRITES is one dict literal: no name is listed twice, and no
+    entry is assigned outside it."""
+    import ast
+    import inspect
+
+    from duckdb_nsql_spark.frontend import rewrites
+
+    tree = ast.parse(inspect.getsource(rewrites))
+    literals = []
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if isinstance(t, ast.Subscript):
+                    t = t.value
+                    assert not (isinstance(t, ast.Name) and t.id == "_FN_REWRITES")
+                elif isinstance(t, ast.Name) and t.id == "_FN_REWRITES":
+                    literals.append(node.value)
+    assert len(literals) == 1 and isinstance(literals[0], ast.Dict)
+    names = [k.value for k in literals[0].keys]
+    assert len(names) == len(set(names)), sorted(
+        n for n in set(names) if names.count(n) > 1
+    )
